@@ -1,11 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver bench: times every SparkEntry query at the given SF, prints one
   * JSON line. A short warmup (scan + aggregate) runs first so the first
   * timed query doesn't absorb JVM/codegen/session initialization.
+  * With query names as arguments it runs [[focus]] on them instead.
   *
-  * Each query runs [[Runs]] times under the noop action (and
+  * Each query runs [[Harness.Runs]] times under the noop action (and
   * [[CountRuns]] times under count — see TIMED ACTIONS). The FINAL
   * stdout line is a minimal JSON object whose `queries` map carries the
   * MEDIAN (p50) per-query seconds — the round-comparable statistic —
@@ -54,23 +55,14 @@ import org.apache.spark.sql.SparkSession
   * Isolation: every cached/checkpointed block is released between runs
   * ([[graft.ops.Materialize.releaseAll]]) — the LSH-family queries
   * materialize shingle/band tables that would otherwise accumulate
-  * across 98 queries × [[Runs]] runs until storage eviction + GC churn
+  * across 98 queries × [[Harness.Runs]] runs until storage eviction + GC churn
   * pollute *neighboring* queries' timings (the round-2 dd2 23.5 s /
   * tx4 7 s outliers). */
 object Bench {
-  /** 5, not 3: a 3-run median is one slow run away from being dragged
-    * to the middle value under machine load — the round-4 j1/a10
-    * false-regression mechanism (adjudicated with n=8 in BenchFocus).
-    * A 5-run median tolerates two outliers per query. Env-overridable
-    * (SPARK_GRAFT_RUNS) for the sf1 throughput tier, where a 5-run
-    * sweep over 10× data would run for hours — the sf1 artifact trades
-    * median robustness for feasibility and says so in its run count. */
-  val Runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(5)
-
   /** The count action is the round-trend statistic, not the headline;
     * 3 runs (one-outlier tolerance) keeps the dual-action sweep's wall
     * time inside the driver's budget. Env-overridable
-    * (SPARK_GRAFT_COUNT_RUNS), same rationale as [[Runs]]. */
+    * (SPARK_GRAFT_COUNT_RUNS), same rationale as [[Harness.Runs]]. */
   val CountRuns = sys.env.get("SPARK_GRAFT_COUNT_RUNS").map(_.toInt).getOrElse(3)
 
   /** Calibration checkpoint cadence, in queries. 10 bounds the blind
@@ -119,7 +111,7 @@ object Bench {
     * episodes. Tier bound: the cap assumes the tier's genuine idle
     * floor is under ~2× static (true at sf0.1/sf1, the full-Bench
     * tiers); a tier whose idle floor exceeds the cap (sf10-class)
-    * would mass-flag — that tier is measured via BenchFocus, which
+    * would mass-flag — that tier is measured via [[focus]], which
     * has no suspect gate, by design. */
   def envelopeFor(cpus: Int, warmFloorSec: Double): Double =
     math.min(math.max(envelopeFor(cpus), 2.0 * warmFloorSec),
@@ -166,22 +158,69 @@ object Bench {
   val LoadFlagMinDeltaSec = 0.5
 
   /** Pure flag rule (spec-tested): flagged iff the sweep started
-    * loaded AND the median sits far above the run minimum. */
-  def loadFlagged(loadStart: Double, p50: Double, minRun: Double): Boolean =
-    loadStart >= 1.0 && p50 >= LoadFlagRatio * minRun &&
-      p50 - minRun >= LoadFlagMinDeltaSec
+    * loaded AND the median sits far above the run minimum. The rule
+    * reads the millisecond-rounded p50 and minimum the detail file
+    * records, so a query whose recorded p50 is exactly 2× its recorded
+    * minimum flags (r13's tx28: 1.184 = 2 × 0.592, missed while the
+    * rule compared unrounded seconds). */
+  def loadFlagged(loadStart: Double, p50: Double, minRun: Double): Boolean = {
+    def millis(x: Double): Long = math.round(Harness.fmt(x, 3).toDouble * 1000)
+    val (p, m) = (millis(p50), millis(minRun))
+    loadStart >= 1.0 && p >= LoadFlagRatio * m &&
+      p - m >= LoadFlagMinDeltaSec * 1000
+  }
 
+  /** `noop` (the default, and under "both") times the noop write of
+    * TIMED ACTIONS; `count` times count(). */
+  private def timedAction(df: => DataFrame, action: String): Unit =
+    if (action == "count") df.count()
+    else df.write.mode("overwrite").format("noop").save()
+
+  /** Focused re-measurement of named queries: each runs `runs` times
+    * under one action and prints one JSON line with every run plus
+    * p50/min/max — the n≥5 variance evidence a sweep median can't give
+    * when one query's round-over-round delta needs adjudicating (noise
+    * vs regression). No calibration or suspect gate, by design: it is
+    * the tool for tiers (sf10) whose idle floor would mass-flag. A
+    * failing query fails the focus run. */
+  def focus(spark: SparkSession, sfDir: String, names: Seq[String],
+      runs: Int, action: String)(emit: String => Unit): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val act = if (action == "count") "count" else "noop"
+    Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val t = Harness.timed(spark, runs)(
+        timedAction(fn(spark, sfDir), act)).get
+      emit(s"""{"query":"${esc(name)}","action":"$act",${t.fields}}""")
+    }
+  }
+
+  private val NotRun = Harness.Timed[Unit](Seq.empty, None, None)
+
+  private def esc(s: String): String = graft.functions.Functions.jsonEscape(s)
+
+  /** No args: the driver sweep over every query. `name…`: [[focus]] on
+    * those queries. */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // "both" (default): one artifact carries the noop headline AND the
     // count trend. "noop"/"count" restrict to one action (debug use).
     val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "both")
     require(Set("both", "noop", "count")(action),
       s"SPARK_GRAFT_BENCH_ACTION must be both|noop|count, got $action")
+    val spark = Harness.session(Harness.Cpus)
+    if (args.isEmpty) sweep(spark, Harness.SfDir, Harness.Cpus.toInt, action)
+    else {
+      focus(spark, Harness.SfDir, args.toSeq, Harness.Runs, action)(println)
+      spark.stop()
+    }
+  }
+
+  private def sweep(spark: SparkSession, sfDir: String, cpus: Int,
+      action: String): Unit = {
     val doNoop = action != "count"
     val doCount = action != "noop"
-    val spark = Harness.session(cpus)
     val loadStart = loadAvg()
     // warmup: exercise scan, shuffle, and codegen paths enough times to
     // settle JIT + page cache INDEPENDENT of SPARK_GRAFT_RUNS — a 2-run
@@ -195,12 +234,11 @@ object Bench {
     // the sustained-load case the suspect gate exists to catch, so
     // under a loaded start the static envelope applies and every
     // checkpoint flags as before.
-    def calibQuery(): Unit =
+    def calibRuns(runs: Int): Harness.Timed[Unit] = Harness.timed(spark, runs) {
       Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
-    def timeOne(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    val warmFloor = (1 to 5).map(_ => timeOne(calibQuery())).min
+      ()
+    }.get
+    val warmFloor = calibRuns(5).min
     // gate on the PRE-warmup loadavg only: a post-warmup re-sample
     // cannot distinguish a co-tenant from the bench's own just-finished
     // 32-thread warmup burst (the same reason checkpoint loadavg is
@@ -211,15 +249,9 @@ object Bench {
     // 1-minute average hasn't surfaced) is bounded by the 4× cap inside
     // envelopeFor instead.
     val envelope =
-      if (loadStart >= 0 && loadStart < 1.0) envelopeFor(cpus.toInt, warmFloor)
-      else envelopeFor(cpus.toInt)
+      if (loadStart >= 0 && loadStart < 1.0) envelopeFor(cpus, warmFloor)
+      else envelopeFor(cpus)
     Tables.events(spark, sfDir).limit(10).collect()
-
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    def calibrate(runs: Int): Double =
-      median((1 to runs).map(_ => timeOne(calibQuery())))
-
-    def esc(s: String): String = graft.functions.Functions.jsonEscape(s)
 
     // calibration series: (queryIndex the checkpoint precedes, calib
     // MIN-of-3 sec, loadavg at the checkpoint). Min, not median: the
@@ -234,67 +266,48 @@ object Bench {
     val calibSeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Double)]
     def checkpoint(idx: Int): Unit = {
       System.gc()
-      calibSeries += ((idx, (1 to 3).map(_ => timeOne(calibQuery())).min,
-        loadAvg()))
+      calibSeries += ((idx, calibRuns(3).min, loadAvg()))
     }
 
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    val calibPre = calibrate(Runs) // endpoint medians keep r5/r6 continuity
+    val calibPre = calibRuns(Harness.Runs).p50 // endpoint medians keep r5/r6 continuity
     checkpoint(0) // after calibPre: its 5 runs settle JIT first
 
     var errors = List.empty[String]
-    // per query: (name, countP50, noopCold, noopP50, noopMax, loadavg)
+    // per query: (name, countP50, noopCold, noopP50, noopMax, loadavg, noopMin)
     val timings = sorted.zipWithIndex.flatMap { case ((name, fn), qi) =>
       val qLoad = loadAvg()
-      var err: Option[String] = None
-      def sweep(runs: Int, run: () => Unit): Seq[Double] = {
-        val ts = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var i = 0
-        while (i < runs && err.isEmpty) { // don't retry a failed query
-          try ts += timeOne(run())
-          catch { case e: Throwable =>
-            err = Some(s"${e.getClass.getSimpleName}: " +
-              Option(e.getMessage).getOrElse("").take(200))
-          }
-          // outside the timed region: drop this run's materialized
-          // blocks so no query's residency leaks into another's timing
-          graft.ops.Materialize.releaseAll(spark)
-          i += 1
-        }
-        ts.toSeq
-      }
       // noop FIRST: queries_cold keeps its r1–r6 meaning (first-ever
       // run of the query this JVM) and the headline medians see the
       // same warmup state as r6's noop-only sweeps. The count sweep
       // runs warmed — count medians were warm-dominated under the old
       // 5-run count-only sweeps too, so the trend stays comparable.
-      // noop write: forces EVERY output column and the final sort
-      // (see class doc) — the timed plan is the consumer's plan
-      val noopTs = if (doNoop) sweep(Runs, () =>
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save())
-      else Seq.empty
-      val countTs = if (doCount && err.isEmpty) sweep(CountRuns, () => {
-        fn(spark, sfDir).count(); () }) else Seq.empty
+      // A failed run ends its query: no retry, no count sweep.
+      val noop = if (doNoop)
+        Harness.timed(spark, Harness.Runs)(timedAction(fn(spark, sfDir), "noop"))
+      else NotRun
+      val count = if (doCount && noop.failure.isEmpty)
+        Harness.timed(spark, CountRuns)(timedAction(fn(spark, sfDir), "count"))
+      else NotRun
       if ((qi + 1) % CalibEvery == 0 && qi + 1 < sorted.size)
         checkpoint(qi + 1)
-      err match {
-        case Some(msg) =>
+      noop.failure.orElse(count.failure) match {
+        case Some(e) =>
+          val msg = s"${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).getOrElse("").take(200)
           System.err.println(s"[bench] FAILED $name: $msg")
           errors ::= s"$name: $msg"
           None
         case None =>
-          val cp50 = if (countTs.nonEmpty) Some(median(countTs)) else None
-          val (cold, p50, mx, mn) =
-            if (noopTs.nonEmpty)
-              (noopTs.head, median(noopTs), noopTs.max, noopTs.min)
-            else (countTs.head, median(countTs), countTs.max, countTs.min)
-          Some((name, cp50, cold, p50, mx, qLoad, mn))
+          val cp50 = if (count.secs.nonEmpty) Some(count.p50) else None
+          val head = if (doNoop) noop else count
+          Some((name, cp50, head.secs.head, head.p50, head.max, qLoad, head.min))
       }
     }
     // the run count the p50/cold/max statistics actually came from:
     // the noop sweep's Runs normally, CountRuns under action=count
-    val headlineRuns = if (doNoop) Runs else CountRuns
-    val calibPost = calibrate(Runs)
+    val headlineRuns = if (doNoop) Harness.Runs else CountRuns
+    val calibPost = calibRuns(Harness.Runs).p50
     checkpoint(sorted.size)
     val loadEnd = loadAvg()
     val calib = math.min(calibPre, calibPost)
@@ -314,10 +327,7 @@ object Bench {
       System.err.println(s"[bench] ${suspects.size} query medians recorded " +
         s"outside the idle envelope: ${suspects.mkString(", ")}")
 
-    // Locale.ROOT: f"%.3f" under a comma-decimal default locale would
-    // emit 26,123 and corrupt the machine-parsed JSON line
-    def fmt(x: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(x))
+    import Harness.fmt
     type T = (String, Option[Double], Double, Double, Double, Double, Double)
     def obj(pick: T => Double, dec: Int): String =
       timings.map(t => s""""${esc(t._1)}":${fmt(pick(t), dec)}""").mkString("{", ",", "}")

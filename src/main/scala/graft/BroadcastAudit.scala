@@ -18,11 +18,11 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   * in NOTES. AQE runtime conversions to broadcast are out of scope:
   * those are evidence-based (actual sizes), not estimate-based.
   *
-  *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.BroadcastAudit [sfDir]'
+  *   sbt 'runMain graft.BroadcastAudit [sfDir]'
   *
   * Building a frame may execute Materialize seams (eager
   * checkpoints), so the audit releases each query's lifecycle like
-  * BenchFocus does.
+  * every measurement loop does.
   */
 object BroadcastAudit {
   val FactTables = Seq("documents", "embeddings", "lineitem", "orders",
@@ -83,8 +83,8 @@ object BroadcastAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val sfDir = args.lift(0).getOrElse(Harness.SfDir)
+    val spark = Harness.session(Harness.Cpus)
     var flagged = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
   * files — the plan-shape evidence the optimization rounds commit
   * under `plans/r<N>/`. Usage:
   *
-  *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.ExplainDump <sfDir> <outDir> <suffix> <query> [query...]'
+  *   sbt 'runMain graft.ExplainDump <sfDir> <outDir> <suffix> <query> [query...]'
   *
   * One file per query: `<outDir>/<query>_<suffix>.txt`. The formatted
   * explain is the STATIC plan (AdaptiveSparkPlan isFinalPlan=false);
@@ -28,7 +28,7 @@ object ExplainDump {
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Harness.session(Harness.Cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -26,11 +26,10 @@ import org.apache.spark.sql.functions._
 object GenScale {
 
   def main(args: Array[String]): Unit = {
-    val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
+    val src = args.lift(0).getOrElse(Harness.SfDir)
     val dst = args.lift(1).getOrElse("target/sf1")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = Harness.session(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Harness.session(Harness.Cpus)
 
     def write(df: DataFrame, name: String): Unit = {
       df.write.mode("overwrite").parquet(s"$dst/$name.parquet")

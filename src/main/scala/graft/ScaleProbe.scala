@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity probe: replicates the documents corpus N× (each
@@ -9,8 +9,12 @@ import org.apache.spark.sql.functions._
   * and times the most shuffle-intensive pipelines at each N.
   * Near-linear wall-time growth is the measurable form of the "no
   * quadratic blowup, keyed shuffles only" claims the operator
-  * scaladocs make. Run:
+  * scaladocs make. The probe is a table of named [[cases]], each timed
+  * by the shared [[Harness.timedRuns]] loop; integer args are factors,
+  * the others select cases by name prefix. Run:
   *   SPARK_GRAFT_SF_DIR=... sbt 'runMain graft.ScaleProbe 1 4 10'
+  *   SPARK_GRAFT_RUNS=1 sbt 'runMain graft.ScaleProbe 1 10 40 jacboiler distcc'
+  *   SPARK_GRAFT_RUNS=3 sbt 'runMain graft.ScaleProbe 1 storage'
   *
   * The embeddings corpus replicates by a per-copy deterministic ±1
   * SIGN-FLIP diagonal (see [[replicatedEmb]]: within-copy geometry
@@ -53,161 +57,137 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val factors = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 4, 10)
-    val spark = Harness.session(cpus)
+  /** One probe case. `prep(n)` builds the case's input at factor `n`
+    * outside the timed region and returns the timed action, which
+    * yields the row count (or aggregate) it produced. An unscaled case
+    * reads the SF dir as it is and runs at factor 1 only. */
+  final case class Case(name: String, prep: Int => () => Long,
+      scaled: Boolean = true)
 
-    def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val rows = f
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
+  /** Durable-lifecycle directory of the `storage_*` cases. */
+  val StorageDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_STORAGE_DIR", "/tmp/graft_storage_bench")
 
-    factors.foreach { n =>
-      val docs = replicated(spark, sfDir, n).localCheckpoint(true)
-      val nDocs = docs.count()
-      val (tLsh, pairs) = time {
-        graft.ops.Dedup.minhashLshPairs(docs, "doc_id", "text", 0.1).count()
+  private def wipe(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(wipe)
+    f.delete()
+  }
+
+  /** The case table, in run order. */
+  def cases(spark: SparkSession, sfDir: String): Seq[Case] = {
+    import graft.ops.{Dedup, Materialize, Similarity, TextStats}
+    def on[P](input: Int => P)(action: P => Long): Int => () => Long =
+      n => { val p = input(n); () => action(p) }
+    def docs(n: Int) = replicated(spark, sfDir, n).localCheckpoint(true)
+    def emb(n: Int) = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
+    def events(n: Int) = replicatedEvents(spark, sfDir, n).localCheckpoint(true)
+    def orders(n: Int) = replicatedOrders(spark, sfDir, n).localCheckpoint(true)
+    def first(df: DataFrame, aggs: Column*): Long =
+      df.agg(aggs.head, aggs.tail: _*).collect()(0).getLong(0)
+    def lshEdges(d: DataFrame) = Dedup.minhashLshPairs(d, "doc_id", "text", 0.1)
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
+    // StorageBench's rows: the cost of the Materialize.Storage lifecycle
+    // for the LSH family — the durable-parquet-intermediates posture the
+    // 100-TB scaladocs claim — against the Local checkpoint lifecycle
+    // the driver bench runs, on the driver queries themselves. dd7
+    // additionally switches algorithm under Storage (the distributed
+    // pointer-jumping loop; Local uses the driver union-find below the
+    // edge threshold), so its delta is lifecycle + algorithm; dd7loop
+    // is the apples-to-apples LIFECYCLE row: the distributed loop in
+    // BOTH modes (threshold 0 disables the union-find switch), so its
+    // delta is the durable-posture premium alone
+    def lifecycle(name: String, q: Materialize.Mode => DataFrame): Seq[Case] =
+      Seq("local" -> Materialize.Local,
+          "storage" -> Materialize.Storage(StorageDir)).map { case (label, m) =>
+        Case(s"storage_${name}_$label",
+          _ => { wipe(new java.io.File(StorageDir)); () => q(m).count() },
+          scaled = false)
       }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs2 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tCluster, clusters) = time {
-        val pairsDf = graft.ops.Dedup
-          .minhashLshPairs(docs2, "doc_id", "text", 0.1)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        graft.ops.Dedup.labelPropagation(pairsDf).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs3 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tPack, packed) = time {
-        val toks = docs3.select(col("doc_id"),
-          size(graft.ops.TextStats.words(col("text"))).cast("long").as("n_tokens"))
+    Seq(
+      Case("lsh", on(docs)(d => Dedup.minhashLshPairs(d, "doc_id", "text", 0.1).count())),
+      Case("cluster", on(docs)(d => Dedup.labelPropagation(lshEdges(d)).count())),
+      Case("pack", on(docs) { d =>
+        val toks = d.select(col("doc_id"),
+          size(TextStats.words(col("text"))).cast("long").as("n_tokens"))
         graft.ops.PrefixSum.exclusive(
           toks, "doc_id", "n_tokens", spark.sparkContext.defaultParallelism)
           .count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs4 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSim, simPairs) = time {
-        graft.ops.Dedup.simhashPairsOf(docs4).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val docs5 = replicated(spark, sfDir, n).localCheckpoint(true)
+      }),
+      Case("simhash", on(docs)(d => Dedup.simhashPairsOf(d).count())),
       // a bare count() lets column pruning DROP the reassembly (the
       // collect_list/array_sort kept_text is the expensive half) — the
       // probe aggregates over kept_text so the full operator runs
-      val (tPrune, pruned) = time {
-        graft.ops.TextStats.dfPruneOf(docs5)
-          .agg(count(lit(1)).as("n"),
-            sum(length(col("kept_text"))).as("chars"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("dfprune", on(docs)(d => first(TextStats.dfPruneOf(d),
+        count(lit(1)).as("n"), sum(length(col("kept_text"))).as("chars")))),
       // the eval set grows with n here (salted copies shingle-disjoint),
       // so this measures the corpus-side probe stream against a bitmap
       // whose fill also grows — the conservative direction
-      val docs6 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tBloom, bloomRows) = time {
-        graft.ops.Sketch.bloomDecontaminateOf(docs6)
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_bloom_hits")).as("hits"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("bloom", on(docs)(d => first(graft.ops.Sketch.bloomDecontaminateOf(d),
+        count(lit(1)).as("n"), sum(col("n_bloom_hits")).as("hits")))),
       // exact Jaccard: salted copies are shingle-disjoint, so the
       // inverted index's Σ df² candidate volume grows linearly in n —
       // the curve that evidences the all-pairs → inverted-index rewrite
-      val docs7 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tJac, jacPairs) = time {
-        graft.ops.Dedup.ngramJaccardPairsOf(docs7).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val emb = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val nVecs = emb.count()
-      val (tIvf, ivfRows) = time {
-        graft.ops.Similarity.ivfTopKOf(emb,
-          trainCap = graft.ops.Similarity.IvfTrainCap).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      val emb2 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tKnn, knnEdges) = time {
-        graft.ops.Similarity.knnGraphOf(emb2).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("jaccard", on(docs)(d => Dedup.ngramJaccardPairsOf(d).count())),
+      Case("ivf", on(emb)(e =>
+        Similarity.ivfTopKOf(e, trainCap = Similarity.IvfTrainCap).count())),
+      Case("knn", on(emb)(e => Similarity.knnGraphOf(e).count())),
       // dd5: banded sign-LSH near-dup pairs; the derived geometry
       // (bands × per-band planes) self-sizes from the corpus count —
-      // logged per scale so the curve carries its own explanation
-      // (per-band buckets grow as 2^planes ∝ n, holding Σ bucket²
-      // candidate volume ~linear). Both this count and the builder's
-      // internal one scan the LOCALCHECKPOINTED blocks (emb3), not
-      // the replication transform — cheap, and deliberately uncached
+      // logged per factor on the header line so the curve carries its
+      // own explanation (per-band buckets grow as 2^planes ∝ n, holding
+      // Σ bucket² candidate volume ~linear). The builder's internal
+      // count scans the LOCALCHECKPOINTED blocks, not the replication
+      // transform — cheap, and deliberately uncached
       // (Materialize.cachedCount skips LogicalRDD-rooted plans)
-      val emb3 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val dd5Planes = graft.ops.Dedup.embBandPlanesFor(emb3.count())
-      val (tNd, ndPairs) = time {
-        graft.ops.Dedup.embeddingNearDupOf(emb3).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("neardup", on(emb)(e => Dedup.embeddingNearDupOf(e).count())),
       // j4: anti-join MERGE on replicated orders — both sides of the
       // upsert grow linearly; the join is keyed (no broadcast of the
       // growing side at scale is the claim under test)
-      val ord = replicatedOrders(spark, sfDir, n).localCheckpoint(true)
-      val (tMerge, mergedRows) = time {
-        graft.merge.Upsert.mergeOrdersOf(ord).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("merge", on(orders)(o => graft.merge.Upsert.mergeOrdersOf(o).count())),
       // j6b: bucketed as-of with the key domain held at 150 (the
       // driver query's shape), so per-(key, bucket) groups grow
       // linearly in n — the hot-key direction the bucketed two-phase
       // carry exists to bound; the aggregate consumes the carried
       // payload so column pruning can't drop phase 2
-      val ev6 = replicatedEvents(spark, sfDir, n).localCheckpoint(true)
-      val ord6 = replicatedOrders(spark, sfDir, n).localCheckpoint(true)
-      val (tAsof, asofRows) = time {
+      Case("asof", on(n => (events(n), orders(n))) { case (ev6, ord6) =>
         val ev = ev6.select((col("user_id") % 150).as("k"),
           date_trunc("second", col("ts")).as("t"), col("event_id"))
         val o = ord6
           .select((col("o_custkey") % 150).as("k"),
             col("o_orderdate").as("t"), col("o_orderkey"))
           .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
-        graft.ops.AsOf.asofLeftBucketed(ev, o, "o_orderkey")(
-            t => floor(unix_timestamp(t) / 86400L).cast("long"))
-          .agg(count(lit(1)).as("n"), sum(col("asof_o_orderkey")).as("s"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+        first(graft.ops.AsOf.asofLeftBucketed(ev, o, "o_orderkey")(
+            t => floor(unix_timestamp(t) / 86400L).cast("long")),
+          count(lit(1)).as("n"), sum(col("asof_o_orderkey")).as("s"))
+      }),
       // dd10: salted copies share zero grams, so both the Σ df²
       // candidate volume on the anchor hash and the true span set grow
       // linearly in n — superlinear time here would mean the anchor df
       // head is quadratic, the failure the df-cap mitigation would fix
-      val docs8 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSpan, spanRows) = time {
-        graft.ops.Dedup.duplicateSpansOf(docs8).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("span", on(docs)(d => Dedup.duplicateSpansOf(d).count())),
       // tx18: the first-occurrence window partitions by segment text;
       // salted copies make segments copy-disjoint, so partition count
       // grows ∝ n with bounded partition size — the aggregate consumes
       // kept_text so pruning can't drop the reassembly half
-      val docs9 = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSeg, segKept) = time {
-        graft.ops.TextStats.segmentDedupOf(docs9)
-          .agg(sum(col("n_kept")).as("k"),
-            sum(length(col("kept_text"))).as("chars"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // g1: kNN build (the sim4 probe's cost) + 5 fixed integer
+      Case("segdedup", on(docs)(d => first(TextStats.segmentDedupOf(d),
+        sum(col("n_kept")).as("k"), sum(length(col("kept_text"))).as("chars")))),
+      // dd13: dd10's span table + a per-doc interval merge — the merge
+      // window partitions by doc_id (bounded groups), so the curve
+      // should track dd10's span curve; the aggregate consumes
+      // dup_tokens so the merge half can't be pruned away
+      Case("coverage", on(docs)(d => first(Dedup.duplicateCoverageOf(d),
+        count(lit(1)).as("n"), sum(col("dup_tokens")).as("d")))),
+      // tx22: the (source, shingle) distinct grows ∝ n; after the
+      // distinct the per-hash fanout is bounded by the FIXED source
+      // count, so candidate rows also grow ∝ n — the pair matrix
+      // itself stays sources², constant
+      Case("srcoverlap", on(docs)(d => first(TextStats.sourceOverlapOf(d),
+        count(lit(1)).as("n"), sum(col("shared")).as("sh")))),
+      // g1: kNN build (the knn case's cost) + 5 fixed integer
       // rounds, each a keyed join + keyed agg over node-sized tables —
-      // the incremental cost over sim4 should stay a small constant
+      // the incremental cost over knn should stay a small constant
       // factor at every scale
-      val emb4 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tPr, prNodes) = time {
-        graft.ops.Similarity.knnPagerankOf(emb4).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("pagerank", on(emb)(e => Similarity.knnPagerankOf(e).count())),
       // g2: kNN build + the compact-forward wedge join. Degree-ordered
       // orientation bounds every out-degree by O(sqrt(m)), so wedge
       // volume tracks edge count; sign-flipped copies keep kNN edges
@@ -215,130 +195,79 @@ object ScaleProbe {
       // superlinear time curve here would mean the orientation failed
       // to tame a hub. The aggregate consumes the triangle column so
       // pruning can't drop the wedge join.
-      val emb5 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tTri, triSum) = time {
-        graft.ops.Graph.knnTrianglesOf(emb5)
-          .agg(sum(col("triangles")).as("t")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("tri", on(emb)(e => first(graft.ops.Graph.knnTrianglesOf(e),
+        sum(col("triangles")).as("t")))),
       // w6: ONE shuffle on user_id with the user domain fixed, so
       // per-user sorted lists grow ∝ n — the hot-key direction for the
       // sort_array fold; time should stay ~linear (sort is n log n in
       // the per-user list, lists are replication-bounded)
-      val ev7 = replicatedEvents(spark, sfDir, n).localCheckpoint(true)
-      val (tFun, funUsers) = time {
-        graft.model.Analytics.funnelOf(ev7)
-          .agg(sum(col("users")).as("u")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // dd13: dd10's span table + a per-doc interval merge — the merge
-      // window partitions by doc_id (bounded groups), so the curve
-      // should track dd10's span curve; the aggregate consumes
-      // dup_tokens so the merge half can't be pruned away
-      val docsA = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tCov, covDocs) = time {
-        graft.ops.Dedup.duplicateCoverageOf(docsA)
-          .agg(count(lit(1)).as("n"), sum(col("dup_tokens")).as("d"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
-      // tx22: the (source, shingle) distinct grows ∝ n; after the
-      // distinct the per-hash fanout is bounded by the FIXED source
-      // count, so candidate rows also grow ∝ n — the pair matrix
-      // itself stays sources², constant
-      val docsB = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tSrc, srcPairs) = time {
-        graft.ops.TextStats.sourceOverlapOf(docsB)
-          .agg(count(lit(1)).as("n"), sum(col("shared")).as("sh"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("funnel", on(events)(ev => first(graft.model.Analytics.funnelOf(ev),
+        sum(col("users")).as("u")))),
       // tx25: salted copies are shingle-disjoint, so the
       // first-occurrence aggregation's key space grows ∝ n with
       // per-shingle df unchanged; output rows are exactly the docs —
       // the aggregate consumes n_novel so the join-back can't prune
-      val docsC = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tNov, novSum) = time {
-        graft.ops.TextStats.ngramNoveltyOf(docsC)
-          .agg(count(lit(1)).as("n"), sum(col("n_novel")).as("nv"))
-          .collect()(0).getLong(1)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("novelty", on(docs)(d => first(TextStats.ngramNoveltyOf(d),
+        sum(col("n_novel")).as("nv"), count(lit(1)).as("n")))),
       // w7: user domain fixed → per-user event lists grow ∝ n (the
       // hot-key direction for the lead window); the transition matrix
       // stays O(types²) so only the window stage scales
-      val ev8 = replicatedEvents(spark, sfDir, n).localCheckpoint(true)
-      val (tMkv, mkvSum) = time {
-        graft.model.Analytics.markovTransitionsOf(ev8)
-          .agg(sum(col("n")).as("transitions"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("markov", on(events)(ev => first(
+        graft.model.Analytics.markovTransitionsOf(ev),
+        sum(col("n")).as("transitions")))),
       // q21a: fresh orderkeys per copy keep each order's supplier set
       // intact, so returned rows, the distinct (order, supplier) table
       // and the semi/anti probe volumes all grow ∝ n with per-orderkey
       // fanout unchanged — superlinear time would mean the <> conjunct
       // degraded the keyed joins
-      val li = replicatedLineitem(spark, sfDir, n).localCheckpoint(true)
-      val (tBlame, blameSum) = time {
-        graft.model.Pricing.soleBlameOf(li, Tables.supplier(spark, sfDir))
-          .agg(sum(col("numwait")).as("w")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("blame", on(n => replicatedLineitem(spark, sfDir, n).localCheckpoint(true))(
+        li => first(graft.model.Pricing.soleBlameOf(li, Tables.supplier(spark, sfDir)),
+          sum(col("numwait")).as("w")))),
       // kmv1: the (source, hash) distinct grows ∝ n (copies are
       // shingle-disjoint); the bucket-cutoff prefilter keeps the
       // per-source top-k sort input ~constant, and the pair stage is
       // sources² regardless of n — so the curve should track the
       // distinct alone
-      val docsD = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tKmv, kmvPairs) = time {
-        graft.ops.Sketch.kmvSetOpsOf(docsD)
-          .agg(count(lit(1)).as("n"), sum(col("n_common")).as("c"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("kmv", on(docs)(d => first(graft.ops.Sketch.kmvSetOpsOf(d),
+        count(lit(1)).as("n"), sum(col("n_common")).as("c")))),
       // tx30: every stage is a doc-keyed window or (doc, pos) join
       // over per-copy-bounded documents — the merge-application round
       // must stay linear for BPE training to be viable at corpus scale
-      val docsE = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tBpe, bpeSum) = time {
-        graft.ops.TextStats.bpeMergeRoundOf(docsE)
-          .agg(sum(col("n_occurrences")).as("s")).collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("bpe", on(docs)(d => first(TextStats.bpeMergeRoundOf(d),
+        sum(col("n_occurrences")).as("s")))),
       // sim8: training collects only PqSub × codes × subdim stats per
       // round; encoding + ADC is one projection + broadcast lookups, so
       // the curve should be ~linear in the corpus with a fixed offset
-      val emb6 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tPq, pqRows) = time {
-        graft.ops.Similarity.pqTopKOf(emb6).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("pq", on(emb)(e => Similarity.pqTopKOf(e).count())),
       // rl1: the FastSS blocking keys inherit the near-unique low
       // digits, so candidates and links must both grow ∝ n (copies
       // shift keys by 11M — two digit positions apart, so a single
       // 'x' substitution can never bridge copies and the true link
       // structure is per-copy by construction). The pre-fix left-half
       // blocking measured 21 s at 1× — this curve guards the rewrite.
-      val cust = replicatedCustomer(spark, sfDir, n).localCheckpoint(true)
-      val nCust = cust.count()
-      val (tRl, rlLinks) = time {
-        graft.ops.Linkage.recordLinkageOf(cust).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("rl", on(n => replicatedCustomer(spark, sfDir, n).localCheckpoint(true))(
+        c => graft.ops.Linkage.recordLinkageOf(c).count())),
       // g7: kNN build + ≤6 BFS rounds of frontier join + min-struct
       // agg. Sign-flipped copies keep edges within copies and each
       // copy carries its own ∝ n/97 seed slice, so reached counts grow
       // ∝ n; rounds are diameter-capped, so the curve should track
-      // sim4's build plus a flat per-round keyed-join cost — the probe
+      // knn's build plus a flat per-round keyed-join cost — the probe
       // consumes dist so the propagation stages can't prune away
-      val emb7 = replicatedEmb(spark, sfDir, n).localCheckpoint(true)
-      val (tBfs, bfsReached) = time {
-        graft.ops.Graph.bfsLandmarksOf(emb7)
-          .agg(sum(col("reached")).as("r"), sum(col("dist")).as("d"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("bfs", on(emb)(e => first(graft.ops.Graph.bfsLandmarksOf(e),
+        sum(col("reached")).as("r"), sum(col("dist")).as("d")))),
+      // g12 landmark centrality (multi-landmark BFS with per-round
+      // materialization + early exit) and g13 PageRank residual rounds:
+      // each round is a keyed frontier/rank join against the
+      // materialized symmetric edge table; the question at 10×/40× is
+      // whether rounds × per-round materialization stays ~linear in
+      // edges, and where pre-bucketing the edge table would start to pay
+      Case("g12", on(emb)(e => graft.ops.Graph.landmarkCentralityOf(e).count())),
+      Case("g13", on(emb) { e =>
+        val edges = Materialize(Similarity.knnGraphOf(e).select("src", "dst"),
+          Materialize.Local, "probe_g13_edges")
+        Similarity.pagerankResidualsOf(
+          edges, e.select("vec_id"), Similarity.PrIters).count()
+      }),
       // ord2: one PrefixSum pass over the bucket-major key — per-
       // partition windows + O(partitions) driver offsets — so the
       // curve should track the corpus linearly at any bucket skew
@@ -346,14 +275,9 @@ object ScaleProbe {
       // while the bucket count stays fixed: the exact hot-key shape a
       // per-bucket window would die on). The aggregate consumes
       // schedule_key so pruning can't drop the rank machinery.
-      val docsF = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tCur, curKeyMax) = time {
-        graft.ops.Sampling
-          .curriculumOrderOf(docsF, spark.sparkContext.defaultParallelism)
-          .agg(max(col("schedule_key")).as("m"), count(lit(1)).as("c"))
-          .collect()(0).getLong(0)
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      Case("curriculum", on(docs)(d => first(graft.ops.Sampling
+        .curriculumOrderOf(d, spark.sparkContext.defaultParallelism),
+        max(col("schedule_key")).as("m"), count(lit(1)).as("c")))),
       // dd4 under a GLOBAL hot shingle: the same unsalted 3-token
       // footer on every doc of every copy gives ONE shingle df = full
       // corpus — the Σdf² detonation the PPJoin prefix filter exists
@@ -361,60 +285,66 @@ object ScaleProbe {
       // corpus). The footer is deliberately SHORT: its solo Jaccard
       // contribution 1/(n_a+n_b-1) < 1/10 for every pair, so the true
       // pair structure stays the salted copies' linear one and output
-      // size cannot explain a superlinear bend.
-      val docsG = replicated(spark, sfDir, n)
-        .withColumn("text", concat(col("text"), lit(" all rights reserved")))
-        .localCheckpoint(true)
-      val (tJacB, jacBPairs) = time {
-        graft.ops.Dedup.ngramJaccardPairsOf(docsG).count()
-      }
-      graft.ops.Materialize.releaseAll(spark)
+      // size cannot explain a superlinear bend (a 10-token footer
+      // measured 409k→39.6M pairs at 1×→10×: the quadratic OUTPUT
+      // drowns the signal).
+      Case("jacboiler", on(n => replicated(spark, sfDir, n)
+          .withColumn("text", concat(col("text"), lit(" all rights reserved")))
+          .localCheckpoint(true))(d => Dedup.ngramJaccardPairsOf(d).count())),
       // the DISTRIBUTED pointer-jumping connected-components path,
       // forced past the driver union-find switch (localThreshold=0):
       // per-copy-disjoint LSH pair graphs keep components and diameter
       // per-copy-bounded, so rounds stay O(log d) = constant across
       // factors and the curve should be ~linear in edges — the measured
       // form of the warehouse-scale claim dd7/dd8 ride on.
-      val docsH = replicated(spark, sfDir, n).localCheckpoint(true)
-      val (tDcc, dccLabeled) = time {
-        val pairsDf = graft.ops.Dedup
-          .minhashLshPairs(docsH, "doc_id", "text", 0.1)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        graft.ops.Dedup.labelPropagation(pairsDf, localThreshold = 0L).count()
+      Case("distcc", on(docs)(d =>
+        Dedup.labelPropagation(lshEdges(d), localThreshold = 0L).count()))
+    ) ++
+      lifecycle("dd2", m => Dedup.minhashLshQuery(spark, sfDir, m)) ++
+      lifecycle("dd7", m => Dedup.dedupClusters(spark, sfDir, m)) ++
+      lifecycle("dd7loop", m => Dedup.dedupClusters(spark, sfDir, m, localThreshold = 0L)) ++
+      lifecycle("dd9", m => Dedup.simhashPairs(spark, sfDir, m))
+  }
+
+  /** Runs the cases whose names start with one of `prefixes` (all when
+    * empty) at each factor, each [[Harness.timedRuns]] `runs` times,
+    * and emits one JSON line per factor (the replicated corpus sizes)
+    * and one per case: its run statistics, the rows of its last run and
+    * the shuffle-partition layout the seam ratchet left before release. */
+  def probe(spark: SparkSession, sfDir: String, factors: Seq[Int],
+      prefixes: Seq[String], runs: Int)(emit: String => Unit): Unit = {
+    val all = cases(spark, sfDir)
+    val unmatched = prefixes.filterNot(p => all.exists(_.name.startsWith(p)))
+    require(unmatched.isEmpty,
+      s"no probe case matches: ${unmatched.mkString(", ")}")
+    val selected =
+      all.filter(c => prefixes.isEmpty || prefixes.exists(c.name.startsWith))
+    factors.foreach { n =>
+      val vecs = Tables.embeddings(spark, sfDir).count() * n
+      emit(s"""{"factor":$n,"docs":${Tables.documents(spark, sfDir).count() * n},""" +
+        s""""vecs":$vecs,"cust":${Tables.customer(spark, sfDir).count() * n},""" +
+        s""""dd5_bands":${graft.ops.Dedup.EmbBands},""" +
+        s""""dd5_planes":${graft.ops.Dedup.embBandPlanesFor(vecs)}}""")
+      selected.filter(c => c.scaled || n == 1).foreach { c =>
+        val t = Harness.timedRuns(spark, runs)(c.prep(n)) { action =>
+          (action(), spark.conf.get("spark.sql.shuffle.partitions"))
+        }.get
+        val (rows, parts) = t.last.get
+        emit(s"""{"case":"${c.name}","factor":$n,${t.fields},""" +
+          s""""rows":$rows,"parts":$parts}""")
       }
-      graft.ops.Materialize.releaseAll(spark)
-      println(f"""{"factor":$n,"docs":$nDocs,"lsh_sec":$tLsh%.2f,"pairs":$pairs,""" +
-        f""""cluster_sec":$tCluster%.2f,"labeled":$clusters,""" +
-        f""""pack_sec":$tPack%.2f,"packed":$packed,""" +
-        f""""simhash_sec":$tSim%.2f,"sim_pairs":$simPairs,""" +
-        f""""dfprune_sec":$tPrune%.2f,"pruned":$pruned,""" +
-        f""""bloom_sec":$tBloom%.2f,"bloom_rows":$bloomRows,""" +
-        f""""jaccard_sec":$tJac%.2f,"jac_pairs":$jacPairs,""" +
-        f""""vecs":$nVecs,"ivf_sec":$tIvf%.2f,"ivf_rows":$ivfRows,""" +
-        f""""knn_sec":$tKnn%.2f,"knn_edges":$knnEdges,""" +
-        f""""neardup_sec":$tNd%.2f,"nd_pairs":$ndPairs,""" +
-        f""""dd5_bands":${graft.ops.Dedup.EmbBands},"dd5_planes":$dd5Planes,""" +
-        f""""merge_sec":$tMerge%.2f,"merged":$mergedRows,""" +
-        f""""asof_sec":$tAsof%.2f,"asof_rows":$asofRows,""" +
-        f""""span_sec":$tSpan%.2f,"span_rows":$spanRows,""" +
-        f""""segdedup_sec":$tSeg%.2f,"seg_kept":$segKept,""" +
-        f""""coverage_sec":$tCov%.2f,"cov_docs":$covDocs,""" +
-        f""""srcoverlap_sec":$tSrc%.2f,"src_pairs":$srcPairs,""" +
-        f""""pagerank_sec":$tPr%.2f,"pr_nodes":$prNodes,""" +
-        f""""tri_sec":$tTri%.2f,"tri_sum":$triSum,""" +
-        f""""funnel_sec":$tFun%.2f,"funnel_users":$funUsers,""" +
-        f""""novelty_sec":$tNov%.2f,"novel_sum":$novSum,""" +
-        f""""markov_sec":$tMkv%.2f,"transitions":$mkvSum,""" +
-        f""""blame_sec":$tBlame%.2f,"blame_sum":$blameSum,""" +
-        f""""kmv_sec":$tKmv%.2f,"kmv_pairs":$kmvPairs,""" +
-        f""""bpe_sec":$tBpe%.2f,"bpe_sum":$bpeSum,""" +
-        f""""pq_sec":$tPq%.2f,"pq_rows":$pqRows,""" +
-        f""""cust":$nCust,"rl_sec":$tRl%.2f,"rl_links":$rlLinks,""" +
-        f""""bfs_sec":$tBfs%.2f,"bfs_reached":$bfsReached,""" +
-        f""""curriculum_sec":$tCur%.2f,"cur_key_max":$curKeyMax,""" +
-        f""""jacboiler_sec":$tJacB%.2f,"jacboiler_pairs":$jacBPairs,""" +
-        f""""distcc_sec":$tDcc%.2f,"distcc_labeled":$dccLabeled}""")
     }
+    // the storage_* cases (the unscaled ones) leave their last run's
+    // durable tables behind
+    if (selected.exists(!_.scaled)) wipe(new java.io.File(StorageDir))
+  }
+
+  /** Args: factors (integers, default 1 4 10) and case-name prefixes. */
+  def main(args: Array[String]): Unit = {
+    val (ints, prefixes) = args.toSeq.partition(_.forall(_.isDigit))
+    val factors = if (ints.nonEmpty) ints.map(_.toInt) else Seq(1, 4, 10)
+    val spark = Harness.session(Harness.Cpus)
+    probe(spark, Harness.SfDir, factors, prefixes, Harness.Runs)(println)
     spark.stop()
   }
 

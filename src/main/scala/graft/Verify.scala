@@ -1,45 +1,66 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [prefix,prefix...]
+  *
+  * The optional 3rd arg (comma-separated name prefixes) dumps, and
+  * lists in oracle_sql.json, only matching queries — the developer loop
+  * on one operator's oracle; the driver always passes 2 args. A failing
+  * query fails the run loudly: every other output and oracle_sql.json
+  * are still written, then the failed names go to stderr and the exit
+  * code is 1. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated name prefixes — dump (and list
-    // in oracle_sql.json) only matching queries, for fast local
-    // iteration on a new operator. The driver always passes 2 args.
-    val (sfDir, outDir) = (args(0), args(1))
-    val only: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(",").toSeq
-        name => ps.exists(name.startsWith) }
-      else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Harness.session(cpus)
+
+  /** Writes each query's output under `outDir/<name>` and
+    * `outDir/oracle_sql.json` over `oracle`'s entries for the same
+    * names; returns the names of the queries that threw. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      oracle: Map[String, String]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      } finally {
+        // bound residency: LSH-family queries materialize intermediates
+        graft.ops.Materialize.releaseAll(spark)
       }
-      // bound residency: LSH-family queries materialize intermediates
-      graft.ops.Materialize.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => only(kv._1))
+    val names = queries.map(_._1).toSet
+    def q(s: String) = "\"" + graft.functions.Functions.jsonEscape(s) + "\""
+    val json = oracle.filter(kv => names(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    failed
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir) = (args(0), args(1))
+    val all = SparkEntry.queries.toSeq
+    val prefixes = args.lift(2).map(_.split(",").toSeq)
+    // a typo'd prefix would otherwise dump nothing for it and read as done
+    val unmatched = prefixes.toSeq.flatten
+      .filterNot(p => all.exists(_._1.startsWith(p)))
+    require(unmatched.isEmpty,
+      s"no query matches the prefixes: ${unmatched.mkString(", ")}")
+    val queries = all.filter { case (name, _) =>
+      prefixes.forall(_.exists(name.startsWith))
+    }
+    val spark = Harness.session(Harness.Cpus)
+    val failed = dump(spark, sfDir, outDir, queries, SparkEntry.oracleSql)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries FAILED: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -289,55 +289,46 @@ object Similarity {
 
   val KnnK = 3
 
-  /** Driver-query probe radius for [[knnGraph]] — the recall/cost dial,
-    * measured at sf0.1 (see NOTES.md): radius 1 multiplies the src side
-    * (and the whole pair/window stream) by P+1 = 9×. */
+  /** [[knnGraph]]'s bucket probe radius, fixed at Hamming 1. Radius 0
+    * (home bucket only) was measured against the exact all-pairs top-k
+    * graph at sf0.1 (NOTES.md, "sim4 probe-radius dial"): edge recall
+    * 0.022 vs 0.133 at radius 1 for about the same wall time (0.64 vs
+    * 0.61 s), and 0.006 vs 0.061 at the self-sized 10 planes — a bucket
+    * holding fewer than k+1 vectors cannot fill its rows' top-k, and
+    * the nearest misses overwhelmingly land one flipped hyperplane
+    * away. Radius 1 multiplies the src side (and the whole pair/window
+    * stream) by P+1. */
   val KnnProbeRadius = 1
 
   /** KNN-graph construction: top-k nearest neighbors for EVERY vector,
-    * blocked by the sign-LSH bucket, with the probe radius as an
-    * explicit recall/cost dial:
-    *   - `probeRadius = 0` — each vector meets only its home bucket:
-    *     cheapest, sum-of-squared-bucket-sizes pairs, but a bucket
-    *     holding fewer than k+1 vectors cannot fill its rows' top-k.
-    *   - `probeRadius = 1` — Hamming-1 multi-probe: the src side
-    *     explodes to its home bucket plus the P one-bit
-    *     neighbors ((P+1)× the pair stream) and the nearest misses
-    *     overwhelmingly land one flipped hyperplane away.
-    * The join stays EQUI-keyed on the probed bucket either way (an
+    * blocked by the sign-LSH bucket with the Hamming-1 multi-probe of
+    * [[KnnProbeRadius]]: the src side explodes to its home bucket plus
+    * the P one-bit neighbors ((P+1)× the pair stream).
+    * The join stays EQUI-keyed on the probed bucket (an
     * OR-of-XORs predicate would degrade it to a nested loop); dst stays
     * at its home bucket, and each pair is found exactly once (the probe
     * masks are distinct). The quadratic term is (P+1)·sum-of-squared-
-    * bucket-sizes at radius 1, never corpus² — and P SELF-SIZES via
+    * bucket-sizes, never corpus² — and P SELF-SIZES via
     * [[planesFor]] (Planes ∝ log₂ corpus) so per-bucket population
     * stays ~[[PlanesTargetDocs]] as the corpus grows; the oracle
     * derives the identical count from the same integer arithmetic over
     * count(*). Rank via one window over the pair stream; deterministic
     * tiebreaks. This is the candidate graph semantic-dedup/clustering
     * pipelines consume. */
-  def knnGraph(s: SparkSession, d: String,
-      probeRadius: Int = KnnProbeRadius): DataFrame =
-    knnGraphOf(Tables.embeddings(s, d), probeRadius)
+  def knnGraph(s: SparkSession, d: String): DataFrame =
+    knnGraphOf(Tables.embeddings(s, d))
 
-  def knnGraphOf(emb: DataFrame,
-      probeRadius: Int = KnnProbeRadius,
-      planesOverride: Int = 0): DataFrame = {
+  def knnGraphOf(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = emb.sparkSession
-    require(probeRadius == 0 || probeRadius == 1,
-      s"probeRadius must be 0 or 1, got $probeRadius")
     // one count action sizes the geometry, cached per Materialize
     // lifetime ([[Materialize.cachedCount]]) and shared with the IVF
     // trainer's sample-stride count over the same corpus. Metadata-only
     // for parquet-backed frames; a generated frame pays one real scan
     // per lifecycle — the builder is eager to that extent.
-    val planes =
-      if (planesOverride > 0) planesOverride
-      else planesFor(Materialize.cachedCount(emb))
+    val planes = planesFor(Materialize.cachedCount(emb))
     val e = embDoubleOf(emb).withColumn("bucket", bucketCol(col("v"), planes))
-    val masks =
-      lit(0) +: (if (probeRadius >= 1) (0 until planes).map(p => lit(1 << p))
-                 else Seq.empty)
+    val masks = lit(0) +: (0 until planes).map(p => lit(1 << p))
     val a = e.select(col("vec_id").as("src"), col("v").as("av"),
       col("norm").as("anorm"), col("bucket").as("home"))
       .withColumn("probe", explode(array(masks: _*)))
@@ -565,7 +556,7 @@ object Similarity {
        |  FROM (SELECT (count(*) + ${target - 1}) // $target AS m
        |        FROM $table) t)""".stripMargin
 
-  def knnGraphOracle(probeRadius: Int = KnnProbeRadius): String = {
+  def knnGraphOracle(): String = {
     // all MaxPlanes terms unroll statically; each contributes only
     // while its index is under the params-CTE plane count — the SQL
     // form of the driver-side planesFor(count) derivation
@@ -581,7 +572,7 @@ object Similarity {
        |  SELECT a.vec_id AS src, x.vec_id AS dst,
        |    list_dot_product(a.v, x.v) / (sqrt(a.norm) * sqrt(x.norm)) AS cos
        |  FROM b a JOIN b x
-       |    ON bit_count(xor(a.bucket, x.bucket)) <= $probeRadius AND a.vec_id <> x.vec_id),
+       |    ON bit_count(xor(a.bucket, x.bucket)) <= $KnnProbeRadius AND a.vec_id <> x.vec_id),
        |ranked AS (
        |  SELECT src, dst, cos,
        |    row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rank

@@ -76,5 +76,11 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.loadFlagged(loadStart = 4.36, p50 = 0.4, minRun = 0.1))
     // boundary: exactly 2x and exactly 0.5 s delta flags
     assert(Bench.loadFlagged(loadStart = 1.0, p50 = 1.0, minRun = 0.5))
+    // the driver's r13 tx28 as the detail file recorded it: p50 1.184
+    // = 2.000x min 0.592 at load 1.43 flags...
+    assert(Bench.loadFlagged(loadStart = 1.43, p50 = 1.184, minRun = 0.592))
+    // ...and so do unrounded runs that the detail file rounds to those
+    // values, though 1.18351 < 2 x 0.59249 in unrounded seconds
+    assert(Bench.loadFlagged(loadStart = 1.43, p50 = 1.18351, minRun = 0.59249))
   }
 }

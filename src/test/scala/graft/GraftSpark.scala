@@ -2,23 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt forks a single test JVM). */
+/** One shared local session for all suites (sbt forks a single test JVM),
+  * built from [[Harness.builder]] so the plan gates test the shipping
+  * configuration; tests add only an app name and a warehouse dir. */
 object GraftSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Harness.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror Harness: size-driven hash-vs-sort-merge choice and the
-      // 32MB advisory (the seam ratchet's bytes-per-partition target —
-      // see Harness.scala) so plan gates test the shipping configuration
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32MB")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -64,7 +64,7 @@ object ScaleProbe {
   final case class Case(name: String, prep: Int => () => Long,
       scaled: Boolean = true)
 
-  /** Durable-lifecycle directory of the `storage_*` cases. */
+  /** Durable seam directory of the `storage_*` cases. */
   val StorageDir: String =
     sys.env.getOrElse("SPARK_GRAFT_STORAGE_DIR", "/tmp/graft_storage_bench")
 
@@ -86,22 +86,23 @@ object ScaleProbe {
       df.agg(aggs.head, aggs.tail: _*).collect()(0).getLong(0)
     def lshEdges(d: DataFrame) = Dedup.minhashLshPairs(d, "doc_id", "text", 0.1)
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    // StorageBench's rows: the cost of the Materialize.Storage lifecycle
-    // for the LSH family — the durable-parquet-intermediates posture the
-    // 100-TB scaladocs claim — against the Local checkpoint lifecycle
-    // the driver bench runs, on the driver queries themselves. dd7
-    // additionally switches algorithm under Storage (the distributed
-    // pointer-jumping loop; Local uses the driver union-find below the
-    // edge threshold), so its delta is lifecycle + algorithm; dd7loop
-    // is the apples-to-apples LIFECYCLE row: the distributed loop in
-    // BOTH modes (threshold 0 disables the union-find switch), so its
-    // delta is the durable-posture premium alone
-    def lifecycle(name: String, q: Materialize.Mode => DataFrame): Seq[Case] =
-      Seq("local" -> Materialize.Local,
-          "storage" -> Materialize.Storage(StorageDir)).map { case (label, m) =>
-        Case(s"storage_${name}_$label",
-          _ => { wipe(new java.io.File(StorageDir)); () => q(m).count() },
-          scaled = false)
+    // the cost of the durable seam lifecycle for the LSH family — the
+    // durable-parquet-intermediates posture the 100-TB scaladocs claim —
+    // against the local checkpoint lifecycle the driver bench runs: the
+    // same driver query on the session without, then with, the storage
+    // directory set. dd7 additionally switches algorithm when durable
+    // (the distributed pointer-jumping loop; local uses the driver
+    // union-find below the edge threshold), so its delta is lifecycle +
+    // algorithm; dd7loop is the apples-to-apples LIFECYCLE row: the
+    // distributed loop in BOTH (threshold 0 disables the union-find
+    // switch), so its delta is the durable-posture premium alone
+    def lifecycle(name: String, q: => DataFrame): Seq[Case] =
+      Seq("local" -> false, "storage" -> true).map { case (label, durable) =>
+        Case(s"storage_${name}_$label", _ => {
+          wipe(new java.io.File(StorageDir))
+          () => if (durable) Materialize.storingUnder(spark, StorageDir)(q.count())
+            else q.count()
+        }, scaled = false)
       }
     Seq(
       Case("lsh", on(docs)(d => Dedup.minhashLshPairs(d, "doc_id", "text", 0.1).count())),
@@ -137,8 +138,7 @@ object ScaleProbe {
       // own explanation (per-band buckets grow as 2^planes ∝ n, holding
       // Σ bucket² candidate volume ~linear). The builder's internal
       // count scans the LOCALCHECKPOINTED blocks, not the replication
-      // transform — cheap, and deliberately uncached
-      // (Materialize.cachedCount skips LogicalRDD-rooted plans)
+      // transform — cheap
       Case("neardup", on(emb)(e => Dedup.embeddingNearDupOf(e).count())),
       // j4: anti-join MERGE on replicated orders — both sides of the
       // upsert grow linearly; the join is keyed (no broadcast of the
@@ -264,7 +264,7 @@ object ScaleProbe {
       Case("g12", on(emb)(e => graft.ops.Graph.landmarkCentralityOf(e).count())),
       Case("g13", on(emb) { e =>
         val edges = Materialize(Similarity.knnGraphOf(e).select("src", "dst"),
-          Materialize.Local, "probe_g13_edges")
+          "probe_g13_edges")
         Similarity.pagerankResidualsOf(
           edges, e.select("vec_id"), Similarity.PrIters).count()
       }),
@@ -300,10 +300,10 @@ object ScaleProbe {
       Case("distcc", on(docs)(d =>
         Dedup.labelPropagation(lshEdges(d), localThreshold = 0L).count()))
     ) ++
-      lifecycle("dd2", m => Dedup.minhashLshQuery(spark, sfDir, m)) ++
-      lifecycle("dd7", m => Dedup.dedupClusters(spark, sfDir, m)) ++
-      lifecycle("dd7loop", m => Dedup.dedupClusters(spark, sfDir, m, localThreshold = 0L)) ++
-      lifecycle("dd9", m => Dedup.simhashPairs(spark, sfDir, m))
+      lifecycle("dd2", Dedup.minhashLshQuery(spark, sfDir)) ++
+      lifecycle("dd7", Dedup.dedupClusters(spark, sfDir)) ++
+      lifecycle("dd7loop", Dedup.dedupClusters(spark, sfDir, localThreshold = 0L)) ++
+      lifecycle("dd9", Dedup.simhashPairs(spark, sfDir))
   }
 
   /** Runs the cases whose names start with one of `prefixes` (all when

@@ -20,7 +20,8 @@ object ReadmeExample {
       .getOrCreate()
 
     // MinHash-LSH near-duplicate pairs with self-sizing band geometry;
-    // swap Materialize.Local for Materialize.Storage(dir) on a cluster.
+    // on a cluster, make the seams durable with
+    //   --conf spark.graft.materialize.storageDir=<dir>
     val pairs = Dedup.minhashLshQuery(spark, sfDir)
     pairs.show(10)
     val n = pairs.count()

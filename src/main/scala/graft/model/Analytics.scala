@@ -530,7 +530,7 @@ object Analytics {
     val ev = graft.ops.Materialize(
       events.where(col("event_type").isNotNull)
         .select(col("event_type"), cents(col("value")).as("c")),
-      graft.ops.Materialize.Local, "a18_cents")
+      "a18_cents")
     val med = ev.groupBy("event_type")
       .agg(expr("percentile(c, 0.5)").as("med"))
     val dev = ev.join(broadcast(med), "event_type")
@@ -618,7 +618,7 @@ object Analytics {
         .join(hist, col("depth") >= col("step"), "left")
         .groupBy("step", "event_type")
         .agg(coalesce(sum(col("n")), lit(0L)).as("users")),
-      graft.ops.Materialize.Local, "w6_counts")
+      "w6_counts")
     val base = counts.where(col("step") === 1)
       .select(col("users").as("base"))
     counts.crossJoin(broadcast(base))
@@ -1884,7 +1884,7 @@ object Analytics {
           datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
             .cast("long").as("day"))
         .agg(count(lit(1)).as("x")),
-      graft.ops.Materialize.Local, "a36_daily")
+      "a36_daily")
     val b = daily.select(col("event_type").as("et2"), col("day").as("d2"),
       col("x").as("x2"))
     val sStat = daily
@@ -2003,7 +2003,7 @@ object Analytics {
           datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
             .cast("long").as("day"))
         .agg(count(lit(1)).as("x")),
-      graft.ops.Materialize.Local, "a37_daily")
+      "a37_daily")
     val b = daily.select(col("event_type").as("et2"), col("day").as("d2"),
       col("x").as("x2"))
     val trail = daily
@@ -2366,9 +2366,7 @@ object Analytics {
     kendallTauOf(Tables.lineitem(s, d))
 
   /** [[kendallTau]] over an explicit lineitem frame. */
-  def kendallTauOf(li: DataFrame,
-      mode: graft.ops.Materialize.Mode = graft.ops.Materialize.Local)
-      : DataFrame = {
+  def kendallTauOf(li: DataFrame): DataFrame = {
     val base = li.select(
       round(col("l_quantity")).cast("long").as("x"),
       round(col("l_discount") * 10000).cast("long").as("y"))
@@ -2377,7 +2375,7 @@ object Analytics {
     // or every fork replays the corpus scan (PlanSpec-gated)
     val cells = graft.ops.Materialize(
       base.groupBy("x", "y").agg(count(lit(1)).as("cn")),
-      mode, "kendall_cells")
+      "kendall_cells")
     val a = cells.select(col("x").as("xa"), col("y").as("ya"),
       col("cn").as("na"))
     val b = cells.select(col("x").as("xb"), col("y").as("yb"),
@@ -2495,16 +2493,14 @@ object Analytics {
     spearmanPairsOf(Tables.events(s, d))
 
   /** [[spearmanPairs]] over an explicit events frame. */
-  def spearmanPairsOf(events: DataFrame,
-      mode: graft.ops.Materialize.Mode = graft.ops.Materialize.Local)
-      : DataFrame = {
+  def spearmanPairsOf(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val daily = graft.ops.Materialize(events
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .groupBy(col("event_type"),
         datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
           .cast("long").as("day"))
-      .agg(count(lit(1)).as("x")), mode, "spearman_daily")
+      .agg(count(lit(1)).as("x")), "spearman_daily")
     val spine = daily.select("day").distinct()
       .crossJoin(daily.select("event_type").distinct())
     val filled = spine.join(daily, Seq("event_type", "day"), "left")
@@ -2600,20 +2596,18 @@ object Analytics {
     * whose min-day equals the day, returning = active − new; shares
     * in basis points. The (user, day) table is materialized once —
     * it feeds both the first-day rollup and the daily-active rollup
-    * (the a29/dq7 fork rule; Storage mode at warehouse scale). */
+    * (the a29/dq7 fork rule; durable seams at warehouse scale). */
   def newVsReturning(s: SparkSession, d: String): DataFrame =
     newVsReturningOf(Tables.events(s, d))
 
   /** [[newVsReturning]] over an explicit events frame. */
-  def newVsReturningOf(events: DataFrame,
-      mode: graft.ops.Materialize.Mode = graft.ops.Materialize.Local)
-      : DataFrame = {
+  def newVsReturningOf(events: DataFrame): DataFrame = {
     val ud = graft.ops.Materialize(events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("user_id"),
         datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
           .cast("long").as("day"))
-      .distinct(), mode, "user_days")
+      .distinct(), "user_days")
     val newPerDay = ud.groupBy("user_id")
       .agg(min(col("day")).as("day"))
       .groupBy("day").agg(count(lit(1)).as("new_users"))
@@ -2674,7 +2668,7 @@ object Analytics {
     val hist = graft.ops.Materialize(
       perUser.groupBy("active_days")
         .agg(count(lit(1)).as("n_users"), sum(col("m")).as("n_events")),
-      graft.ops.Materialize.Local, "active_days_hist")
+      "active_days_hist")
     val tot = hist.agg(sum(col("n_users")).as("t_users"))
     hist.crossJoin(broadcast(tot))
       .select(col("active_days"), col("n_users"), col("n_events"),
@@ -2849,9 +2843,7 @@ object Analytics {
     runsTestOf(Tables.events(s, d))
 
   /** [[runsTest]] over an explicit events frame. */
-  def runsTestOf(events: DataFrame,
-      mode: graft.ops.Materialize.Mode = graft.ops.Materialize.Local)
-      : DataFrame = {
+  def runsTestOf(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // O(types×days) series feeds both the median rank and the sign
     // join — materialize once (the a29/dq7 fork rule)
@@ -2860,7 +2852,7 @@ object Analytics {
       .groupBy(col("event_type"),
         datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
           .cast("long").as("day"))
-      .agg(count(lit(1)).as("x")), mode, "runs_daily")
+      .agg(count(lit(1)).as("x")), "runs_daily")
     // median by rank over the per-type day series (odd count → middle
     // row; even → the LOWER middle — a fixed total-order choice both
     // engines replay; only the sign split needs consistency, not the
@@ -3004,7 +2996,7 @@ object Analytics {
         .groupBy(month(col("o_orderdate")).cast("long").as("month"))
         .agg(count(lit(1)).as("n_orders"),
           sum(cents(col("o_totalprice"))).as("revenue_cents")),
-      graft.ops.Materialize.Local, "a35_monthly")
+      "a35_monthly")
     val grand = monthly.agg(
       sum(col("revenue_cents")).as("grand_cents"))
     monthly.crossJoin(broadcast(grand))

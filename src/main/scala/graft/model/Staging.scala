@@ -82,7 +82,7 @@ object Staging {
       orders
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("ym"))
         .agg(count(lit(1)).as("n_rows")),
-      graft.ops.Materialize.Local, "t6_months")
+      "t6_months")
     val span = months
       .agg(min(col("ym")).as("lo"), max(col("ym")).as("hi"))
       .select(explode(expr(

@@ -112,14 +112,13 @@ object Chunking {
   def chunkBoilerplate(s: SparkSession, d: String): DataFrame =
     chunkBoilerplateOf(Tables.documents(s, d))
 
-  def chunkBoilerplateOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def chunkBoilerplateOf(docs: DataFrame): DataFrame = {
     val w = AuditTokens
     val chunks = Materialize(
       chunked(tokenized(docs), w, w)
         .select(col("doc_id"), md5(array_join(slice(col("l"),
           intSliceStart(col("chunk_id") * w + 1L), lit(w)), " ")).as("h")),
-      mode, "ch2_chunks")
+      "ch2_chunks")
     val docFreq = chunks.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("docs_with"))
     chunks

@@ -135,32 +135,29 @@ object Dedup {
     * (doc_a, doc_b, i_size, u_size, jaccard).
     *
     * Lifecycle: the hashed-shingle table and the band table are
-    * materialized through [[Materialize]] — [[Materialize.Local]]
-    * (default) for the run-once driver Verify/Bench shape, with blocks
-    * released by the harness between queries;
-    * [[Materialize.Storage]] for the fault-tolerant warehouse lifecycle
-    * where the shingle/signature tables persist to storage and survive
-    * executor loss. */
+    * materialized through [[Materialize]] — executor-local checkpoints
+    * for the run-once driver Verify/Bench shape, with blocks released by
+    * the harness between queries, or durable parquet that survives
+    * executor loss when the session sets a storage directory
+    * ([[Materialize.DurableDirKey]]). */
   def minhashLshPairsUnsorted(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    minhashPipeline(docs, idCol, textCol, threshold, mode)._3
+      threshold: Double): DataFrame =
+    minhashPipeline(docs, idCol, textCol, threshold)._3
 
   /** The shared MinHash pipeline internals: (signature table, candidate
     * pair set — banding hits BEFORE verification, dd17's audit subject —
-    * and the verified pair set). [[Materialize.Local]] checkpoints are
+    * and the verified pair set). [[Materialize]] seams are
     * EAGER per call, so a consumer that needs more than one of these
     * (dd15, dd17) must take them from ONE invocation — separate builder
     * calls would hash the corpus twice. */
   private[graft] def minhashPipeline(docs: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      mode: Materialize.Mode = Materialize.Local)
+      textCol: String, threshold: Double)
       : (DataFrame, DataFrame, DataFrame) = {
     // ONE eager materialization of all per-shingle hashing; signatures,
     // bands, sizes, and verification all derive from it with cheap
     // re-aggregations instead of re-hashing
     val flat = Materialize(
-      hashedShingleTable(docs, idCol, textCol), mode, "minhash_shingles")
+      hashedShingleTable(docs, idCol, textCol), "minhash_shingles")
     val sigs = signaturesFromFlat(flat, idCol)
     // single-pass unpivot to (id, band, sig) — one struct array exploded,
     // instead of NumBands unioned re-aggregations
@@ -170,17 +167,17 @@ object Dedup {
     }: _*)
     // the self-join reads bands twice, but within one action Spark's
     // exchange reuse computes the identical signature aggregation ONCE
-    // (both sides read the same shuffle output) — so in Local mode a
+    // (both sides read the same shuffle output) — so a local
     // checkpoint here is pure write+read overhead (measured ~0.4 s per
-    // query at sf0.1). Storage mode still persists the band table: it
-    // is part of the durable lifecycle (MaterializeSpec reads it back).
+    // query at sf0.1). A durable session still persists the band table:
+    // it is part of the durable lifecycle (MaterializeSpec reads it back).
     val bandsRaw = sigs
       .select(col(idCol), explode(bandStructs).as("bs"))
       .select(col(idCol), col("bs.band").as("band"), col("bs.sig").as("sig"))
-    val bands = mode match {
-      case Materialize.Local => bandsRaw
-      case _ => Materialize(bandsRaw, mode, "minhash_bands")
-    }
+    val bands =
+      if (Materialize.durable(docs.sparkSession))
+        Materialize(bandsRaw, "minhash_bands")
+      else bandsRaw
     // No STATIC join-strategy hints: the Materialize seam injects
     // MEASURED block sizes into the checkpointed frames' stats
     // (round-9 — Bridge.withMeasuredStats), so Catalyst sees
@@ -225,15 +222,13 @@ object Dedup {
     * anti-join) consume the UNSORTED form: a global sort is a range
     * exchange whose ordering the next join destroys anyway. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    minhashLshPairsUnsorted(docs, idCol, textCol, threshold, mode)
+      threshold: Double): DataFrame =
+    minhashLshPairsUnsorted(docs, idCol, textCol, threshold)
       .orderBy("doc_a", "doc_b")
 
-  def minhashLshQuery(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
+  def minhashLshQuery(s: SparkSession, d: String): DataFrame =
     minhashLshPairs(Tables.documents(s, d), "doc_id", "text",
-      JaccardThreshold, mode)
+      JaccardThreshold)
 
   /** Near-dup REMOVAL (detect → apply): a document is dropped when a
     * lower-id near-duplicate exists (it appears as doc_b of some
@@ -334,22 +329,19 @@ object Dedup {
     * [[shingleIntersections]] on both a real corpus and an adversarial
     * boilerplate corpus). Every join is keyed (shingle hash, doc id);
     * no salting needed. */
-  def ngramJaccardPairs(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    ngramJaccardPairsOf(Tables.documents(s, d), mode)
+  def ngramJaccardPairs(s: SparkSession, d: String): DataFrame =
+    ngramJaccardPairsOf(Tables.documents(s, d))
 
-  def ngramJaccardPairsOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
-    val (flat, pfx) = ngramJaccardStages(docs, mode)
+  def ngramJaccardPairsOf(docs: DataFrame): DataFrame = {
+    val (flat, pfx) = ngramJaccardStages(docs)
     ngramJaccardRest(flat, pfx)
   }
 
   /** dd4's two materialization stages: the hashed shingle stream and
     * the PPJoin prefix table. Split out so stage-level timing can
     * attribute wall-clock between build and probe. */
-  private[graft] def ngramJaccardStages(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): (DataFrame, DataFrame) = {
-    val flat = shingleFlat(docs, mode)
+  private[graft] def ngramJaccardStages(docs: DataFrame): (DataFrame, DataFrame) = {
+    val flat = shingleFlat(docs)
     // materialized: the prefix pipeline (df join + two doc-keyed
     // windows) feeds BOTH sides of the candidate self-join — unchecked,
     // Catalyst replays it per side AND (under the old carried-over
@@ -360,7 +352,7 @@ object Dedup {
     // taxes the small tiers.
     val pfx = Materialize(
       prefixShingles(flat, JaccardThresholdNum, JaccardThresholdDen),
-      mode, "jaccard_prefix")
+      "jaccard_prefix")
     (flat, pfx)
   }
 
@@ -383,20 +375,13 @@ object Dedup {
   /** The materialized hashed-shingle stream (doc_id, lang, h) the exact
     * set-similarity family reads — md5 per distinct 3-gram shingle is
     * the dominant scan cost, computed once per query. */
-  private[graft] def shingleFlatProbe(docs: DataFrame): DataFrame =
-    shingleFlat(docs, Materialize.Local)
-
-  private[graft] def prefixShinglesProbe(flat: DataFrame): DataFrame =
-    prefixShingles(flat, JaccardThresholdNum, JaccardThresholdDen)
-
-  private def shingleFlat(docs: DataFrame,
-      mode: Materialize.Mode): DataFrame =
+  private def shingleFlat(docs: DataFrame): DataFrame =
     Materialize(
       spread(docs)
         .select(col("doc_id"), col("lang"),
           explode(shingles(col("text"), 3)).as("sh"))
         .select(col("doc_id"), col("lang"), md5Hash60(col("sh"), 0).as("h")),
-      mode, "jaccard_shingles")
+      "jaccard_shingles")
 
   /** PPJoin prefix selection: rank each doc's shingles by GLOBAL
     * (within-lang) document frequency ascending — ties broken by the
@@ -440,7 +425,7 @@ object Dedup {
     * corpus (where the full index's hottest key has df = corpus
     * size). */
   private[graft] def prefixIndexMaxDf(docs: DataFrame): Long = {
-    val flat = shingleFlat(docs, Materialize.Local)
+    val flat = shingleFlat(docs)
     val pfx = prefixShingles(flat, JaccardThresholdNum, JaccardThresholdDen)
     pfx.groupBy("lang", "h").count().agg(max("count")).head().getLong(0)
   }
@@ -497,9 +482,8 @@ object Dedup {
     * spreads the key); the THRESHOLDED operators dd4/dd14 instead
     * prune hot shingles soundly via the PPJoin prefix filter
     * ([[prefixShingles]]). */
-  private[graft] def shingleIntersections(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
-    val flat = shingleFlat(docs, mode)
+  private[graft] def shingleIntersections(docs: DataFrame): DataFrame = {
+    val flat = shingleFlat(docs)
     // every joined table here is corpus-sized (per-doc sizes, the flat
     // shingle stream); their estimates derive from flat's MEASURED
     // materialized stats, so the broadcast-a-corpus accident the sf1
@@ -545,16 +529,14 @@ object Dedup {
     * (i·den ≥ num·min(n_a, n_b)) keep the result bit-identical to the
     * unfiltered index (pinned in OpsSpec); the double divisions appear
     * only in output columns. */
-  def containmentPairs(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    containmentPairsOf(Tables.documents(s, d), mode)
+  def containmentPairs(s: SparkSession, d: String): DataFrame =
+    containmentPairsOf(Tables.documents(s, d))
 
-  def containmentPairsOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
-    val flat = shingleFlat(docs, mode)
+  def containmentPairsOf(docs: DataFrame): DataFrame = {
+    val flat = shingleFlat(docs)
     val pfx = Materialize(
       prefixShingles(flat, ContainmentNum, ContainmentDen),
-      mode, "containment_prefix")
+      "containment_prefix")
     val cand = pfx.select(col("lang"), col("h"), col("doc_id").as("da"))
       .join(Materialize.hashJoinIfFits(
           flat.select(col("lang"), col("h"), col("doc_id").as("db"))),
@@ -623,15 +605,13 @@ object Dedup {
     * attribution is two id-keyed joins against the (id, source)
     * projection; the cumulative window runs over ≤ 21 post-aggregate
     * rows. */
-  def similarityHistogram(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    similarityHistogramOf(Tables.documents(s, d), mode)
+  def similarityHistogram(s: SparkSession, d: String): DataFrame =
+    similarityHistogramOf(Tables.documents(s, d))
 
-  def similarityHistogramOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def similarityHistogramOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val src = docs.select(col("doc_id"), col("source"))
-    val pairs = shingleIntersections(docs, mode)
+    val pairs = shingleIntersections(docs)
       .withColumn("u_size", col("n_a") + col("n_b") - col("i_size"))
       .withColumn("bucket",
         (col("i_size") * SimHistBuckets / col("u_size")).cast("long"))
@@ -885,14 +865,13 @@ object Dedup {
   def duplicateCoverage(s: SparkSession, d: String): DataFrame =
     duplicateCoverageOf(Tables.documents(s, d))
 
-  def duplicateCoverageOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def duplicateCoverageOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // materialize the span table: the both-sided unpivot below reads
     // it twice, and without this each side recomputes the whole dd10
     // candidate join (ScaleProbe measured 22 s vs dd10's 8.5 s at 40×
     // before the materialization — the span table itself is tiny)
-    val spans = Materialize(duplicateSpansOf(docs), mode, "dup_spans")
+    val spans = Materialize(duplicateSpansOf(docs), "dup_spans")
     val ends = col("start") + col("span_tokens") - 1
     val ivals = spans
       .select(col("doc_a").as("doc_id"), col("start_a").as("start"),
@@ -1000,10 +979,9 @@ object Dedup {
     * fixed point, and the check reads tables already materialized with
     * NO extra write. */
   def labelPropagation(edges: DataFrame, maxIters: Int = 20,
-      mode: Materialize.Mode = Materialize.Local,
       localThreshold: Long = 1000L * 1000): DataFrame = {
     import org.apache.spark.sql.functions.{col => c}
-    val e = Materialize(edges.select(c("u"), c("v")), mode, "cc_edges")
+    val e = Materialize(edges.select(c("u"), c("v")), "cc_edges")
     // Strategy switch, same shape as Spark's size-based broadcast
     // decision: the near-dup PAIR graph is orders of magnitude smaller
     // than the corpus (only docs with a verified near-dup appear), so
@@ -1014,9 +992,9 @@ object Dedup {
     // O(edges) driver memory, so size the threshold like a broadcast
     // threshold, not a "fits on disk" bound. Past it — billions of
     // edges at warehouse scale — the distributed O(log diameter) loop
-    // below is the path; Storage mode always loops (its contract is
-    // durable per-round artifacts).
-    if (mode == Materialize.Local && e.count() <= localThreshold)
+    // below is the path; a durable session always loops (its contract
+    // is durable per-round artifacts).
+    if (!Materialize.durable(e.sparkSession) && e.count() <= localThreshold)
       return localComponents(e)
     val sym = e.unionByName(e.select(c("v").as("u"), c("u").as("v")))
     // identity-label init stays LAZY: it is one distinct over the
@@ -1050,13 +1028,13 @@ object Dedup {
     var i = 0
     while (!converged && i < maxIters) {
       // TWO jump steps per materialization: each step halves the
-      // remaining component diameter anyway, and in Storage mode the
+      // remaining component diameter anyway, and in a durable session the
       // per-round parquet write+read dominates the round (the measured
       // +117% r5 lifecycle premium), so checkpoint cadence is the dial —
       // the label sequence is identical, only fewer durable snapshots.
       val next = Materialize(
         jumpStep(jumpStep(labels)),
-        mode, s"cc_round_$i")
+        s"cc_round_$i")
       labels = next
       // convergence = every edge's endpoints agree on the materialized
       // labels (uniform per component ⟹ neighborMin and the pointer
@@ -1113,22 +1091,19 @@ object Dedup {
     * min doc id of its near-dup component (its own id when it has no
     * near-dups), plus the component size. */
   def dedupClusters(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local,
       localThreshold: Long = 1000L * 1000): DataFrame =
-    dedupClustersUnsorted(s, d, mode, localThreshold).orderBy("doc_id")
+    dedupClustersUnsorted(s, d, localThreshold).orderBy("doc_id")
 
   /** [[dedupClusters]] without the final sort — what dd12's
     * survivor aggregation (another cluster_id shuffle) consumes. */
   def dedupClustersUnsorted(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local,
       localThreshold: Long = 1000L * 1000): DataFrame = {
     // unsorted pair set: label propagation materializes the edges and
     // shuffles them by endpoint — a pre-sort would be a dead exchange
     val pairs = minhashLshPairsUnsorted(Tables.documents(s, d),
-        "doc_id", "text", JaccardThreshold, mode)
+        "doc_id", "text", JaccardThreshold)
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val labels = labelPropagation(pairs, mode = mode,
-      localThreshold = localThreshold)
+    val labels = labelPropagation(pairs, localThreshold = localThreshold)
     val docs = Tables.documents(s, d).select("doc_id")
     val clustered = docs
       .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -1155,12 +1130,11 @@ object Dedup {
     * labels (the dd7 loop); the audit itself is one doc_a-keyed join
     * + one cluster_id aggregation. Clusters surface iff they have a
     * verified pair (singletons have nothing to audit). */
-  def clusterCohesion(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def clusterCohesion(s: SparkSession, d: String): DataFrame = {
     val pairs = minhashLshPairsUnsorted(Tables.documents(s, d),
-      "doc_id", "text", JaccardThreshold, mode)
+      "doc_id", "text", JaccardThreshold)
     val labels = labelPropagation(
-      pairs.select(col("doc_a").as("u"), col("doc_b").as("v")), mode = mode)
+      pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
     val qj = (col("i_size") * 1000000L / col("u_size")).cast("long")
     pairs.select(col("doc_a"), qj.as("qj"))
       .join(labels.select(col("id").as("doc_a"), col("lbl").as("cluster_id")),
@@ -1243,9 +1217,8 @@ object Dedup {
     * O(clusters) table, and the summary columns ride a 1-row
     * broadcast — nothing beyond dd7's own cost. All integers;
     * shares in exact basis points (all-positive long division). */
-  def clusterHistogram(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
-    val per = dedupClustersUnsorted(s, d, mode)
+  def clusterHistogram(s: SparkSession, d: String): DataFrame = {
+    val per = dedupClustersUnsorted(s, d)
       .groupBy("cluster_id")
       .agg(max(col("cluster_size")).as("cluster_size"))
     // O(sizes)-row histogram feeds the summary AND the output — a
@@ -1253,7 +1226,7 @@ object Dedup {
     val hist = Materialize(per.groupBy("cluster_size")
       .agg(count(lit(1)).as("n_clusters"))
       .withColumn("n_docs", col("cluster_size") * col("n_clusters")),
-      mode, "cluster_hist")
+      "cluster_hist")
     val tot = hist.agg(sum(col("n_docs")).as("total_docs"),
       max(col("cluster_size")).as("giant_size"),
       coalesce(sum(when(col("cluster_size") > 1L,
@@ -1321,7 +1294,7 @@ object Dedup {
       .groupBy(length(bin(col("df"))).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_shingles"), sum(col("df")).as("mass"),
         max(col("df")).as("max_df")),
-      Materialize.Local, "df_spectrum")
+      "df_spectrum")
     val tot = hist.agg(sum(col("n_shingles")).as("t_sh"),
       sum(col("mass")).as("t_mass"))
     hist.crossJoin(broadcast(tot))
@@ -1533,20 +1506,17 @@ object Dedup {
     * all-pairs scan — then one codegen'd bit_count(xor) verifies. The
     * signature table is materialized once through [[Materialize]]; the
     * band self-join reads the scan, not the token aggregation twice. */
-  def simhashPairs(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    simhashPairsOf(Tables.documents(s, d), mode)
+  def simhashPairs(s: SparkSession, d: String): DataFrame =
+    simhashPairsOf(Tables.documents(s, d))
 
   def simhashPairsOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local,
       bandBitsOverride: Int = 0): DataFrame = {
     // corpus count, NOT sig count: simhashSigs drops token-less docs,
     // and the oracle derives the identical geometry from count(*) of
-    // documents. Cached per Materialize lifetime (one action, shared
-    // with the other self-sizing builders over the same corpus).
+    // documents.
     val bandBits = if (bandBitsOverride > 0) bandBitsOverride
-      else simhashBandBitsFor(Materialize.cachedCount(docs))
-    val sigs = Materialize(simhashSigs(docs), mode, "simhash_sigs")
+      else simhashBandBitsFor(docs.count())
+    val sigs = Materialize(simhashSigs(docs), "simhash_sigs")
     val bandMask = (1L << bandBits) - 1
     val bandStructs = array((0 until SimHashBands).map { b =>
       struct(lit(b).as("band"),
@@ -1617,25 +1587,22 @@ object Dedup {
     * blocking — including the corpus-count-derived plane count — and
     * dot products fold left-to-right over double-cast vectors, matching
     * DuckDB's list_dot_product evaluation. */
-  def embeddingNearDup(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    embeddingNearDupOf(Tables.embeddings(s, d), mode)
+  def embeddingNearDup(s: SparkSession, d: String): DataFrame =
+    embeddingNearDupOf(Tables.embeddings(s, d))
 
   /** DataFrame-first variant (ScaleProbe feeds replicated corpora). */
-  def embeddingNearDupOf(emb: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    embeddingNearDupUnsortedOf(emb, mode).orderBy("vec_a", "vec_b")
+  def embeddingNearDupOf(emb: DataFrame): DataFrame =
+    embeddingNearDupUnsortedOf(emb).orderBy("vec_a", "vec_b")
 
   /** [[embeddingNearDupOf]] without the final deterministic sort —
     * what derived stages (dd8's label propagation) consume. */
-  def embeddingNearDupUnsortedOf(emb: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
-    val ppb = embBandPlanesFor(Materialize.cachedCount(emb))
+  def embeddingNearDupUnsortedOf(emb: DataFrame): DataFrame = {
+    val ppb = embBandPlanesFor(emb.count())
     val e = Materialize(
       emb
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .withColumn("norm", Similarity.dot(col("v"), col("v"))),
-      mode, "emb_norm")
+      "emb_norm")
     val bandStructs = array((0 until EmbBands).map { t =>
       struct(lit(t).as("t"),
         Similarity.bandBucketCol(col("v"), t, ppb).as("bkt"))
@@ -1862,12 +1829,11 @@ object Dedup {
   def lshRecallAudit(s: SparkSession, d: String): DataFrame =
     lshRecallAuditOf(Tables.documents(s, d))
 
-  def lshRecallAuditOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
-    val truth = shingleIntersections(docs, mode)
+  def lshRecallAuditOf(docs: DataFrame): DataFrame = {
+    val truth = shingleIntersections(docs)
       .withColumn("u_size", col("n_a") + col("n_b") - col("i_size"))
     val cand = minhashPipeline(docs, "doc_id", "text",
-        JaccardThreshold, mode)._2
+        JaccardThreshold)._2
       .select(col("doc_a"), col("doc_b"), lit(1L).as("caught"))
     truth
       .join(cand, Seq("doc_a", "doc_b"), "left")
@@ -1889,13 +1855,11 @@ object Dedup {
     * skew to shield against). All counts integer-exact; the oracle
     * replays the identical rare-first ranking off the same md5-hash
     * total order. */
-  def prefixFilterAudit(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    prefixFilterAuditOf(Tables.documents(s, d), mode)
+  def prefixFilterAudit(s: SparkSession, d: String): DataFrame =
+    prefixFilterAuditOf(Tables.documents(s, d))
 
-  def prefixFilterAuditOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
-    val flat = shingleFlat(docs, mode)
+  def prefixFilterAuditOf(docs: DataFrame): DataFrame = {
+    val flat = shingleFlat(docs)
     val pfx = prefixShingles(flat, JaccardThresholdNum, JaccardThresholdDen)
     def spectrum(t: DataFrame, pre: String): DataFrame =
       t.groupBy("lang", "h").agg(count(lit(1)).as("df"))

@@ -182,7 +182,7 @@ object Eval {
     val cells = labeled
       .groupBy("slice", "actual", "predicted")
       .agg(count(lit(1)).as("n"))
-    val base = Materialize(cells, Materialize.Local, "clf3_cells")
+    val base = Materialize(cells, "clf3_cells")
     val totals = base.groupBy("slice")
       .agg(sum(col("n")).as("n_total"),
         sum(when(col("actual") === col("predicted"), col("n"))
@@ -773,7 +773,7 @@ object Eval {
       .withColumn("bin_gap",
         col("gap_num").cast("double") /
           (lit(50000d) * col("n_bin").cast("double"))),
-      Materialize.Local, "cal_bins")
+      "cal_bins")
     val tot = bins.agg(sum(col("n_bin")).as("n"),
       sum(col("gap_num")).as("ece_num"),
       max(col("bin_gap")).as("mce"))

@@ -27,7 +27,7 @@ object Graph {
   def knnTrianglesOf(emb: DataFrame): DataFrame = {
     val edges = Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "tri_edges")
+      "tri_edges")
     trianglesOf(edges, emb.select(col("vec_id")))
   }
 
@@ -54,7 +54,7 @@ object Graph {
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .distinct(),
-      Materialize.Local, "tri_und")
+      "tri_und")
     val deg = und.select(col("u").as("id"))
       .unionAll(und.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
@@ -66,7 +66,7 @@ object Graph {
         .join(deg.select(col("id").as("v"), col("d").as("dv")), "v")
         .select(when(uFirst, col("u")).otherwise(col("v")).as("a"),
           when(uFirst, col("v")).otherwise(col("u")).as("b")),
-      Materialize.Local, "tri_orient")
+      "tri_orient")
     val wedges = orient
       .join(orient.select(col("a"), col("b").as("c")), "a")
       .where(col("b") =!= col("c"))
@@ -146,7 +146,7 @@ object Graph {
   def knnAssortativityOf(emb: DataFrame): DataFrame =
     assortativityOfEdges(Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "assort_edges"))
+      "assort_edges"))
 
   /** The correlation core over an explicit (src, dst) edge list. */
   def assortativityOfEdges(edges: DataFrame): DataFrame = {
@@ -223,7 +223,7 @@ object Graph {
   def knnReciprocityOf(emb: DataFrame): DataFrame = {
     val edges = Materialize(
       Similarity.knnGraphOf(emb).select("src", "rank", "dst"),
-      Materialize.Local, "recip_edges")
+      "recip_edges")
     // (src, dst) is unique in a top-k list, so the reversed side needs
     // no distinct and the left join cannot multiply rows
     val rev = edges.select(col("dst").as("r_src"), col("src").as("r_dst"))
@@ -272,7 +272,7 @@ object Graph {
   def linkPredictionOf(emb: DataFrame): DataFrame =
     linkScoresOf(Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "lp_edges"))
+      "lp_edges"))
 
   /** The scoring pipeline over an arbitrary (src, dst) arc list —
     * [[linkPredictionOf]] minus the kNN build (the spec's seam). */
@@ -323,7 +323,7 @@ object Graph {
   def kCoreOf(emb: DataFrame): DataFrame = {
     val edges = Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "kcore_edges")
+      "kcore_edges")
     kCorePeel(edges, KCoreK, KCoreRounds)
   }
 
@@ -335,12 +335,12 @@ object Graph {
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .distinct(),
-      Materialize.Local, "kcore_und")
+      "kcore_und")
     val sym = und.select(col("u"), col("v"))
       .unionAll(und.select(col("v").as("u"), col("u").as("v")))
     val nodes0 = Materialize(
       sym.select(col("u").as("vertex")).distinct(),
-      Materialize.Local, "kcore_nodes")
+      "kcore_nodes")
     var alive = nodes0
     val removedParts = Seq.newBuilder[DataFrame]
     var r = 1
@@ -356,7 +356,7 @@ object Graph {
       val rem = Materialize(
         sub.filter(col("deg") < k)
           .select(col("vertex"), lit(r.toLong).as("removed_round")),
-        Materialize.Local, s"kcore_rem_$r")
+        s"kcore_rem_$r")
       removedParts += rem
       // a fixpoint stays fixed: once a round removes nothing, every
       // later round removes nothing — stop paying materialized rounds
@@ -366,7 +366,7 @@ object Graph {
       if (!converged)
         alive = Materialize(
           sub.filter(col("deg") >= k).select("vertex"),
-          Materialize.Local, s"kcore_alive_$r")
+          s"kcore_alive_$r")
       r += 1
     }
     val removed = removedParts.result().reduce(_ unionByName _)
@@ -476,7 +476,7 @@ object Graph {
   def bfsLandmarksOf(emb: DataFrame): DataFrame = {
     val edges = Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "bfs_edges")
+      "bfs_edges")
     bfsOf(edges, emb.select(col("vec_id")), BfsSeedMod, BfsMaxHops)
   }
 
@@ -490,12 +490,12 @@ object Graph {
       .distinct()
     val sym = Materialize(
       und.unionAll(und.select(col("v").as("u"), col("u").as("v"))),
-      Materialize.Local, "bfs_sym")
+      "bfs_sym")
     val state0 = Materialize(
       nodes.filter(col("vec_id") % seedMod === 0L)
         .select(col("vec_id").as("id"), lit(0L).as("dist"),
           col("vec_id").as("seed")),
-      Materialize.Local, "bfs_state0")
+      "bfs_state0")
     // SHELL iteration: a settled node's (dist, seed) never changes (its
     // dist is strictly below any later hop), so each round only the
     // NEWLY reached shell needs computing — candidates from the
@@ -518,7 +518,7 @@ object Graph {
           .groupBy("id")
           .agg(min(col("seed")).as("seed"))
           .select(col("id"), lit(hop.toLong).as("dist"), col("seed")),
-        Materialize.Local, s"bfs_shell_$hop")
+        s"bfs_shell_$hop")
       // an empty shell ⇒ every later frontier is empty — stop. The
       // count is an action on the just-materialized shell (one small
       // count per round instead of two full-state counts).
@@ -602,7 +602,7 @@ object Graph {
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .distinct(),
-      Materialize.Local, "mod_und")
+      "mod_und")
     val deg = und.select(col("u").as("vec_id"))
       .unionAll(und.select(col("v").as("vec_id")))
       .groupBy("vec_id").agg(count(lit(1)).as("deg"))
@@ -695,7 +695,7 @@ object Graph {
   def degreeHistogramOf(emb: DataFrame): DataFrame = {
     val edges = Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "g9_edges")
+      "g9_edges")
     val und = edges.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
@@ -771,7 +771,7 @@ object Graph {
       .groupBy(least(col("lu"), col("lv")).as("label_a"),
         greatest(col("lu"), col("lv")).as("label_b"))
       .agg(count(lit(1)).as("n_edges")),
-      Materialize.Local, "label_mix")
+      "label_mix")
     val tot = mix.agg(sum(col("n_edges")).as("t_edges"))
     mix.crossJoin(broadcast(tot))
       .select(col("label_a"), col("label_b"), col("n_edges"),
@@ -833,19 +833,19 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val edges = Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "spread_edges")
+      "spread_edges")
     val sym = Materialize(
       edges.unionByName(
         edges.select(col("dst").as("src"), col("src").as("dst")))
         .where(col("src") =!= col("dst")).distinct(),
-      Materialize.Local, "spread_sym")
+      "spread_sym")
     var lab = Materialize(
       emb.select(col("vec_id"), col("label"))
         .withColumn("cur",
           when(col("vec_id") % SpreadSeedMod === 0, col("label")))
         .withColumn("decided_round",
           when(col("vec_id") % SpreadSeedMod === 0, lit(0L))),
-      Materialize.Local, "spread_l0")
+      "spread_l0")
     (1 to SpreadRounds).foreach { r =>
       // votes ride the previous round's decision SHELL, not the full
       // label table: a node still undecided entering round r can have
@@ -873,7 +873,7 @@ object Graph {
             coalesce(col("cur"), col("nl")).as("cur"),
             coalesce(col("decided_round"),
               when(col("nl").isNotNull, lit(r.toLong))).as("decided_round")),
-        Materialize.Local, s"spread_l$r")
+        s"spread_l$r")
     }
     lab
       .select(col("vec_id"), col("label"),
@@ -939,7 +939,7 @@ object Graph {
   def landmarkCentralityOf(emb: DataFrame): DataFrame = {
     val edges = Materialize(
       Similarity.knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "g12_edges")
+      "g12_edges")
     landmarkCentralityOfEdges(edges, emb.select(col("vec_id")))
   }
 
@@ -953,13 +953,13 @@ object Graph {
       .distinct()
     val sym = Materialize(
       und.unionAll(und.select(col("v").as("u"), col("u").as("v"))),
-      Materialize.Local, "g12_sym")
+      "g12_sym")
     val seeds = nodes.filter(col("vec_id") % BfsSeedMod === 0L)
       .orderBy("vec_id").limit(CentralityLandmarks)
     val state0 = Materialize(
       seeds.select(col("vec_id").as("id"), col("vec_id").as("seed"),
         lit(0L).as("dist")),
-      Materialize.Local, "g12_state0")
+      "g12_state0")
     // SHELL iteration (the g7 argument per (id, seed) pair): a pair
     // settles at the first hop it appears — min(dist) over the old
     // full-state union IS that first hop — so each round computes only
@@ -978,7 +978,7 @@ object Graph {
           .join(settled.select("id", "seed"), Seq("id", "seed"),
             "left_anti")
           .select(col("id"), col("seed"), lit(hop.toLong).as("dist")),
-        Materialize.Local, s"g12_shell_$hop")
+        s"g12_shell_$hop")
       done = fresh.count() == 0L
       if (!done) {
         settled = settled.unionByName(fresh)

@@ -185,7 +185,7 @@ object Linkage {
   /** [[blockingRecall]] over an explicit customer frame. */
   def blockingRecallOf(cust: DataFrame): DataFrame = {
     val links = Materialize(recordLinkageOf(cust),
-      Materialize.Local, "rl2_links")
+      "rl2_links")
     val truth = cust.select(col("c_custkey").as("clean_id"),
       (col("c_custkey") % 4).as("rule"))
     val found = links.filter(col("same_entity"))

@@ -1,36 +1,39 @@
 package graft.ops
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.filter.AbstractFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialization seam for iterative/multi-read pipelines (MinHash
   * shingle tables, LSH band tables, label-propagation rounds, IVF
   * quantized vectors).
   *
-  * Two lifecycles, chosen per call site by the [[Mode]] parameter:
+  * Two lifecycles, chosen once per session by [[DurableDirKey]]:
   *
-  *   - [[Local]] — `localCheckpoint(eager)`: executor-memory blocks,
+  *   - unset — `localCheckpoint(eager)`: executor-memory blocks,
   *     lineage truncated. Fastest, and correct for a run-once driver
   *     program (Verify/Bench), but NOT fault-tolerant: losing an
   *     executor loses blocks that cannot be recomputed. Single-JVM
-  *     local mode has no executor to lose, so tests/bench default here.
-  *   - [[Storage]] — write parquet to a directory, read it back: the
+  *     local mode has no executor to lose, so tests/bench run here.
+  *   - a directory — write parquet to `<dir>/<name>`, read it back: the
   *     100-TB lifecycle. The intermediate survives executor loss, is
   *     shared across jobs/sessions, and its lifetime is managed
-  *     explicitly (the caller owns the directory). This is what a
+  *     explicitly (the deployment owns the directory). This is what a
   *     production near-dup pipeline does with the hashed-shingle /
   *     signature tables between stages.
   *
-  * Both modes yield a frame whose downstream plan reads a scan, not the
+  * Both yield a frame whose downstream plan reads a scan, not the
   * original lineage — self-joins against it do NOT recompute the
   * upstream (the property every caller here needs).
   *
   * ==Lifecycle contract: ONE query lifecycle per SparkSession at a time==
   *
-  * The seam keeps per-session state (the working-set byte accumulator,
-  * the ratcheted `spark.sql.shuffle.partitions`, the corpus-count
-  * cache), all scoped by [[releaseAll]] — which both restores the
-  * session's static partition count and drops its cached blocks. Two
-  * consequences a consumer must respect:
+  * The seam keeps per-session state (the working-set byte accumulator
+  * and the ratcheted `spark.sql.shuffle.partitions`), all scoped by
+  * [[releaseAll]] — which both restores the session's static partition
+  * count and drops its cached blocks. Two consequences a consumer must
+  * respect:
   *
   *   - '''Call [[releaseAll]] at the end of every query lifecycle.'''
   *     A lifecycle that never releases keeps its widened shuffle
@@ -52,14 +55,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Materialize {
 
-  sealed trait Mode
-
-  /** Executor-local checkpoint; blocks released by [[releaseAll]]. */
-  case object Local extends Mode
-
-  /** Durable parquet persistence under `dir`; each materialization
-    * lands in `dir/<name>`. Caller owns cleanup of the directory. */
-  final case class Storage(dir: String) extends Mode
+  /** Session conf key naming the durable seam directory: set, every
+    * seam writes parquet under it (`--conf` or `-D` sets it without
+    * code); unset, seams are executor-local checkpoints. */
+  val DurableDirKey = "spark.graft.materialize.storageDir"
 
   /** As [[apply]], with a caller-declared working-set factor for the
     * partition ratchet: when the pipeline downstream of this seam
@@ -72,18 +71,19 @@ object Materialize {
     * [[hashJoinIfFits]] read) stay the honest table size. Declare only
     * structural fan-out the plan guarantees; leave 1 when unsure (the
     * ratchet just engages a tier later). */
-  def apply(df: DataFrame, mode: Mode, name: String,
-      workingSetFactor: Int): DataFrame = {
+  def apply(df: DataFrame, name: String, workingSetFactor: Int): DataFrame = {
     require(workingSetFactor >= 1, s"workingSetFactor: $workingSetFactor")
-    applyScaled(df, mode, name, workingSetFactor)
+    applyScaled(df, name, workingSetFactor)
   }
 
-  def apply(df: DataFrame, mode: Mode, name: String): DataFrame =
-    applyScaled(df, mode, name, 1)
+  /** Materializes `df` as the seam `name` (the parquet table name in a
+    * durable session). */
+  def apply(df: DataFrame, name: String): DataFrame =
+    applyScaled(df, name, 1)
 
-  private def applyScaled(df: DataFrame, mode: Mode, name: String,
-      workingSetFactor: Int): DataFrame = mode match {
-    case Local =>
+  private def applyScaled(df: DataFrame, name: String,
+      workingSetFactor: Int): DataFrame = storageDir(df.sparkSession) match {
+    case None =>
       // honest stats at the seam: localCheckpoint preserves the
       // PRE-checkpoint optimizer estimates, which under-count
       // corpus-derived intermediates badly enough that Catalyst
@@ -99,28 +99,37 @@ object Materialize {
       ratchetShufflePartitions(org.apache.spark.sql.graft.Bridge
         .withMeasuredStats(df.localCheckpoint(true)),
         byteScale = workingSetFactor)
-    case Storage(dir) =>
+    case Some(dir) =>
       val path = s"$dir/$name"
       df.write.mode("overwrite").parquet(path)
-      // the overwrite may have replaced a table an earlier cachedCount
-      // read (two Storage-mode pipelines over one dir in a lifecycle):
-      // a count keyed on a path-scan plan would silently describe the
-      // OLD contents. Invalidate the session's entries at the one
-      // point contents can change — conservative (drops unrelated
-      // entries too) but correct; misses re-count from parquet footer
-      // statistics.
-      counts.filterInPlace { case ((s, _), _) => s ne df.sparkSession }
       // the read-back frame's stats are COMPRESSED parquet bytes, while
       // the ratchet rule is calibrated for the uncompressed UnsafeRow
-      // bytes Local mode measures — scale by a typical columnar
-      // expansion so Storage-mode pipelines err over-provisioned (the
-      // safe direction, AQE trims excess), never under
+      // bytes a local checkpoint measures — scale by a typical columnar
+      // expansion so durable pipelines err over-provisioned (the safe
+      // direction, AQE trims excess), never under
       ratchetShufflePartitions(df.sparkSession.read.parquet(path),
         byteScale = ParquetExpansion * workingSetFactor)
   }
 
+  /** The session's durable seam directory, if one is set. */
+  private def storageDir(spark: SparkSession): Option[String] =
+    spark.conf.getOption(DurableDirKey).filter(_.nonEmpty)
+
+  /** Whether this session's seams write durable parquet. */
+  def durable(spark: SparkSession): Boolean = storageDir(spark).nonEmpty
+
+  /** Runs `body` with this session's seams durable under `dir`, then
+    * restores the session's previous setting. */
+  def storingUnder[A](spark: SparkSession, dir: String)(body: => A): A = {
+    val prev = storageDir(spark)
+    spark.conf.set(DurableDirKey, dir)
+    try body
+    finally prev.fold(spark.conf.unset(DurableDirKey))(
+      spark.conf.set(DurableDirKey, _))
+  }
+
   /** Typical parquet→UnsafeRow expansion for the ratchet's
-    * Storage-mode signal (columnar encoding + compression commonly
+    * durable-seam signal (columnar encoding + compression commonly
     * shrinks row data 3–6×; 4 errs high, which AQE coalesce absorbs). */
   val ParquetExpansion = 4
 
@@ -171,6 +180,13 @@ object Materialize {
     * manual fix for. Reset by [[releaseAll]]. */
   private val lifecycleBytes =
     scala.collection.concurrent.TrieMap.empty[SparkSession, BigInt]
+
+  /** Whether the session's current lifecycle materialized any seam
+    * (spec observability: unlike `getPersistentRDDs`, it does not
+    * depend on whether the ContextCleaner already dropped a seam the
+    * result no longer references). */
+  private[graft] def seamed(spark: SparkSession): Boolean =
+    lifecycleBytes.contains(spark)
 
   /** The data-size-derived shuffle-partition rule (the 100× probe's
     * one nonlinearity was per-partition shuffle volume outgrowing the
@@ -263,46 +279,8 @@ object Materialize {
     else df
   }
 
-  /** Corpus-count cache for the self-sizing operators (LSH band/plane
-    * geometry derives from count(*) — [[graft.ops.Dedup]],
-    * [[graft.ops.Similarity]]): one count action per (session,
-    * canonical plan) per Materialize LIFETIME, instead of an action on
-    * every builder invocation. Keyed by the ANALYZED CANONICALIZED
-    * logical plan — the same structural identity Spark's own cache
-    * manager uses — so dd5/dd9/sim3/sim4 over the same corpus in one
-    * lifecycle pay the count once between them.
-    *
-    * Lifetime contract: [[releaseAll]] drops the session's entries
-    * along with its materialized blocks, so the cache never outlives
-    * the query lifecycle — a pipeline that overwrites its input
-    * between queries (MERGE targets, CDC) never reads a stale count.
-    * Cost honesty: for parquet-backed frames the miss is metadata-only
-    * (count pushes to footer statistics); a non-file-backed frame
-    * (e.g. ScaleProbe's replicated corpora) pays one real scan per
-    * lifecycle — the builders are eager at plan-construction time to
-    * that extent. */
-  private val counts = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Long]
-
-  def cachedCount(df: DataFrame): Long = {
-    val plan = df.queryExecution.analyzed
-    // don't cache plans rooted in an already-materialized RDD scan
-    // (localCheckpoint reads): each checkpoint is a FRESH LogicalRDD,
-    // so its entry could never hit again — it would only pin the
-    // checkpointed RDD in this map until releaseAll, defeating
-    // unreachability-based cleanup — and counting a materialized
-    // block scan is cheap anyway
-    if (plan.exists(_.getClass.getSimpleName == "LogicalRDD")) df.count()
-    else counts.getOrElseUpdate((df.sparkSession, plan.canonicalized),
-      df.count())
-  }
-
-  /** Entries currently cached for a session (spec observability). */
-  private[graft] def cachedCountEntries(spark: SparkSession): Int =
-    counts.keys.count(_._1 eq spark)
-
   /** Drop every cached/checkpointed block this session holds: the
-    * explicit end-of-query lifecycle for [[Local]] materializations.
+    * explicit end-of-query lifecycle for local-checkpoint seams.
     *
     * Without this, a harness that runs many LSH-family queries (each
     * materializing shingle/band tables) accumulates storage blocks
@@ -313,12 +291,16 @@ object Materialize {
     *
     * Safe only once results are fully consumed: unpersisting a
     * locally-checkpointed RDD discards data its truncated lineage
-    * cannot recompute. */
+    * cannot recompute. Spark's `RDD.unpersist` warns exactly that once
+    * per such RDD; here it is the intent, so that one message is muted
+    * while the release runs ([[UnpersistWarning]]) and every other log
+    * line still prints. */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    counts.filterInPlace { case ((s, _), _) => s ne spark }
+    withoutUnpersistWarning {
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+    }
     // lifecycle end: un-ratchet the shuffle layout and zero the
     // working-set accumulator (see ratchetShufflePartitions) so the
     // next query re-derives from ITS data instead of inheriting this
@@ -327,4 +309,27 @@ object Materialize {
     staticParts.remove(spark)
       .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
   }
+
+  /** Denies the log event Spark's `RDD.unpersist` writes for a locally
+    * checkpointed RDD ("… cannot be recomputed after unpersisting");
+    * every other event passes to the next filter. */
+  private object UnpersistWarning extends AbstractFilter {
+    override def filter(event: LogEvent): Filter.Result =
+      if (event.getMessage.getFormattedMessage
+          .contains("cannot be recomputed after unpersisting"))
+        Filter.Result.DENY
+      else Filter.Result.NEUTRAL
+  }
+
+  /** Runs `body` with [[UnpersistWarning]] on the root logger config
+    * (where Spark's RDD loggers resolve); a non-log4j2 backend runs it
+    * unfiltered. */
+  private def withoutUnpersistWarning(body: => Unit): Unit =
+    LogManager.getContext(false) match {
+      case ctx: LoggerContext =>
+        val root = ctx.getConfiguration.getRootLogger
+        root.addFilter(UnpersistWarning)
+        try body finally root.removeFilter(UnpersistWarning)
+      case _ => body
+    }
 }

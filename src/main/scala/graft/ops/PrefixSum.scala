@@ -30,18 +30,17 @@ object PrefixSum {
     * non-null (a null would poison every later offset in its
     * partition). Values may be negative. Appends `offset`. */
   def exclusive(df: DataFrame, orderCol: String, valCol: String,
-      partitions: Int,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+      partitions: Int): DataFrame = {
     val ranged = df
       .repartitionByRange(partitions, col(orderCol))
       .withColumn("__pid", spark_partition_id())
     // inclusive local sum, made exclusive by subtracting the row itself:
     // one window, keyed on the partition id -> parallel
     val w = Window.partitionBy("__pid").orderBy(orderCol)
-    // totals + result both read it; compute once (lifecycle per mode)
+    // totals + result both read it; compute once
     val local = Materialize(
       ranged.withColumn("__incl", sum(col(valCol)).over(w)),
-      mode, "prefix_local")
+      "prefix_local")
     // partition totals: O(partitions) rows on the driver. sum(), NOT
     // max(running sum) — the running max diverges from the total the
     // moment a negative value appears, and this is a general utility.

@@ -100,7 +100,7 @@ object Privacy {
     * shifted-cents) frame. */
   private[graft] def generalizationLadderOf(qi: DataFrame): DataFrame = {
     val base = graft.ops.Materialize(qi,
-      graft.ops.Materialize.Local, "priv2_base")
+      "priv2_base")
     val rungs = Seq(0L -> Some(100000L), 1L -> Some(500000L),
       2L -> Some(2500000L), 3L -> None)
     rungs.map { case (level, width) =>
@@ -198,7 +198,7 @@ object Privacy {
     tClosenessFromCells(graft.ops.Materialize(
       qi.groupBy("segment", "nation", "band")
         .agg(count(lit(1)).as("c_gv")),
-      graft.ops.Materialize.Local, "priv3_cells"))
+      "priv3_cells"))
 
   /** [[tCloseness]] from an already-aggregated (segment, nation, band,
     * c_gv) cell table — the arithmetic core, factored so the overflow

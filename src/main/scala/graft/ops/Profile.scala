@@ -723,8 +723,7 @@ object Profile {
     ksDriftOf(Tables.events(s, d))
 
   /** [[ksDrift]] over an explicit events frame. */
-  def ksDriftOf(events: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def ksDriftOf(events: DataFrame): DataFrame = {
     val ev = events
       .filter(col("ts").isNotNull && col("value").isNotNull)
       .select(
@@ -740,7 +739,7 @@ object Profile {
       .groupBy("bucket")
       .agg(sum(when(col("first_half"), 1L).otherwise(0L)).as("o_first"),
         sum(when(col("first_half"), 0L).otherwise(1L)).as("o_second")),
-      mode, "ks_buckets")
+      "ks_buckets")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy("bucket")
       .rowsBetween(
@@ -912,10 +911,10 @@ object Profile {
   /** [[entropyProfile]] over an explicit events frame. */
   def entropyProfileOf(events: DataFrame): DataFrame = {
     // every profiled projection coalesces nulls into their own bucket,
-    // so N is the plain row count for all four columns — one cached
-    // count action (metadata-cheap on parquet, cached per Materialize
-    // lifetime) turns the surprisal into a pure literal projection
-    val n = Materialize.cachedCount(events)
+    // so N is the plain row count for all four columns — one count
+    // action (metadata-cheap on parquet) turns the surprisal into a
+    // pure literal projection
+    val n = events.count()
     entropyCols.map { case (label, sparkExpr, _) =>
       val sbits = length(bin(expr(s"$n div nv"))).cast("long") - 1L
       events
@@ -1026,8 +1025,7 @@ object Profile {
     idTimeAlignmentOf(Tables.events(s, d))
 
   /** [[idTimeAlignment]] over an explicit events frame. */
-  def idTimeAlignmentOf(events: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def idTimeAlignmentOf(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val buckets = Materialize(events
       .filter(col("event_id").isNotNull && col("ts").isNotNull)
@@ -1036,7 +1034,7 @@ object Profile {
         min(unix_timestamp(date_trunc("second", col("ts"))))
           .as("ts_min_sec"),
         max(unix_timestamp(date_trunc("second", col("ts"))))
-          .as("ts_max_sec")), mode, "idtime_buckets")
+          .as("ts_max_sec")), "idtime_buckets")
     val w = Window.orderBy("bucket")
     val flagged = buckets
       .withColumn("prev_max_sec", lag(col("ts_max_sec"), 1).over(w))
@@ -1150,10 +1148,10 @@ object Profile {
     * a reviewer actually looks at when entropy collapses ("which
     * value is eating the column"). Rank is total-ordered
     * (count DESC, value ASC) so ties are deterministic; shares use
-    * the same cachedCount-literal N as dq8 (one action, per-lifetime
-    * cache). Scale shape: the rank window runs over the VALUE-grouped
-    * aggregate (bounded by each column's domain, not rows), and the
-    * rank ≤ k predicate collapses to a distributed
+    * the same count-literal N as dq8 (one action). Scale shape: the
+    * rank window runs over the VALUE-grouped aggregate (bounded by
+    * each column's domain, not rows), and the rank ≤ k predicate
+    * collapses to a distributed
     * TakeOrderedAndProject(limit=k) below the window — per-partition
     * top-k then a k-row merge, so no task ever sorts more than k rows
     * (PlanSpec-gated). */
@@ -1163,7 +1161,7 @@ object Profile {
   /** [[topValues]] over an explicit events frame. */
   def topValuesOf(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val n = Materialize.cachedCount(events)
+    val n = events.count()
     entropyCols.map { case (label, sparkExpr, _) =>
       val w = Window.partitionBy(lit(1))
         .orderBy(col("nv").desc, col("v").asc)

@@ -172,7 +172,7 @@ object Reconcile {
       Tables.orders(s, d).select(col("o_orderkey").as("key"),
         Functions.cents(col("o_totalprice")).as("v"),
         Functions.md5Hash60(col("o_orderkey").cast("string"), 21).as("h")),
-      Materialize.Local, "rc3_base")
+      "rc3_base")
     // integer div, NOT Column./ (double division drifts above 2⁵³)
     val d1 = expr("h % 10").as("dg")
     val d2 = expr("(h div 10) % 10").as("dg")

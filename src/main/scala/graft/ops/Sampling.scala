@@ -72,7 +72,7 @@ object Sampling {
     // seam stays — it is also what carries the sf10 194→114 s win.
     val pos = Materialize(lineitem
       .select(col("l_suppkey"), col("l_partkey")).distinct(),
-      Materialize.Local, "smp3_positives", NumDraws + 1)
+      "smp3_positives", NumDraws + 1)
     // part keys are contiguous 0..max (TESTDATA generator); the modulus
     // is max+1 so every draw lands on a real part
     val pMax = part.agg((max(col("p_partkey")) + 1L).as("p"))
@@ -302,7 +302,7 @@ object Sampling {
       .withColumn("split",
         when(col("bucket") < GroupSplitTrainBuckets, "train")
           .otherwise("heldout")),
-      Materialize.Local, "grouped_split")
+      "grouped_split")
     val tot = per.agg(sum(col("n_docs")).as("total_docs"))
     per.crossJoin(broadcast(tot))
       .withColumn("docs_share_bp", expr("(10000 * n_docs) div total_docs"))
@@ -414,7 +414,7 @@ object Sampling {
       .groupBy(pmod(md5Hash60(col("doc_id").cast("string"), 17),
         lit(KFolds)).as("fold"), col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars")),
-      Materialize.Local, "kfold_cells")
+      "kfold_cells")
     val foldTot = cell.groupBy("fold")
       .agg(sum(col("n_docs")).as("fold_docs"))
     val langTot = cell.groupBy("lang")
@@ -496,7 +496,7 @@ object Sampling {
   def temperatureMixOf(docs: DataFrame): DataFrame = {
     val counts = graft.ops.Materialize(
       docs.groupBy("lang").agg(count(lit(1)).as("n")),
-      graft.ops.Materialize.Local, "smp6_counts")
+      "smp6_counts")
     // quota table: all integer arithmetic over the ≤ langs-row frame
     val weighted = counts
       .withColumn("w", floor(sqrt(col("n"))).cast("long"))
@@ -583,7 +583,7 @@ object Sampling {
         .select(col("user_id"),
           datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
             .cast("long").as("day")),
-      Materialize.Local, "smp7_base")
+      "smp7_base")
     val bounds = base.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val assigned = Materialize(
       base.crossJoin(broadcast(bounds))
@@ -593,13 +593,13 @@ object Sampling {
           when(col("day") < col("cut"), "train")
             .when(col("day") < col("cut") + EmbargoDays, "embargo")
             .otherwise("test")),
-      Materialize.Local, "smp7_assigned")
+      "smp7_assigned")
     val perUser = Materialize(
       assigned.groupBy("user_id")
         .agg(sum(when(col("split") === "train", 1L).otherwise(0L)).as("nt"),
           sum(when(col("split") === "embargo", 1L).otherwise(0L)).as("ne"),
           sum(when(col("split") === "test", 1L).otherwise(0L)).as("ns")),
-      Materialize.Local, "smp7_users")
+      "smp7_users")
     val stats = assigned.groupBy("split")
       .agg(count(lit(1)).as("n_events"),
         min(col("day")).as("first_day"), max(col("day")).as("last_day"))

@@ -196,16 +196,14 @@ object Similarity {
     * corpus side is a PRE-BUILT banded index (lay-family bucket
     * layout) and queries stream against it — the shape this operator
     * rehearses. */
-  def rangeSearch(s: SparkSession, d: String,
-      mode: graft.ops.Materialize.Mode = graft.ops.Materialize.Local): DataFrame =
-    rangeSearchOf(Tables.embeddings(s, d), mode)
+  def rangeSearch(s: SparkSession, d: String): DataFrame =
+    rangeSearchOf(Tables.embeddings(s, d))
 
-  def rangeSearchOf(emb: DataFrame,
-      mode: graft.ops.Materialize.Mode = graft.ops.Materialize.Local): DataFrame = {
+  def rangeSearchOf(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ppb = Dedup.embBandPlanesFor(Materialize.cachedCount(emb))
+    val ppb = Dedup.embBandPlanesFor(emb.count())
     val e = Materialize(embDoubleOf(emb).select("vec_id", "v", "norm"),
-      mode, "range_emb")
+      "range_emb")
     val bandStructs = array((0 until Dedup.EmbBands).map { t =>
       struct(lit(t).as("t"), bandBucketCol(col("v"), t, ppb).as("bkt"))
     }: _*)
@@ -229,7 +227,7 @@ object Similarity {
         .withColumn("cos",
           dot(col("qv"), col("cv")) / (sqrt(col("qnorm")) * sqrt(col("cnorm"))))
         .select("query_id", "vec_id", "cos"),
-      mode, "range_scored")
+      "range_scored")
     val stats = scored.groupBy("query_id").agg(
       count(lit(1)).as("n_candidates"),
       sum(when(col("cos") >= RangeTau, 1L).otherwise(0L)).as("n_matches"))
@@ -321,12 +319,10 @@ object Similarity {
   def knnGraphOf(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = emb.sparkSession
-    // one count action sizes the geometry, cached per Materialize
-    // lifetime ([[Materialize.cachedCount]]) and shared with the IVF
-    // trainer's sample-stride count over the same corpus. Metadata-only
-    // for parquet-backed frames; a generated frame pays one real scan
-    // per lifecycle — the builder is eager to that extent.
-    val planes = planesFor(Materialize.cachedCount(emb))
+    // one count action sizes the geometry. Metadata-only for
+    // parquet-backed frames; a generated frame pays one real scan, so
+    // building the graph is eager to that extent.
+    val planes = planesFor(emb.count())
     val e = embDoubleOf(emb).withColumn("bucket", bucketCol(col("v"), planes))
     val masks = lit(0) +: (0 until planes).map(p => lit(1 << p))
     val a = e.select(col("vec_id").as("src"), col("v").as("av"),
@@ -446,16 +442,15 @@ object Similarity {
     * the sampled centroids stays the same exact expression
     * ([[assignCells]]). */
   def trainedCentroidsSampled(qt: DataFrame, idCol: String,
-      trainCap: Long,
-      mode: Materialize.Mode = Materialize.Local): Seq[Centroid] = {
-    val n = Materialize.cachedCount(qt)
+      trainCap: Long): Seq[Centroid] = {
+    val n = qt.count()
     val stride = math.max(1L, (n + trainCap - 1) / trainCap)
     val train = Materialize(
       qt.filter(md5Hash60(col(idCol).cast("string"), IvfSampleSeed)
           % lit(stride) === 0)
         .orderBy(col(idCol)).limit(
           math.min(trainCap, Int.MaxValue.toLong).toInt),
-      mode, "ivf_train")
+      "ivf_train")
     var cents: Seq[Centroid] = train
       .orderBy(col(idCol)).limit(IvfCells)
       .select(col(idCol), col("qv")).collect()
@@ -481,13 +476,11 @@ object Similarity {
     * touches nprobe/ncells of the data; training is a handful of
     * broadcast-out/aggregate-back rounds, the MLlib k-means shape. */
   def ivfTopK(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local,
       ncells: Int = IvfCells, nprobe: Int = IvfProbes,
       trainCap: Long = 0L): DataFrame =
-    ivfTopKOf(Tables.embeddings(s, d), mode, ncells, nprobe, trainCap)
+    ivfTopKOf(Tables.embeddings(s, d), ncells, nprobe, trainCap)
 
   def ivfTopKOf(emb: DataFrame,
-      mode: Materialize.Mode = Materialize.Local,
       ncells: Int = IvfCells, nprobe: Int = IvfProbes,
       trainCap: Long = 0L): DataFrame = {
     val e = embDoubleOf(emb)
@@ -495,9 +488,9 @@ object Similarity {
       e.select(col("vec_id"), quantizeCol(col("v")).as("qv"))
         .withColumn("qvd", col("qv").cast("array<double>"))
         .withColumn("a2", dot(col("qvd"), col("qvd"))),
-      mode, "ivf_quantized")
+      "ivf_quantized")
     val cents: Seq[Centroid] =
-      if (trainCap > 0) trainedCentroidsSampled(qt, "vec_id", trainCap, mode)
+      if (trainCap > 0) trainedCentroidsSampled(qt, "vec_id", trainCap)
       else {
         var cs: Seq[Centroid] = qt.filter(col("vec_id") < ncells)
           .select(col("vec_id"), col("qv")).collect()
@@ -700,8 +693,7 @@ object Similarity {
 
   def knnPagerankOf(emb: DataFrame, iters: Int = PrIters): DataFrame =
     pagerankOf(
-      Materialize(knnGraphOf(emb).select("src", "dst"),
-        Materialize.Local, "pr_edges"),
+      Materialize(knnGraphOf(emb).select("src", "dst"), "pr_edges"),
       emb.select("vec_id"), iters)
 
   /** The damped floor-integer power iteration over an explicit edge
@@ -709,32 +701,42 @@ object Similarity {
     * spec-testable against hand-computed integer ranks. */
   def pagerankOf(edges: DataFrame, nodes: DataFrame,
       iters: Int): DataFrame = {
-    // the degree-annotated edge list is round-invariant: materialize it
-    // ONCE so every round's contribution join reads a checkpoint
-    // (already src-partitioned from the degree aggregate — the join
-    // reuses that layout) instead of re-running the degree groupBy +
-    // join per round
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val ed = Materialize(edges.join(deg, "src"),
-      Materialize.Local, "pr_edges_deg")
+    val ed = degreeEdges(edges, "pr_edges_deg")
     // the node universe is read by every round's left join — one scan,
     // not one per round
-    val nd = Materialize(nodes, Materialize.Local, "pr_nodes")
+    val nd = Materialize(nodes, "pr_nodes")
     var ranks = nd.withColumn("r", lit(PrScale))
-    for (i <- 0 until iters) {
-      val contrib = ed
-        .join(ranks.withColumnRenamed("vec_id", "src"), "src")
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("m"))
-      ranks = Materialize(
-        nd
-          .join(contrib.withColumnRenamed("dst", "vec_id"), Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            (lit(PrScale * 15 / 100) +
-              expr("(85 * coalesce(m, CAST(0 AS BIGINT))) div 100")).as("r")),
-        Materialize.Local, s"pr_round_$i")
-    }
+    for (i <- 0 until iters)
+      ranks = pagerankRound(ed, nd, ranks, s"pr_round_$i")
     ranks.select(col("vec_id"), col("r").as("pagerank")).orderBy("vec_id")
+  }
+
+  /** The round-invariant degree-annotated edge list (src, dst, d),
+    * materialized ONCE so every round's contribution join reads a
+    * checkpoint (already src-partitioned from the degree aggregate —
+    * the join reuses that layout) instead of re-running the degree
+    * groupBy + join per round. */
+  private def degreeEdges(edges: DataFrame, name: String): DataFrame = {
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
+    Materialize(edges.join(deg, "src"), name)
+  }
+
+  /** One damped floor-integer round shared by g1 and g13: ranks
+    * (vec_id, r) → the next round's ranks over node set `nd`,
+    * materialized as `name` so lineage stays bounded. */
+  private def pagerankRound(ed: DataFrame, nd: DataFrame, ranks: DataFrame,
+      name: String): DataFrame = {
+    val contrib = ed
+      .join(ranks.withColumnRenamed("vec_id", "src"), "src")
+      .select(col("dst"), expr("r div d").as("c"))
+      .groupBy("dst").agg(sum(col("c")).as("m"))
+    Materialize(
+      nd
+        .join(contrib.withColumnRenamed("dst", "vec_id"), Seq("vec_id"), "left")
+        .select(col("vec_id"),
+          (lit(PrScale * 15 / 100) +
+            expr("(85 * coalesce(m, CAST(0 AS BIGINT))) div 100")).as("r")),
+      name)
   }
 
   /** DuckDB replay of g1: the sim4 edge CTE, the same floor-integer
@@ -786,38 +788,21 @@ object Similarity {
   def pagerankResiduals(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val edges = Materialize(knnGraphOf(emb).select("src", "dst"),
-      Materialize.Local, "g13_edges")
+      "g13_edges")
     pagerankResidualsOf(edges, emb.select("vec_id"), PrIters)
   }
 
   /** [[pagerankResiduals]] over an explicit edge list. */
   def pagerankResidualsOf(edges: DataFrame, nodes: DataFrame,
       iters: Int): DataFrame = {
-    // round-invariant degree-annotated edges materialize once (see
-    // pagerankOf) — g13 runs the same rounds plus a per-round stats
-    // join, so the per-round degree rebuild cost 5× here too
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val ed = Materialize(edges.join(deg, "src"),
-      Materialize.Local, "g13_edges_deg")
+    val ed = degreeEdges(edges, "g13_edges_deg")
     // node universe: one scan for all rounds (round 0 IS the node set
     // plus a literal, so its checkpoint serves as both)
     var ranks = Materialize(nodes.withColumn("r", lit(PrScale)),
-      Materialize.Local, "g13_round_0")
+      "g13_round_0")
     val nd = ranks.select("vec_id")
     val stats = (1 to iters).map { i =>
-      val contrib = ed
-        .join(ranks.withColumnRenamed("vec_id", "src"), "src")
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("m"))
-      val next = Materialize(
-        nd
-          .join(contrib.withColumnRenamed("dst", "vec_id"),
-            Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            (lit(PrScale * 15 / 100) +
-              expr("(85 * coalesce(m, CAST(0 AS BIGINT))) div 100"))
-              .as("r")),
-        Materialize.Local, s"g13_round_$i")
+      val next = pagerankRound(ed, nd, ranks, s"g13_round_$i")
       val st = next
         .join(ranks.select(col("vec_id"), col("r").as("rp")), "vec_id")
         .agg(sum(abs(col("r") - col("rp"))).as("l1_residual"),
@@ -1106,16 +1091,14 @@ object Similarity {
     * back rounds; encoding is one codegen projection per vector; the
     * ADC score touches only the PqSub code columns + the broadcast
     * codebooks — candidate scoring never reads the raw vectors. */
-  def pqTopK(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    pqTopKOf(Tables.embeddings(s, d), mode)
+  def pqTopK(s: SparkSession, d: String): DataFrame =
+    pqTopKOf(Tables.embeddings(s, d))
 
-  def pqTopKOf(emb: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def pqTopKOf(emb: DataFrame): DataFrame = {
     val e = embDoubleOf(emb)
     val qtFull = Materialize(
       e.select(col("vec_id"), quantizeCol(col("v")).as("qv")),
-      mode, "pq_quantized")
+      "pq_quantized")
     def subCols(m: Int): (Column, Column) = {
       val qvd = slice(col("qv"), m * PqSubDim + 1, PqSubDim)
         .cast("array<double>")
@@ -1128,7 +1111,7 @@ object Similarity {
           slice(col("qv"), m * PqSubDim + 1, PqSubDim).as("qv"))
           .withColumn("qvd", col("qv").cast("array<double>"))
           .withColumn("a2", dot(col("qvd"), col("qvd"))),
-        mode, s"pq_sub$m")
+        s"pq_sub$m")
       var cs: Seq[Centroid] = sub.filter(col("vec_id") < PqCodes)
         .select(col("vec_id"), col("qv")).collect()
         .map(r => Centroid(r.getLong(0).toInt,
@@ -1326,8 +1309,7 @@ object Similarity {
     centroidDriftOf(Tables.embeddings(s, d))
 
   /** [[centroidDrift]] over an explicit embeddings frame. */
-  def centroidDriftOf(emb: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def centroidDriftOf(emb: DataFrame): DataFrame = {
     val cent = Materialize(
       emb
         .select(col("label"), pmod(col("vec_id"), lit(2L)).as("half"),
@@ -1341,7 +1323,7 @@ object Similarity {
         .agg(max(col("n")).as("n_vecs"),
           transform(sort_array(collect_list(struct(col("dim"), col("sq")))),
             e => e.getField("sq").cast("double")).as("cv")),
-      mode, "centroid_halves")
+      "centroid_halves")
     val a = cent.filter(col("half") === 0L)
       .select(col("label"), col("n_vecs").as("n_a"), col("cv").as("cva"))
     val b = cent.filter(col("half") === 1L)
@@ -1442,7 +1424,7 @@ object Similarity {
   def truncationAuditOf(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val edges = Materialize(knnGraphOf(emb),
-      Materialize.Local, "sim12_edges")
+      "sim12_edges")
     val h = Materialize.hashJoinIfFits(
       embDoubleOf(emb)
         .withColumn("vh", slice(col("v"), 1, TruncDims))

@@ -118,7 +118,7 @@ object Sketch {
       .distinct()
     val fineKeys = Seq("source", "lang")
     val regs = Materialize(
-      registersOf(sh, fineKeys), Materialize.Local, "hll2_regs")
+      registersOf(sh, fineKeys), "hll2_regs")
     val fine = estimateFromRegisters(regs, fineKeys)
       .withColumn("level", lit(2))
     val bySource = estimateFromRegisters(
@@ -347,15 +347,14 @@ object Sketch {
   def bloomDecontaminate(s: SparkSession, d: String): DataFrame =
     bloomDecontaminateOf(Tables.documents(s, d))
 
-  def bloomDecontaminateOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def bloomDecontaminateOf(docs: DataFrame): DataFrame = {
     import graft.ops.TextStats.ContamStride
     // materialized ONCE: three consumers (bitmap build, exact broadcast
     // set, probe stream) would otherwise each re-run the corpus scan +
     // shingle explode — the dd-family's shingle-table discipline
     val sh = Materialize(
       docs.select(col("doc_id"), explode(shingles(col("text"), 3)).as("sh")),
-      mode, "bloom_shingles")
+      "bloom_shingles")
     val evalSh = sh.filter(col("doc_id") % ContamStride === 0)
       .select("sh").distinct()
     val bloom = bloomTable(evalSh)
@@ -633,7 +632,7 @@ object Sketch {
         .select(col("source"), md5Hash60(col("sh"), KmvSeed).as("h"))
         .distinct()
         .withColumn("bkt", shiftright(col("h"), HllHashBits - KmvBucketBits)),
-      Materialize.Local, "kmv_hashes")
+      "kmv_hashes")
     // per-source cutoff bucket: smallest prefix of buckets holding ≥ k
     // hashes. The count table is O(sources · 2^bits) rows; the window
     // rides it, and the cutoff broadcasts back — never a driver action.
@@ -774,7 +773,7 @@ object Sketch {
         .withColumn("h", md5Hash60(col("uid"), KmvSeed))
         .withColumn("bkt",
           shiftright(col("h"), HllHashBits - KmvBucketBits)),
-      Materialize.Local, "inc4_base")
+      "inc4_base")
     val days = base.select("day").distinct()
     val firstSeen = base.groupBy("uid").agg(min(col("day")).as("fday"))
     val newPerDay = firstSeen.groupBy(col("fday").as("day"))

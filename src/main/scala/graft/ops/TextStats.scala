@@ -688,8 +688,7 @@ object TextStats {
     * one keyed aggregation); the eval shingle set is benchmark-sized by
     * nature (MBs against 100 TB) and BROADCASTS — contamination
     * scoring must never shuffle the corpus against the eval set. */
-  def contaminationScore(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def contaminationScore(s: SparkSession, d: String): DataFrame = {
     // materialized: the eval-set derivation and the corpus probe both
     // read this — unmaterialized, the scan + explode + md5 run twice
     val sh = Materialize(
@@ -697,7 +696,7 @@ object TextStats {
         .select(col("doc_id"), explode(shingles(col("text"), 3)).as("sh"))
         .withColumn("h",
           graft.functions.Functions.md5Hash60(col("sh"), ContamSeed)),
-      mode, "contam_shingles")
+      "contam_shingles")
     val evalSet = sh.filter(col("doc_id") % ContamStride === 0)
       .select("h").distinct().withColumn("m", lit(1L))
     sh.join(broadcast(evalSet), Seq("h"), "left")
@@ -1343,7 +1342,7 @@ object TextStats {
     val tris =
       if (org.apache.spark.sql.graft.Bridge.rootSizeInBytes(docs)
           <= SurprisalStoreMaxScanBytes)
-        Materialize(trisBase, Materialize.Local, "tx23_tris")
+        Materialize(trisBase, "tx23_tris")
       else trisBase
     // the tx44 model trick: only the charset³-BOUNDED model goes
     // through the seam. Its MEASURED (small) stats let the scoring
@@ -1355,7 +1354,7 @@ object TextStats {
     // (full-Unicode charset³) the measured stats plan a keyed join
     // with an honest build side — never a corpus broadcast.
     val cnt = Materialize(tris.groupBy("tri").agg(count(lit(1)).as("cnt")),
-      Materialize.Local, "tx23_model")
+      "tx23_model")
     val total = cnt.agg(length(bin(sum(col("cnt")))).as("lbits"))
     val scored = tris.join(cnt, "tri")
       .crossJoin(broadcast(total))
@@ -1397,8 +1396,7 @@ object TextStats {
       |FROM documents d LEFT JOIN sc USING (doc_id)
       |ORDER BY d.doc_id""".stripMargin
 
-  def sourceOverlapOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def sourceOverlapOf(docs: DataFrame): DataFrame = {
     // materialize the per-source distinct shingle table: three
     // consumers read it (both self-join sides + the size aggregate),
     // and each would otherwise recompute the corpus-wide explode +
@@ -1407,7 +1405,7 @@ object TextStats {
       .select(col("source"), explode(shingles(col("text"), 3)).as("sh"))
       .select(col("source"),
         graft.functions.Functions.md5Hash60(col("sh"), 0).as("h"))
-      .distinct(), mode, "source_shingles")
+      .distinct(), "source_shingles")
     val sizes = flat.groupBy("source").agg(count(lit(1)).as("n"))
     val shared = flat.toDF("source_a", "h")
       .join(flat.toDF("source_b", "h"), Seq("h"))
@@ -1789,7 +1787,7 @@ object TextStats {
       docs.select(col("source"), col("text")).withColumn("i", explode(idxs))
         .select(col("source"), col("text").substr(col("i"), lit(3)).as("tri"))
         .groupBy("source", "tri").agg(count(lit(1)).as("c")),
-      Materialize.Local, "tx32_srccnt")
+      "tx32_srccnt")
     val srcTot = srcCnt.groupBy("source").agg(sum(col("c")).as("t_s"))
     val pool = srcCnt.groupBy("tri").agg(sum(col("c")).as("cc"))
     val tot = pool.agg(length(bin(sum(col("cc")))).as("t_bits"))
@@ -2212,10 +2210,10 @@ object TextStats {
           slice(col("t"), lit(1), size(col("t")) - 1).as("prev"),
           slice(col("t"), lit(2), size(col("t")) - 1).as("w"))).as("p"))
         .select(col("doc_id"), col("p.prev").as("prev"), col("p.w").as("w")),
-      Materialize.Local, "tx41_pairs")
+      "tx41_pairs")
     val c2 = Materialize(
       pairs.groupBy("prev", "w").agg(count(lit(1)).as("c2")),
-      Materialize.Local, "tx41_c2")
+      "tx41_c2")
     val c1 = c2.groupBy("prev").agg(sum(col("c2")).as("c1"))
     val scored = pairs
       .join(c2, Seq("prev", "w"))
@@ -2542,18 +2540,16 @@ object TextStats {
     * The n-gram explode uses the imperative ALL-occurrences expression
     * ([[graft.expressions.WordNGrams.ngramsAll]]) — same single-pass
     * codegen-friendly shape as tx4's distinct shingles. */
-  def gopherRepetition(s: SparkSession, d: String,
-      mode: Materialize.Mode = Materialize.Local): DataFrame =
-    gopherRepetitionOf(Tables.documents(s, d), mode)
+  def gopherRepetition(s: SparkSession, d: String): DataFrame =
+    gopherRepetitionOf(Tables.documents(s, d))
 
-  def gopherRepetitionOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def gopherRepetitionOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = Materialize(
       docs.filter(col("text").isNotNull)
         .select(col("doc_id"), col("text"),
           length(col("text")).cast("long").as("n_chars")),
-      mode, "gopher_rep_base")
+      "gopher_rep_base")
     val lc = base
       .select(col("doc_id"), explode(split(col("text"), "\n", -1)).as("line"))
       .groupBy("doc_id", "line").agg(count(lit(1)).as("cnt"))
@@ -2769,8 +2765,7 @@ object TextStats {
   def refLmFilter(s: SparkSession, d: String): DataFrame =
     refLmFilterOf(Tables.documents(s, d))
 
-  def refLmFilterOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def refLmFilterOf(docs: DataFrame): DataFrame = {
     val base = docs.filter(col("text").isNotNull && col("source").isNotNull)
     val toks = base
       .select(col("doc_id"), col("source"),
@@ -2780,7 +2775,7 @@ object TextStats {
     val model = Materialize(
       toks.join(broadcast(refSrc), col("source") === col("ref_source"))
         .groupBy("tok").agg(count(lit(1)).as("cnt")),
-      mode, "tx43_model")
+      "tx43_model")
     val totBits = model
       .agg(length(bin(coalesce(sum(col("cnt")), lit(0L)))).cast("long")
         .as("nbits"))
@@ -2875,8 +2870,7 @@ object TextStats {
   def backoffLmFilter(s: SparkSession, d: String): DataFrame =
     backoffLmFilterOf(Tables.documents(s, d))
 
-  def backoffLmFilterOf(docs: DataFrame,
-      mode: Materialize.Mode = Materialize.Local): DataFrame = {
+  def backoffLmFilterOf(docs: DataFrame): DataFrame = {
     val base = docs.filter(col("text").isNotNull && col("source").isNotNull)
     val toks = words(col("text"))
     // the corpus-scale pair stream is deliberately NOT materialized
@@ -2896,12 +2890,12 @@ object TextStats {
     val big = Materialize(
       pairs.join(broadcast(refSrc), col("source") === col("ref_source"))
         .groupBy("prev", "w").agg(count(lit(1)).as("c2")),
-      mode, "tx44_big")
+      "tx44_big")
     // pre-join the prev-marginal onto the bigram table (vocab-sized
     // join, shared key) and re-materialize so the scoring join sees
     // MEASURED stats for the combined model — see the scaladoc
     val c1 = big.groupBy("prev").agg(sum(col("c2")).as("c1"))
-    val model = Materialize(big.join(c1, Seq("prev")), mode, "tx44_model")
+    val model = Materialize(big.join(c1, Seq("prev")), "tx44_model")
     val cu = big.groupBy("w").agg(sum(col("c2")).as("c_u"))
     val tot = big.agg(
       length(bin(coalesce(sum(col("c2")), lit(0L)))).cast("long").as("nbits"))

@@ -9,7 +9,8 @@ import graft.ops.{Dedup, Materialize, Similarity}
 /** The persistence seam: every LSH-family operator must produce
   * identical results whether its intermediates live as executor-local
   * checkpoints (run-once driver shape) or as durable parquet tables
-  * (the fault-tolerant warehouse lifecycle). */
+  * under the session's storage directory (the fault-tolerant warehouse
+  * lifecycle). */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
   val sf = GraftSpark.sf
@@ -20,7 +21,8 @@ class MaterializeSpec extends AnyFunSuite {
   test("minhash LSH pairs: storage-mode intermediates == local-checkpoint mode, files on disk") {
     val dir = Files.createTempDirectory("graft_mat").toString
     val local = rows(Dedup.minhashLshQuery(spark, sf))
-    val stored = rows(Dedup.minhashLshQuery(spark, sf, Materialize.Storage(dir)))
+    val stored = Materialize.storingUnder(spark, dir)(
+      rows(Dedup.minhashLshQuery(spark, sf)))
     assert(stored == local)
     // the shingle and band tables really were persisted as readable parquet
     for (name <- Seq("minhash_shingles", "minhash_bands")) {
@@ -32,7 +34,8 @@ class MaterializeSpec extends AnyFunSuite {
   test("n-gram Jaccard: storage mode == local mode") {
     val dir = Files.createTempDirectory("graft_mat").toString
     val local = rows(Dedup.ngramJaccardPairs(spark, sf))
-    val stored = rows(Dedup.ngramJaccardPairs(spark, sf, Materialize.Storage(dir)))
+    val stored = Materialize.storingUnder(spark, dir)(
+      rows(Dedup.ngramJaccardPairs(spark, sf)))
     assert(stored == local)
     assert(spark.read.parquet(s"$dir/jaccard_shingles").count() > 0)
   }
@@ -41,13 +44,13 @@ class MaterializeSpec extends AnyFunSuite {
     import graft.ops.{Sketch, TextStats}
     val dir = Files.createTempDirectory("graft_mat").toString
     val localB = rows(Sketch.bloomDecontaminateOf(Tables.documents(spark, sf)))
-    val storedB = rows(Sketch.bloomDecontaminateOf(
-      Tables.documents(spark, sf), Materialize.Storage(dir)))
+    val storedB = Materialize.storingUnder(spark, dir)(
+      rows(Sketch.bloomDecontaminateOf(Tables.documents(spark, sf))))
     assert(storedB == localB)
     assert(spark.read.parquet(s"$dir/bloom_shingles").count() > 0)
     val localC = rows(TextStats.contaminationScore(spark, sf))
-    val storedC = rows(TextStats.contaminationScore(spark, sf,
-      Materialize.Storage(dir)))
+    val storedC = Materialize.storingUnder(spark, dir)(
+      rows(TextStats.contaminationScore(spark, sf)))
     assert(storedC == localC)
     assert(spark.read.parquet(s"$dir/contam_shingles").count() > 0)
   }
@@ -57,8 +60,8 @@ class MaterializeSpec extends AnyFunSuite {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("u", "v")
     val dir = Files.createTempDirectory("graft_mat").toString
     val local = rows(Dedup.labelPropagation(edges).orderBy("id"))
-    val stored = rows(
-      Dedup.labelPropagation(edges, mode = Materialize.Storage(dir)).orderBy("id"))
+    val stored = Materialize.storingUnder(spark, dir)(
+      rows(Dedup.labelPropagation(edges).orderBy("id")))
     assert(stored == local)
     assert(spark.read.parquet(s"$dir/cc_round_0").count() > 0)
   }
@@ -66,7 +69,8 @@ class MaterializeSpec extends AnyFunSuite {
   test("IVF top-k: storage mode == local mode") {
     val dir = Files.createTempDirectory("graft_mat").toString
     val local = rows(Similarity.ivfTopK(spark, sf))
-    val stored = rows(Similarity.ivfTopK(spark, sf, Materialize.Storage(dir)))
+    val stored = Materialize.storingUnder(spark, dir)(
+      rows(Similarity.ivfTopK(spark, sf)))
     assert(stored == local)
     assert(spark.read.parquet(s"$dir/ivf_quantized").count() > 0)
   }
@@ -77,39 +81,6 @@ class MaterializeSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.nonEmpty)
     Materialize.releaseAll(spark)
     assert(sc.getPersistentRDDs.isEmpty)
-  }
-
-  test("cachedCount: one count action per canonical plan per lifecycle; releaseAll ends the lifecycle") {
-    import org.apache.spark.sql.functions.{col, udf}
-    Materialize.releaseAll(spark) // clean slate
-    // a side-effecting filter makes count actions OBSERVABLE (an
-    // accumulator survives the task-closure serialization a plain
-    // captured counter does not); the same udf instance in two
-    // separately-built frames keeps their canonicalized plans
-    // structurally equal — exactly the dd5/dd9/sim3/sim4 same-corpus
-    // sharing shape
-    val acc = spark.sparkContext.longAccumulator("cachedCountProbe")
-    val probe = udf { _: Long => acc.add(1); true }
-    def frame(n: Int) = spark.range(n).toDF("id").filter(probe(col("id")))
-    val n1 = Materialize.cachedCount(frame(50))
-    assert(n1 == 50L)
-    val afterFirst = acc.value.longValue
-    assert(afterFirst >= 50, "first cachedCount must evaluate the plan")
-    // structurally-identical fresh frame: cache hit, ZERO evaluations
-    assert(Materialize.cachedCount(frame(50)) == 50L)
-    assert(acc.value.longValue == afterFirst,
-      "a repeated cachedCount of the same canonical plan re-ran the scan")
-    // a genuinely different plan is a different key (and a real count)
-    assert(Materialize.cachedCount(frame(60)) == 60L)
-    assert(acc.value.longValue >= afterFirst + 60)
-    // releaseAll ends the lifecycle: entries drop, the next call
-    // re-counts (no stale reads after an input overwrite)
-    assert(Materialize.cachedCountEntries(spark) >= 2)
-    Materialize.releaseAll(spark)
-    assert(Materialize.cachedCountEntries(spark) == 0)
-    val beforeRecount = acc.value.longValue
-    assert(Materialize.cachedCount(frame(50)) == 50L)
-    assert(acc.value.longValue >= beforeRecount + 50, "post-release call must re-count")
   }
 
   test("Local mode injects MEASURED stats: array-heavy frames stop under-reporting, small frames stay broadcastable") {
@@ -126,7 +97,7 @@ class MaterializeSpec extends AnyFunSuite {
     // counterfactual: what the optimizer believed BEFORE measurement —
     // the raw checkpoint preserves the pre-checkpoint estimate
     val carried = Bridge.rootSizeInBytes(arrayHeavy)
-    val mat = Materialize(arrayHeavy, Materialize.Local, "stats_probe")
+    val mat = Materialize(arrayHeavy, "stats_probe")
     val measured = Bridge.rootSizeInBytes(mat)
     val thresholdB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     info(s"carried=$carried measured=$measured threshold=$thresholdB")
@@ -146,7 +117,7 @@ class MaterializeSpec extends AnyFunSuite {
     // still broadcasts — no blanket anti-broadcast tax
     val small = Materialize(
       spark.range(200).toDF("g").withColumn("x", col("g") * 2),
-      Materialize.Local, "stats_small")
+      "stats_small")
     assert(Bridge.rootSizeInBytes(small) < 10L * 1024 * 1024)
     val bcastPlan = fact.join(small, "g").queryExecution.executedPlan.toString
     assert(bcastPlan.contains("BroadcastHashJoin"), bcastPlan.take(1500))
@@ -158,8 +129,7 @@ class MaterializeSpec extends AnyFunSuite {
     val saved = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val df = Materialize(
-        spark.range(100).toDF("g"), Materialize.Local, "neg_thresh")
+      val df = Materialize(spark.range(100).toDF("g"), "neg_thresh")
       // negative threshold → threshold > 0 guard disables the hint
       val hinted = Materialize.hashJoinIfFits(df)
       assert(hinted.queryExecution.logical.toString ==
@@ -168,21 +138,60 @@ class MaterializeSpec extends AnyFunSuite {
     } finally spark.conf.set(key, saved)
   }
 
-  test("cachedCount: Storage writes invalidate the session's counts; checkpointed plans are never cached") {
-    Materialize.releaseAll(spark)
-    assert(Materialize.cachedCount(spark.range(40).toDF("id")) == 40L)
-    assert(Materialize.cachedCountEntries(spark) == 1)
-    // a localCheckpoint scan is a fresh LogicalRDD every time — an
-    // entry could never hit again and would only pin the RDD, so it
-    // must not be cached
-    val ck = spark.range(10).toDF("id").localCheckpoint(true)
-    assert(Materialize.cachedCount(ck) == 10L)
-    assert(Materialize.cachedCountEntries(spark) == 1)
-    // a Storage-mode materialization is the one point table contents
-    // can change under a cached plan (overwrite of a shared dir) — it
-    // must clear the session's entries so no stale count survives
+  test("the storage directory is a session setting that storingUnder scopes") {
     val dir = Files.createTempDirectory("graft_mat").toString
-    Materialize(spark.range(5).toDF("id"), Materialize.Storage(dir), "t")
-    assert(Materialize.cachedCountEntries(spark) == 0)
+    assert(!Materialize.durable(spark))
+    val local = Materialize(spark.range(5).toDF("id"), "scoped_probe")
+    assert(local.inputFiles.isEmpty) // a checkpoint, not a file scan
+    Materialize.storingUnder(spark, dir) {
+      assert(Materialize.durable(spark))
+      val stored = Materialize(spark.range(5).toDF("id"), "scoped_probe")
+      assert(stored.inputFiles.nonEmpty &&
+        stored.inputFiles.forall(_.contains("scoped_probe")))
+      assert(stored.count() == 5L)
+    }
+    // restored: the next seam is local again
+    assert(!Materialize.durable(spark))
+    assert(spark.conf.getOption(Materialize.DurableDirKey).isEmpty)
+    Materialize.releaseAll(spark)
+  }
+
+  test("releaseAll mutes Spark's unpersist-after-checkpoint warning, and only inside the release") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val sc = spark.sparkContext
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("unpersist-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    def warnings =
+      lines.asScala.count(_.contains("cannot be recomputed after unpersisting"))
+    try {
+      Materialize.releaseAll(spark)
+      Dedup.minhashLshQuery(spark, sf).count() // leaves local checkpoints behind
+      assert(sc.getPersistentRDDs.nonEmpty)
+      lines.clear()
+      Materialize.releaseAll(spark)
+      assert(sc.getPersistentRDDs.isEmpty)
+      assert(warnings == 0, lines.asScala.mkString("\n"))
+      // the same unpersist outside releaseAll still warns: the capture
+      // is live and the mute ends with the release
+      spark.range(10).toDF("id").localCheckpoint(true)
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      assert(warnings == 1, lines.asScala.mkString("\n"))
+    } finally {
+      root.removeAppender(capture.getName)
+      capture.stop()
+      Materialize.releaseAll(spark)
+    }
   }
 }

@@ -54,7 +54,7 @@ class PartitionSizingSpec extends AnyFunSuite {
     try {
       val big = (0 until 30000)
         .map(i => (i.toLong, "p" * 100)).toDF("k", "s")
-      Materialize(big, Materialize.Local, "ratchet_probe")
+      Materialize(big, "ratchet_probe")
       val ratcheted = spark.conf.get(key).toInt
       assert(ratcheted > static.toInt,
         s"measured ~3MB over a 128KB advisory must widen $static")
@@ -64,9 +64,9 @@ class PartitionSizingSpec extends AnyFunSuite {
       // the layout never narrows mid-lifecycle, and a second
       // same-sized table widens it further (pre-cap)
       Materialize((0 until 10).map(i => (i.toLong, "q")).toDF("k", "s"),
-        Materialize.Local, "ratchet_probe_small")
+        "ratchet_probe_small")
       assert(spark.conf.get(key).toInt >= ratcheted)
-      Materialize(big, Materialize.Local, "ratchet_probe_again")
+      Materialize(big, "ratchet_probe_again")
       val accumulated = spark.conf.get(key).toInt
       assert(accumulated > ratcheted || accumulated == 8 * static.toInt,
         s"second ~3MB table must widen the working-set layout past $ratcheted")
@@ -75,7 +75,7 @@ class PartitionSizingSpec extends AnyFunSuite {
       assert(spark.conf.get(key) == static)
       // and a small-tier lifecycle never ratchets at the real advisory
       spark.conf.set(adv, "64MB")
-      Materialize(big, Materialize.Local, "ratchet_probe2")
+      Materialize(big, "ratchet_probe2")
       assert(spark.conf.get(key) == static)
     } finally {
       Materialize.releaseAll(spark)

@@ -87,16 +87,14 @@ object BroadcastAudit {
     val spark = Harness.session(Harness.Cpus)
     var flagged = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
+      Harness.timed(spark, 1) {
         val plan = fn(spark, sfDir).queryExecution.executedPlan
         fanoutBlindSides(plan).foreach { case (facts, head) =>
           flagged += 1
           println(s"FLAG $name FANOUT-BLIND broadcast of ${facts.mkString(",")}:\n    | " + head)
         }
-      } catch {
-        case e: Exception => println(s"ERR $name ${e.getClass.getSimpleName}: ${e.getMessage.take(120)}")
-      } finally {
-        graft.ops.Materialize.releaseAll(spark)
+      }.failure.foreach { e =>
+        println(s"ERR $name ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
       }
     }
     println(s"[broadcast-audit] $sfDir flagged=$flagged of ${SparkEntry.queries.size}")

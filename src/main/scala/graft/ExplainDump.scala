@@ -31,11 +31,12 @@ object ExplainDump {
     val spark = Harness.session(Harness.Cpus)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), formatted)
-      graft.ops.Materialize.releaseAll(spark)
+      Harness.timed(spark, 1) {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val formatted = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), formatted)
+      }.get
       println(s"[explaindump] wrote ${name}_$suffix.txt")
     }
     spark.stop()

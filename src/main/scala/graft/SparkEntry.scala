@@ -27,7 +27,9 @@ object SparkEntry {
     Analytics.statsByNationRegionDecade(spark, "/root/testdata/sf0.001")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Name → query. Built once per JVM, like [[oracleSql]]: every
+    * lookup reads the same map. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "p2_p8_clean_events" -> (Fact.cleanEventsQuery _),
     "p3_epoch_roundtrip" -> (Fact.epochRoundtrip _),
     "p14_p18_fact_derive" -> (Fact.factDerive _),
@@ -334,7 +336,7 @@ object SparkEntry {
   )
 
   // DuckDB dialect oracle per query. Table names match the parquet stems.
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "p2_p8_clean_events" ->
       """WITH ev AS (
         |  SELECT event_id, date_trunc('second', ts) AS ts_sec, event_type, value,

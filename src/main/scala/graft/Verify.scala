@@ -22,16 +22,12 @@ object Verify {
       oracle: Map[String, String]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
     val failed = queries.flatMap { case (name, fn) =>
-      try {
+      Harness.timed(spark, 1) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        None
-      } catch { case e: Throwable =>
+      }.failure.map { e =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Some(name)
-      } finally {
-        // bound residency: LSH-family queries materialize intermediates
-        graft.ops.Materialize.releaseAll(spark)
+        name
       }
     }
     val names = queries.map(_._1).toSet

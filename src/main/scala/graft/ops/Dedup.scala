@@ -996,7 +996,7 @@ object Dedup {
     // is durable per-round artifacts).
     if (!Materialize.durable(e.sparkSession) && e.count() <= localThreshold)
       return localComponents(e)
-    val sym = e.unionByName(e.select(c("v").as("u"), c("u").as("v")))
+    val sym = Graph.symmetric(e)
     // identity-label init stays LAZY: it is one distinct over the
     // (materialized) edge table, trivially re-derivable on recovery, so
     // writing it out as its own durable round bought nothing but a full

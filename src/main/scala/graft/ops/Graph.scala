@@ -18,18 +18,38 @@ import graft.Tables
   */
 object Graph {
 
+  /** The undirected simple graph of a directed (src, dst) edge list:
+    * one (u, v) row per linked pair, u < v, self-loops dropped. Every
+    * g query that reads the kNN graph as undirected derives it here,
+    * and materializes the result (or its [[symmetric]] form) as its
+    * one seam over the kNN build. */
+  def undirected(edges: DataFrame): DataFrame =
+    edges.where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .distinct()
+
+  /** Both arcs, (u, v) and (v, u), of each edge of an [[undirected]]
+    * list — distinct because the input is. */
+  def symmetric(und: DataFrame): DataFrame =
+    und.select(col("u"), col("v"))
+      .unionAll(und.select(col("v").as("u"), col("u").as("v")))
+
+  /** Per-node degree (id, deg) of an [[undirected]] list; nodes with
+    * no edge are absent. */
+  def degrees(und: DataFrame): DataFrame =
+    und.select(col("u").as("id"))
+      .unionAll(und.select(col("v").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("deg"))
+
   /** g2 — per-node triangle count + local clustering coefficient over
-    * the kNN graph. Edges materialize once (the sim4 build), then
-    * [[trianglesOf]] runs the compact-forward join. */
+    * the kNN graph: [[trianglesOf]] materializes the undirected kNN
+    * list once, then runs the compact-forward join. */
   def knnTriangles(s: SparkSession, d: String): DataFrame =
     knnTrianglesOf(Tables.embeddings(s, d))
 
-  def knnTrianglesOf(emb: DataFrame): DataFrame = {
-    val edges = Materialize(
-      Similarity.knnGraphOf(emb).select("src", "dst"),
-      "tri_edges")
-    trianglesOf(edges, emb.select(col("vec_id")))
-  }
+  def knnTrianglesOf(emb: DataFrame): DataFrame =
+    trianglesOf(Similarity.knnGraphOf(emb), emb.select(col("vec_id")))
 
   /** Compact-forward triangle counting (Latapy 2008's degree-ordered
     * orientation, the distributed-join standard): the input edge list
@@ -49,21 +69,14 @@ object Graph {
     * — one correctly-rounded IEEE division, identical in any engine —
     * and is 0.0 for degree < 2 (no wedge to close). */
   def trianglesOf(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val und = Materialize(
-      edges.where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .distinct(),
-      "tri_und")
-    val deg = und.select(col("u").as("id"))
-      .unionAll(und.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val und = Materialize(undirected(edges), "tri_und")
+    val deg = degrees(und)
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     val orient = Materialize(
       und
-        .join(deg.select(col("id").as("u"), col("d").as("du")), "u")
-        .join(deg.select(col("id").as("v"), col("d").as("dv")), "v")
+        .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
+        .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
         .select(when(uFirst, col("u")).otherwise(col("v")).as("a"),
           when(uFirst, col("v")).otherwise(col("u")).as("b")),
       "tri_orient")
@@ -79,7 +92,7 @@ object Graph {
       .join(deg.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
       .join(perNode.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"),
-        coalesce(col("d"), lit(0L)).as("degree"),
+        coalesce(col("deg"), lit(0L)).as("degree"),
         coalesce(col("t"), lit(0L)).as("triangles"))
       .withColumn("clustering",
         when(col("degree") >= 2,
@@ -213,10 +226,10 @@ object Graph {
     * attract spurious neighbors; reciprocity BY RANK shows how fast
     * precision decays down the neighbor list and is the evidence for
     * choosing a mutual-only edge filter. One self-join of the
-    * materialized edge list on the reversed key (edges materialize
-    * once — the sim4 build is the dominant cost, the audit adds a
-    * keyed join of top-k·n rows) + an O(k)-row aggregate; the rate is
-    * one long/long division per rank. */
+    * materialized edge list on the reversed key (the kNN build, the
+    * dominant cost, is checkpointed once as `recip_edges`; the audit
+    * adds a keyed join of top-k·n rows) + an O(k)-row aggregate; the
+    * rate is one long/long division per rank. */
   def knnReciprocity(s: SparkSession, d: String): DataFrame =
     knnReciprocityOf(Tables.embeddings(s, d))
 
@@ -320,24 +333,13 @@ object Graph {
   def kCore(s: SparkSession, d: String): DataFrame =
     kCoreOf(Tables.embeddings(s, d))
 
-  def kCoreOf(emb: DataFrame): DataFrame = {
-    val edges = Materialize(
-      Similarity.knnGraphOf(emb).select("src", "dst"),
-      "kcore_edges")
-    kCorePeel(edges, KCoreK, KCoreRounds)
-  }
+  def kCoreOf(emb: DataFrame): DataFrame =
+    kCorePeel(Similarity.knnGraphOf(emb), KCoreK, KCoreRounds)
 
   /** The peel loop over an explicit directed edge list (canonicalized
     * to undirected internally). */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val und = Materialize(
-      edges.where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .distinct(),
-      "kcore_und")
-    val sym = und.select(col("u"), col("v"))
-      .unionAll(und.select(col("v").as("u"), col("u").as("v")))
+    val sym = symmetric(Materialize(undirected(edges), "kcore_und"))
     val nodes0 = Materialize(
       sym.select(col("u").as("vertex")).distinct(),
       "kcore_nodes")
@@ -473,24 +475,15 @@ object Graph {
   def bfsLandmarks(s: SparkSession, d: String): DataFrame =
     bfsLandmarksOf(Tables.embeddings(s, d))
 
-  def bfsLandmarksOf(emb: DataFrame): DataFrame = {
-    val edges = Materialize(
-      Similarity.knnGraphOf(emb).select("src", "dst"),
-      "bfs_edges")
-    bfsOf(edges, emb.select(col("vec_id")), BfsSeedMod, BfsMaxHops)
-  }
+  def bfsLandmarksOf(emb: DataFrame): DataFrame =
+    bfsOf(Similarity.knnGraphOf(emb), emb.select(col("vec_id")),
+      BfsSeedMod, BfsMaxHops)
 
   /** The BFS loop over an explicit directed edge list (symmetrized
     * internally) and node universe; seeds are id ≡ 0 (mod seedMod). */
   def bfsOf(edges: DataFrame, nodes: DataFrame, seedMod: Long,
       maxHops: Int): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val sym = Materialize(
-      und.unionAll(und.select(col("v").as("u"), col("u").as("v"))),
-      "bfs_sym")
+    val sym = Materialize(symmetric(undirected(edges)), "bfs_sym")
     val state0 = Materialize(
       nodes.filter(col("vec_id") % seedMod === 0L)
         .select(col("vec_id").as("id"), lit(0L).as("dist"),
@@ -596,16 +589,8 @@ object Graph {
   /** The modularity computation over an explicit directed edge list
     * (canonicalized internally) and a (vec_id, lab) label map. */
   def modularityOfEdges(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val und = Materialize(
-      edges
-        .where(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .distinct(),
-      "mod_und")
-    val deg = und.select(col("u").as("vec_id"))
-      .unionAll(und.select(col("v").as("vec_id")))
-      .groupBy("vec_id").agg(count(lit(1)).as("deg"))
+    val und = Materialize(undirected(edges), "mod_und")
+    val deg = degrees(und).withColumnRenamed("id", "vec_id")
     val m = und.agg(count(lit(1)).as("m"))
     val perNode = labels
       .join(deg, Seq("vec_id"), "left")
@@ -693,16 +678,8 @@ object Graph {
 
   /** [[degreeHistogram]] over an explicit embeddings frame. */
   def degreeHistogramOf(emb: DataFrame): DataFrame = {
-    val edges = Materialize(
-      Similarity.knnGraphOf(emb).select("src", "dst"),
-      "g9_edges")
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val deg = und.select(col("u").as("id"))
-      .unionAll(und.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = degrees(
+      Materialize(undirected(Similarity.knnGraphOf(emb)), "g9_und"))
     val perNode = emb.select(col("vec_id"))
       .join(deg, col("vec_id") === col("id"), "left")
       .select(coalesce(col("deg"), lit(0L)).as("degree"))
@@ -756,11 +733,7 @@ object Graph {
 
   /** [[knnLabelMix]] over an explicit embeddings frame. */
   def knnLabelMixOf(emb: DataFrame): DataFrame = {
-    val und = Similarity.knnGraphOf(emb)
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val und = undirected(Similarity.knnGraphOf(emb))
     val labels = emb.select(col("vec_id"),
       col("label").cast("long").as("lab"))
     // O(labels²) matrix feeds both the total and the output — one
@@ -821,23 +794,20 @@ object Graph {
     * so the artifact doubles as an accuracy readout on the non-seed
     * slice.
     *
-    * Shape: edges materialize once (the sim4 build), symmetrized; each
-    * round is one dst-keyed join (neighbor labels) + one (node, label)
-    * aggregate + one node-keyed window pick + a left join back — all
-    * keyed on vec_id-sized keys, rounds materialized like
-    * [[graft.ops.Dedup.labelPropagation]] so lineage stays bounded. */
+    * Shape: the kNN build materializes once, as its symmetric
+    * undirected arc list; each round is one dst-keyed join (neighbor
+    * labels) + one (node, label) aggregate + one node-keyed window
+    * pick + a left join back — all keyed on vec_id-sized keys, rounds
+    * materialized like [[graft.ops.Dedup.labelPropagation]] so
+    * lineage stays bounded. */
   def labelSpread(s: SparkSession, d: String): DataFrame =
     labelSpreadOf(Tables.embeddings(s, d))
 
   def labelSpreadOf(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val edges = Materialize(
-      Similarity.knnGraphOf(emb).select("src", "dst"),
-      "spread_edges")
     val sym = Materialize(
-      edges.unionByName(
-        edges.select(col("dst").as("src"), col("src").as("dst")))
-        .where(col("src") =!= col("dst")).distinct(),
+      symmetric(undirected(Similarity.knnGraphOf(emb)))
+        .select(col("u").as("src"), col("v").as("dst")),
       "spread_sym")
     var lab = Materialize(
       emb.select(col("vec_id"), col("label"))
@@ -936,24 +906,15 @@ object Graph {
   def landmarkCentrality(s: SparkSession, d: String): DataFrame =
     landmarkCentralityOf(Tables.embeddings(s, d))
 
-  def landmarkCentralityOf(emb: DataFrame): DataFrame = {
-    val edges = Materialize(
-      Similarity.knnGraphOf(emb).select("src", "dst"),
-      "g12_edges")
-    landmarkCentralityOfEdges(edges, emb.select(col("vec_id")))
-  }
+  def landmarkCentralityOf(emb: DataFrame): DataFrame =
+    landmarkCentralityOfEdges(Similarity.knnGraphOf(emb),
+      emb.select(col("vec_id")))
 
   /** The multi-landmark BFS over an explicit edge list: state rows are
     * (id, seed, dist), minimized per pair each round. */
   def landmarkCentralityOfEdges(edges: DataFrame,
       nodes: DataFrame): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val sym = Materialize(
-      und.unionAll(und.select(col("v").as("u"), col("u").as("v"))),
-      "g12_sym")
+    val sym = Materialize(symmetric(undirected(edges)), "g12_sym")
     val seeds = nodes.filter(col("vec_id") % BfsSeedMod === 0L)
       .orderBy("vec_id").limit(CentralityLandmarks)
     val state0 = Materialize(

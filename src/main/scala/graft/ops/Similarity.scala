@@ -312,10 +312,13 @@ object Similarity {
     * derives the identical count from the same integer arithmetic over
     * count(*). Rank via one window over the pair stream; deterministic
     * tiebreaks. This is the candidate graph semantic-dedup/clustering
-    * pipelines consume. */
+    * pipelines consume. sim4 returns it sorted by (src, rank). */
   def knnGraph(s: SparkSession, d: String): DataFrame =
-    knnGraphOf(Tables.embeddings(s, d))
+    knnGraphOf(Tables.embeddings(s, d)).orderBy("src", "rank")
 
+  /** The kNN graph (src, rank, dst, cos), unsorted: every consumer
+    * joins, aggregates or checkpoints it, so a global sort would only
+    * add a sampling job and a range exchange. */
   def knnGraphOf(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = emb.sparkSession
@@ -341,7 +344,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= KnnK)
       .select(col("src"), col("rank"), col("dst"), col("cos"))
-      .orderBy("src", "rank")
   }
 
   val IvfCells = 10
@@ -683,7 +685,8 @@ object Similarity {
     * the leaked remainder of each floor division are NOT redistributed:
     * totals drift a few millionths per round, ranks stay comparable.
     *
-    * Shape: edges materialize once (the sim4 build); each round is one
+    * Shape: the unsorted kNN edge list materializes once as `pr_edges`
+    * (the degree join reads it twice); each round is one
     * keyed join rank⋈edges + one (dst)-keyed aggregation + a left join
     * back to the node set — all shuffles on vec_id-sized keys, driver
     * holds nothing. Rounds materialize like [[Dedup.labelPropagation]]

@@ -511,6 +511,34 @@ class PlanSpec extends AnyFunSuite {
       !p.contains("BroadcastNestedLoopJoin"), p.take(1500))
   }
 
+  test("only sim4 sorts the kNN graph: knnGraphOf has no range exchange, sim4_knn_graph keeps one") {
+    val emb = Tables.embeddings(spark, sf)
+    val unsorted = graft.ops.Similarity.knnGraphOf(emb)
+      .queryExecution.executedPlan.toString
+    assert(!unsorted.contains("rangepartitioning"),
+      s"the shared kNN build must not sort:\n${unsorted.take(2000)}")
+    val sorted = plan("sim4_knn_graph")
+    assert(sorted.contains("rangepartitioning"),
+      s"sim4 must keep its (src, rank) order:\n${sorted.take(2000)}")
+  }
+
+  test("a symmetric seam over the lazy undirected kNN list runs the kNN build once") {
+    import graft.ops.{Graph, Similarity}
+    def executed(df: org.apache.spark.sql.DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    }
+    val und = Graph.undirected(
+      Similarity.knnGraphOf(Tables.embeddings(spark, sf)))
+    val scans = "Scan parquet".r.findAllIn(executed(und)).size
+    val p = executed(Graph.symmetric(und))
+    // the reversed arc branch reads the first branch's distinct exchange,
+    // so the two-branch union scans the embeddings no more than und does
+    assert(p.contains("ReusedExchange"), p.take(3000))
+    assert(scans > 0 && "Scan parquet".r.findAllIn(p).size == scans,
+      p.take(3000))
+  }
+
   test("tx23 scoring broadcasts the materialized model; the occurrence stream is never stored") {
     val p = plan("tx23_surprisal")
     // only the charset³-bounded MODEL materializes (the tx44 refusal:

@@ -3,8 +3,8 @@
 # README consumer example STANDALONE — plain spark-submit against the
 # Spark distribution at /opt/spark, no sbt runtime, no test classpath.
 # It runs twice: with executor-local seams, then with durable seams under
-# a storage directory set by --conf alone, where the MinHash shingle and
-# band tables must land as parquet.
+# a storage directory set by --conf alone, where the MinHash shingle
+# table must land as parquet.
 # Usage: scripts/package_smoke.sh [sfDir]   (default /root/testdata/sf0.001)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -36,7 +36,7 @@ echo "$OUT" | grep -q '\[readme-example\] OK:' \
 
 run_example
 run_example --conf "spark.graft.materialize.storageDir=$SEAMS"
-for table in minhash_shingles minhash_bands; do
+for table in minhash_shingles; do
   part=$(ls "$SEAMS/$table"/*.parquet 2>/dev/null | head -1)
   [[ -n "$part" && "$(head -c 4 "$part")" == PAR1 ]] \
     || { echo "[package-smoke] FAIL: no parquet written for $table"; exit 1; }

@@ -176,13 +176,15 @@ object Bench {
     if (action == "count") df.count()
     else df.write.mode("overwrite").format("noop").save()
 
-  /** Focused re-measurement of named queries: each runs `runs` times
-    * under one action and prints one JSON line with every run plus
-    * p50/min/max — the n≥5 variance evidence a sweep median can't give
-    * when one query's round-over-round delta needs adjudicating (noise
-    * vs regression). No calibration or suspect gate, by design: it is
-    * the tool for tiers (sf10) whose idle floor would mass-flag. A
-    * failing query fails the focus run. */
+  /** Focused re-measurement of named queries: each runs once cold,
+    * then `runs` times under one action, and prints one JSON line with
+    * the cold run's seconds (`cold`, outside the statistics: it carries
+    * JIT and class loading) and every timed run plus p50/min/max — the
+    * n≥5 variance evidence a sweep median can't give when one query's
+    * round-over-round delta needs adjudicating (noise vs regression).
+    * No calibration or suspect gate, by design: it is the tool for
+    * tiers (sf10) whose idle floor would mass-flag. A failing query
+    * fails the focus run. */
   def focus(spark: SparkSession, sfDir: String, names: Seq[String],
       runs: Int, action: String)(emit: String => Unit): Unit = {
     val unknown = names.filterNot(SparkEntry.queries.contains)
@@ -191,9 +193,12 @@ object Bench {
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      val t = Harness.timed(spark, runs)(
-        timedAction(fn(spark, sfDir), act)).get
-      emit(s"""{"query":"${esc(name)}","action":"$act",${t.fields}}""")
+      def measure(n: Int) =
+        Harness.timed(spark, n)(timedAction(fn(spark, sfDir), act)).get
+      val cold = measure(1)
+      val t = measure(runs)
+      emit(s"""{"query":"${esc(name)}","action":"$act",""" +
+        s""""cold":${Harness.fmt(cold.secs.head, 3)},${t.fields}}""")
     }
   }
 

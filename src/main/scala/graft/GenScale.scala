@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ScaleProbe.offsetCopies
+
 /** sf1 tier generator: scales a driver-generated SF directory N× into a
   * new parquet directory with FK-CONSISTENT key offsets, so the full
   * correctness gate (Verify + DuckDB oracle) and Bench run unmodified
@@ -36,36 +38,29 @@ object GenScale {
       println(s"[genscale] $name written")
     }
 
-    def offsets(df: DataFrame, strides: (String, Long)*): DataFrame =
-      (0 until n).map { i =>
-        strides.foldLeft(df) { case (acc, (c, stride)) =>
-          acc.withColumn(c, col(c) + lit(i.toLong * stride))
-        }
-      }.reduce(_ unionByName _)
-
     // fixed catalogs: copy once
     write(Tables.region(spark, src), "region")
     write(Tables.nation(spark, src), "nation")
 
     write(
-      offsets(Tables.customer(spark, src), "c_custkey" -> 10_000_000L)
+      offsetCopies(Tables.customer(spark, src), n, "c_custkey" -> 10_000_000L)
         .withColumn("c_name", format_string("Customer#%09d", col("c_custkey"))),
       "customer")
-    write(offsets(Tables.supplier(spark, src), "s_suppkey" -> 1_000_000L),
+    write(offsetCopies(Tables.supplier(spark, src), n, "s_suppkey" -> 1_000_000L),
       "supplier")
-    write(offsets(Tables.part(spark, src), "p_partkey" -> 10_000_000L),
+    write(offsetCopies(Tables.part(spark, src), n, "p_partkey" -> 10_000_000L),
       "part")
     write(
-      offsets(Tables.orders(spark, src),
+      offsetCopies(Tables.orders(spark, src), n,
         "o_orderkey" -> 100_000_000L, "o_custkey" -> 10_000_000L),
       "orders")
     write(
-      offsets(Tables.lineitem(spark, src),
+      offsetCopies(Tables.lineitem(spark, src), n,
         "l_orderkey" -> 100_000_000L, "l_partkey" -> 10_000_000L,
         "l_suppkey" -> 1_000_000L),
       "lineitem")
     // events: fresh event_ids, user domain fixed (per-key density grows)
-    write(offsets(Tables.events(spark, src), "event_id" -> 1_000_000_000L),
+    write(offsetCopies(Tables.events(spark, src), n, "event_id" -> 1_000_000_000L),
       "events")
     // documents: the ScaleProbe salt — every token prefixed per copy, so
     // copies are shingle-disjoint and the true near-dup structure is n×

@@ -90,12 +90,11 @@ object ScaleProbe {
     // durable-parquet-intermediates posture the 100-TB scaladocs claim —
     // against the local checkpoint lifecycle the driver bench runs: the
     // same driver query on the session without, then with, the storage
-    // directory set. dd7 additionally switches algorithm when durable
-    // (the distributed pointer-jumping loop; local uses the driver
-    // union-find below the edge threshold), so its delta is lifecycle +
-    // algorithm; dd7loop is the apples-to-apples LIFECYCLE row: the
-    // distributed loop in BOTH (threshold 0 disables the union-find
-    // switch), so its delta is the durable-posture premium alone
+    // directory set. Both run the same algorithm and the same seams, so
+    // each row pair's delta is the durable-posture premium alone; dd7
+    // takes the in-memory union-find below its edge threshold, and dd7loop
+    // forces the distributed pointer-jumping loop (threshold 0), whose
+    // per-round seams are the lifecycle cost at warehouse scale
     def lifecycle(name: String, q: => DataFrame): Seq[Case] =
       Seq("local" -> false, "storage" -> true).map { case (label, durable) =>
         Case(s"storage_${name}_$label", _ => {
@@ -149,16 +148,11 @@ object ScaleProbe {
       // linearly in n — the hot-key direction the bucketed two-phase
       // carry exists to bound; the aggregate consumes the carried
       // payload so column pruning can't drop phase 2
-      Case("asof", on(n => (events(n), orders(n))) { case (ev6, ord6) =>
-        val ev = ev6.select((col("user_id") % 150).as("k"),
-          date_trunc("second", col("ts")).as("t"), col("event_id"))
-        val o = ord6
-          .select((col("o_custkey") % 150).as("k"),
-            col("o_orderdate").as("t"), col("o_orderkey"))
-          .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
-        first(graft.ops.AsOf.asofLeftBucketed(ev, o, "o_orderkey")(
-            t => floor(unix_timestamp(t) / 86400L).cast("long")),
-          count(lit(1)).as("n"), sum(col("asof_o_orderkey")).as("s"))
+      Case("asof", on(n => graft.ops.AsOf.asofFrames(events(n), orders(n))) {
+        case (ev, o) =>
+          first(graft.ops.AsOf.asofLeftBucketed(ev, o, "o_orderkey")(
+              t => floor(unix_timestamp(t) / 86400L).cast("long")),
+            count(lit(1)).as("n"), sum(col("asof_o_orderkey")).as("s"))
       }),
       // dd10: salted copies share zero grams, so both the Σ df²
       // candidate volume on the anchor hash and the true span set grow
@@ -348,21 +342,23 @@ object ScaleProbe {
     spark.stop()
   }
 
+  /** `n` copies of `df`, unioned, copy i with each named key column
+    * shifted by i × its stride: fresh keys per copy, and foreign keys
+    * that share a stride stay inside their copy. Copy 0 is `df`'s own
+    * keys. */
+  def offsetCopies(df: DataFrame, n: Int, strides: (String, Long)*): DataFrame =
+    (0 until n).map { i =>
+      strides.foldLeft(df) { case (acc, (c, stride)) =>
+        acc.withColumn(c, col(c) + lit(i.toLong * stride))
+      }
+    }.reduce(_ unionByName _)
+
   /** Events replicated N× (fresh event_ids; user_id kept, so the
     * as-of key domain stays fixed and per-key density grows with N —
     * the hot-key direction). */
-  def replicatedEvents(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.events(s, d)
-    (0 until n).map { i =>
-      base.withColumn("event_id",
-        col("event_id") + lit(i.toLong * 10_000_000L))
-    }.reduce(_ unionByName _)
-  }
+  def replicatedEvents(s: SparkSession, d: String, n: Int): DataFrame =
+    offsetCopies(Tables.events(s, d), n, "event_id" -> 10_000_000L)
 
-  /** Lineitem replicated N× (fresh orderkeys; suppkeys/flags kept, so
-    * each copy carries the base corpus's per-order supplier sets and
-    * the q21a probe volumes grow linearly on an unchanged per-key
-    * fanout). */
   /** Customers replicate with RE-DERIVED names ('Customer#%09d' of the
     * shifted key), keeping the 18-char shape rl1's corruption rules and
     * blocking positions assume. The 11M stride makes any two copies'
@@ -370,34 +366,22 @@ object ScaleProbe {
     * ('x', never a digit) cannot close that gap — so cross-copy
     * lev ≤ 1 links are impossible and the true link set is exactly the
     * per-copy union. */
-  def replicatedCustomer(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.customer(s, d)
-    (0 until n).map { i =>
-      val key = col("c_custkey") + lit(i.toLong * 11_000_000L)
-      base.select(key.as("c_custkey"),
-        format_string("Customer#%09d", key).as("c_name"),
-        col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
-    }.reduce(_ unionByName _)
-  }
+  def replicatedCustomer(s: SparkSession, d: String, n: Int): DataFrame =
+    offsetCopies(Tables.customer(s, d), n, "c_custkey" -> 11_000_000L)
+      .withColumn("c_name", format_string("Customer#%09d", col("c_custkey")))
 
-  def replicatedLineitem(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.lineitem(s, d)
-    (0 until n).map { i =>
-      base.withColumn("l_orderkey",
-        col("l_orderkey") + lit(i.toLong * 10_000_000L))
-    }.reduce(_ unionByName _)
-  }
+  /** Lineitem replicated N× (fresh orderkeys; suppkeys/flags kept, so
+    * each copy carries the base corpus's per-order supplier sets and
+    * the q21a probe volumes grow linearly on an unchanged per-key
+    * fanout). */
+  def replicatedLineitem(s: SparkSession, d: String, n: Int): DataFrame =
+    offsetCopies(Tables.lineitem(s, d), n, "l_orderkey" -> 10_000_000L)
 
   /** Orders replicated N× (fresh orderkeys; dates/prices/custkeys
     * kept, so the merge filters and the as-of build side scale
     * linearly on the same domains). */
-  def replicatedOrders(s: SparkSession, d: String, n: Int): DataFrame = {
-    val base = Tables.orders(s, d)
-    (0 until n).map { i =>
-      base.withColumn("o_orderkey",
-        col("o_orderkey") + lit(i.toLong * 10_000_000L))
-    }.reduce(_ unionByName _)
-  }
+  def replicatedOrders(s: SparkSession, d: String, n: Int): DataFrame =
+    offsetCopies(Tables.orders(s, d), n, "o_orderkey" -> 10_000_000L)
 
   /** Embeddings replicated N× with each copy's vectors multiplied by a
     * copy-indexed DETERMINISTIC ±1 sign diagonal. Within a copy every

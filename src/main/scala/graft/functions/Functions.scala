@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *   - Timestamps are truncated to whole seconds before comparison/output:
   *     the test parquet carries nanosecond timestamps, which Spark reads at
   *     microsecond precision while DuckDB keeps nanoseconds.
+  *   - Event time has exactly two derivations, each defined once here:
+  *     [[toSecond]] (the whole-second timestamp) and [[epochDay]] (the
+  *     UTC day numbered from 1970-01-01, a long). Every query takes them
+  *     from here rather than spelling out `date_trunc` or `datediff`.
   */
 object Functions {
 
@@ -26,10 +30,6 @@ object Functions {
     * `round` lands on an integer (the true value is integral), so the
     * HALF_UP-vs-value rounding divergence between engines cannot bite. */
   def cents(c: Column): Column = round(c * 100).cast("long")
-
-  /** Exact average of a 2-decimal column: integer-cents sum divided by
-    * count, then scaled back — identical doubles in Spark and DuckDB. */
-  def avgExact(c: Column): Column = sum(cents(c)) / count(lit(1)) / 100.0
 
   /** P14 — severity CASE chain (reference
     * dbt_files/models/core/fact_earthquake_data.sql:9-16), re-based onto the
@@ -56,10 +56,6 @@ object Functions {
     400000.0 -> "Great", 300000.0 -> "Major", 200000.0 -> "Strong",
     100000.0 -> "Moderate", 50000.0 -> "Light")
 
-  /** P15 — `extract(year from ts)`
-    * (reference fact_earthquake_data.sql:17). */
-  def eventYear(ts: Column): Column = year(ts)
-
   /** P16 — decade macro: `cast(floor(year/10)*10 as int64)`
     * (reference dbt_files/macros/get_decade.sql:5-9). Division of int by
     * int yields double in both Spark and DuckDB, so floor matches. */
@@ -80,6 +76,12 @@ object Functions {
 
   /** Second-truncated timestamp for oracle-safe output (ns vs µs parquet). */
   def toSecond(ts: Column): Column = date_trunc("second", ts)
+
+  /** The UTC day of `ts` as a day number from 1970-01-01 (a long): the
+    * integer day key both engines compute identically. The session time
+    * zone is pinned to UTC, so the date cast is the UTC date. */
+  def epochDay(ts: Column): Column =
+    datediff(ts.cast("date"), lit("1970-01-01").cast("date")).cast("long")
 
   /** A deterministic 60-bit hash both engines can compute identically:
     * the first 15 hex chars of md5("seed:" + x), parsed base-16. Used as

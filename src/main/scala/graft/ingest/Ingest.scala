@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Functions.toSecond
+
 /** Ingest-side operators (SURVEY.md §2.1 S2/S3).
   */
 object Ingest {
@@ -92,7 +94,7 @@ object Ingest {
   def geojsonFlattenQuery(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     val ev = graft.Tables.events(s, d)
-    val sec = date_trunc("second", col("ts")).cast("long")
+    val sec = toSecond(col("ts")).cast("long")
     val json = concat(
       lit("{\"properties\":{\"place\":\"p-"), col("event_id").cast("string"),
       lit("\",\"time\":"), (sec * 1000).cast("string"),

@@ -225,7 +225,7 @@ object Analytics {
     Tables.events(s, d)
       .filter(col("ts").isNotNull)
       .select(col("user_id"),
-        date_trunc("second", col("ts")).as("ts_sec"), col("event_id"))
+        toSecond(col("ts")).as("ts_sec"), col("event_id"))
       .groupBy("user_id")
       .agg(collect_list(struct(col("ts_sec"), col("event_id"))).as("evs"))
       .select(
@@ -359,18 +359,7 @@ object Analytics {
     * each event into its day, exactly what the streaming facade does with
     * a watermark. Start/end emitted as strings for oracle parity. */
   def tumblingWindows(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy(
-        window(col("ts"), "1 day").as("win"),
-        col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(cents(col("value"))).as("sum_value_cents"))
-      .select(
-        col("win.start").cast("string").as("win_start"),
-        col("win.end").cast("string").as("win_end"),
-        col("event_type"), col("n"), col("sum_value_cents"))
-      .orderBy("win_start", "event_type")
+    windowStats(Tables.events(s, d), window(col("ts"), "1 day"))
 
   /** t5 — HOPPING (sliding) windows: 1-day windows advancing every 6
     * hours, so each event lands in size/slide = 4 overlapping windows.
@@ -385,11 +374,14 @@ object Analytics {
     * expression runs unchanged under readStream + watermark — t4's
     * streaming twin covers the machinery (StreamingSpec). */
   def hoppingWindows(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .filter(col("ts").isNotNull)
-      .groupBy(
-        window(col("ts"), "1 day", "6 hours").as("win"),
-        col("event_type"))
+    windowStats(Tables.events(s, d).filter(col("ts").isNotNull),
+      window(col("ts"), "1 day", "6 hours"))
+
+  /** t4/t5's shared tail: per (window, type) event count and exact
+    * cents sum, window bounds as strings for oracle parity. */
+  private def windowStats(events: DataFrame, win: Column): DataFrame =
+    events
+      .groupBy(win.as("win"), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
         sum(cents(col("value"))).as("sum_value_cents"))
@@ -422,25 +414,38 @@ object Analytics {
     * over one shuffle on user_id: lag() flags gaps > 30 min, a running
     * sum of flags numbers the sessions, then a per-session rollup.
     * Batch analogue of Structured Streaming's session windows. */
-  def sessionize(s: SparkSession, d: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
-    val ev = Tables.events(s, d)
-      .withColumn("ts_sec", date_trunc("second", col("ts")))
-      .withColumn("prev_ts", lag(col("ts_sec"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts_sec").cast("long") - col("prev_ts").cast("long") > 1800, 1)
-          .otherwise(0))
-      .withColumn("session_no",
-        sum(col("new_session")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    ev.groupBy(col("user_id"), col("session_no"))
+  def sessionize(s: SparkSession, d: String): DataFrame =
+    numberSessions(Tables.events(s, d))
+      .groupBy(col("user_id"), col("session_no"))
       .agg(
         count(lit(1)).as("n_events"),
         min(col("ts_sec")).cast("string").as("session_start"),
         max(col("ts_sec")).cast("string").as("session_end"),
         sum(cents(col("value"))).as("sum_value_cents"))
       .orderBy("user_id", "session_no")
+
+  /** The idle gap, in seconds, after which a user's next event opens a
+    * new session (w2, w16). */
+  val SessionGapSec = 1800
+
+  /** Numbers each user's sessions: adds `ts_sec` (the event's
+    * [[toSecond]]) and `session_no`, a running count over the user's
+    * events, in (ts_sec, event_id) order, of those that follow no event
+    * or a gap over [[SessionGapSec]]. Two layered windows (lag, running
+    * sum) over one user_id shuffle. */
+  private def numberSessions(events: DataFrame): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
+    events
+      .withColumn("ts_sec", toSecond(col("ts")))
+      .withColumn("prev_ts", lag(col("ts_sec"), 1).over(byUser))
+      .withColumn("new_session",
+        when(col("prev_ts").isNull ||
+          col("ts_sec").cast("long") - col("prev_ts").cast("long") >
+            SessionGapSec, 1)
+          .otherwise(0))
+      .withColumn("session_no",
+        sum(col("new_session")).over(
+          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
   /** Beyond-reference: retention cohort analysis (w3) — users bucketed
@@ -500,7 +505,7 @@ object Analytics {
     * sides for ns/µs parity with the oracle. */
   def watermarkIncremental(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-      .withColumn("ts_sec", date_trunc("second", col("ts")))
+      .withColumn("ts_sec", toSecond(col("ts")))
     val wm = ev.filter(col("event_type") === "signup")
       .agg(max(col("ts_sec")).as("wm"))
     ev.join(broadcast(wm), ev("ts_sec") > wm("wm"), "inner")
@@ -600,7 +605,7 @@ object Analytics {
       }
     val depths = events
       .select(col("user_id"), idx.as("idx"),
-        date_trunc("second", col("ts")).as("t"))
+        toSecond(col("ts")).as("t"))
       .where(col("idx").isNotNull)
       .groupBy("user_id")
       .agg(sort_array(collect_list(struct(col("t"), col("idx")))).as("evs"))
@@ -774,7 +779,7 @@ object Analytics {
     val steps = events
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("user_id"), col("event_type"),
-        date_trunc("second", col("ts")).as("ts_sec"), col("event_id"))
+        toSecond(col("ts")).as("ts_sec"), col("event_id"))
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
     val matrix = steps
@@ -803,7 +808,7 @@ object Analytics {
       .filter(col("ts").isNotNull &&
         col("event_type").isin("signup", "purchase"))
       .select(col("user_id"), col("event_type"),
-        unix_timestamp(date_trunc("second", col("ts"))).as("sec"))
+        unix_timestamp(toSecond(col("ts"))).as("sec"))
     val firsts = ev.groupBy("user_id").agg(
       min(when(col("event_type") === "signup", col("sec"))).as("s_sec"),
       min(when(col("event_type") === "purchase", col("sec"))).as("p_sec"))
@@ -872,7 +877,7 @@ object Analytics {
     val ev = Tables.events(s, d)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
         col("event_type").isNotNull)
-      .withColumn("ts_sec", date_trunc("second", col("ts")))
+      .withColumn("ts_sec", toSecond(col("ts")))
       .withColumn("es", unix_timestamp(col("ts_sec")))
     val w = Window.partitionBy("user_id").orderBy(col("es"))
       .rangeBetween(-604800L, -1L)
@@ -937,7 +942,7 @@ object Analytics {
   def rfmSegments(s: SparkSession, d: String): DataFrame = {
     val per = Tables.events(s, d)
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .withColumn("ts_sec", date_trunc("second", col("ts")))
+      .withColumn("ts_sec", toSecond(col("ts")))
       .groupBy("user_id")
       .agg(
         max(col("ts_sec")).as("last_ts"),
@@ -1032,7 +1037,7 @@ object Analytics {
     * empty lookbacks read 0, not NULL (a model consumes these). */
   def pitFeatures(s: SparkSession, d: String): DataFrame = {
     val o = Tables.orders(s, d)
-      .withColumn("ts_sec", date_trunc("second", col("o_orderdate")))
+      .withColumn("ts_sec", toSecond(col("o_orderdate")))
       .withColumn("es", unix_timestamp(col("ts_sec")))
       .withColumn("cents", cents(col("o_totalprice")))
     val w = Window.partitionBy("o_custkey").orderBy(col("es"))
@@ -1148,30 +1153,44 @@ object Analytics {
 
   /** [[autocorrelation]] over an explicit events frame. */
   def autocorrelationOf(events: DataFrame): DataFrame = {
-    val daily = events
+    def acf(k: Int) =
+      when(col("den") =!= 0L, col(s"num$k") / col("den")).as(s"acf$k")
+    lagCovariances(dailyCounts(events), 3)
+      .select(col("event_type"), col("n_days"), col("total"), col("den"),
+        col("num1"), col("num2"), col("num3"), acf(1), acf(2), acf(3))
+      .orderBy("event_type")
+  }
+
+  /** The per-type daily event series (event_type, day, x): events with
+    * a timestamp and a type, counted per type and [[epochDay]]. Callers
+    * that read it twice materialize it under their own seam. */
+  def dailyCounts(events: DataFrame): DataFrame =
+    events
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"), col("ts").cast("date").as("day"))
+      .groupBy(col("event_type"), epochDay(col("ts")).as("day"))
       .agg(count(lit(1)).as("x"))
+
+  /** a21's and w14's lag-covariance fold over a [[dailyCounts]] series:
+    * per type n_days, total = S, den = Σ d_t² and, for k = 1..maxLag,
+    * num_k = Σ d_t·d_{t−k}, with the integer deviation d_t = n·x_t − S.
+    * A lag with no predecessor day adds 0. */
+  private def lagCovariances(daily: DataFrame, maxLag: Int): DataFrame = {
     val wAll = Window.partitionBy("event_type")
     val wOrd = Window.partitionBy("event_type").orderBy("day")
-    val dev = daily
+    val dev0 = daily
       .withColumn("n", count(lit(1)).over(wAll))
       .withColumn("s", sum(col("x")).over(wAll))
       .withColumn("d0", col("n") * col("x") - col("s"))
-      .withColumn("d1", lag(col("d0"), 1).over(wOrd))
-      .withColumn("d2", lag(col("d0"), 2).over(wOrd))
-      .withColumn("d3", lag(col("d0"), 3).over(wOrd))
-    def num(k: String) =
+    val dev = (1 to maxLag).foldLeft(dev0) { (df, k) =>
+      df.withColumn(s"d$k", lag(col("d0"), k).over(wOrd))
+    }
+    def num(k: Int) =
       sum(when(col(s"d$k").isNotNull, col("d0") * col(s"d$k")).otherwise(0L))
-    val agg = dev.groupBy("event_type").agg(
-      max(col("n")).as("n_days"), max(col("s")).as("total"),
-      sum(col("d0") * col("d0")).as("den"),
-      num("1").as("num1"), num("2").as("num2"), num("3").as("num3"))
-    def acf(k: Int) =
-      when(col("den") =!= 0L, col(s"num$k") / col("den")).as(s"acf$k")
-    agg.select(col("event_type"), col("n_days"), col("total"), col("den"),
-        col("num1"), col("num2"), col("num3"), acf(1), acf(2), acf(3))
-      .orderBy("event_type")
+        .as(s"num$k")
+    dev.groupBy("event_type").agg(
+      max(col("n")).as("n_days"),
+      max(col("s")).as("total") +: sum(col("d0") * col("d0")).as("den") +:
+        (1 to maxLag).map(num): _*)
   }
 
   val autocorrelationOracle: String =
@@ -1413,8 +1432,8 @@ object Analytics {
     val iv = events
       .filter(col("ts").isNotNull && col("value").isNotNull)
       .select(col("user_id"), col("event_id"),
-        unix_timestamp(date_trunc("second", col("ts"))).as("start"),
-        (unix_timestamp(date_trunc("second", col("ts")))
+        unix_timestamp(toSecond(col("ts"))).as("start"),
+        (unix_timestamp(toSecond(col("ts")))
           + cents(col("value"))).as("end"))
     val w = Window.partitionBy("user_id").orderBy("start", "event_id")
     val prevEnd = max(col("end")).over(w.rowsBetween(Window.unboundedPreceding, -1))
@@ -1628,26 +1647,7 @@ object Analytics {
 
   /** [[dominantPeriod]] over an explicit events frame. */
   def dominantPeriodOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-      .agg(count(lit(1)).as("x"))
-    val wAll = Window.partitionBy("event_type")
-    val wOrd = Window.partitionBy("event_type").orderBy("day")
-    val dev0 = daily
-      .withColumn("n", count(lit(1)).over(wAll))
-      .withColumn("s", sum(col("x")).over(wAll))
-      .withColumn("d0", col("n") * col("x") - col("s"))
-    val dev = (1 to PeriodMaxLag).foldLeft(dev0) { (df, k) =>
-      df.withColumn(s"d$k", lag(col("d0"), k).over(wOrd))
-    }
-    def num(k: Int) =
-      sum(when(col(s"d$k").isNotNull, col("d0") * col(s"d$k")).otherwise(0L))
-        .as(s"num$k")
-    val agg = dev.groupBy("event_type").agg(
-      max(col("n")).as("n_days"),
-      sum(col("d0") * col("d0")).as("den") +:
-        (1 to PeriodMaxLag).map(num): _*)
+    val agg = lagCovariances(dailyCounts(events), PeriodMaxLag)
     val entries = (1 to PeriodMaxLag).map(k =>
       struct(col(s"num$k").as("num"), lit(-k.toLong).as("nlag")))
     agg
@@ -1791,12 +1791,7 @@ object Analytics {
 
   /** [[theilSen]] over an explicit events frame. */
   def theilSenOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(events)
     val b = daily.select(col("event_type").as("et2"), col("day").as("d2"),
       col("x").as("x2"))
     val pairs = daily
@@ -1877,14 +1872,7 @@ object Analytics {
     * count) — it materializes once so the corpus scan is not replayed
     * per fork (the a29/dq7 rule). */
   def mannKendallOf(events: DataFrame): DataFrame = {
-    val daily = graft.ops.Materialize(
-      events
-        .filter(col("ts").isNotNull && col("event_type").isNotNull)
-        .groupBy(col("event_type"),
-          datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-            .cast("long").as("day"))
-        .agg(count(lit(1)).as("x")),
-      "a36_daily")
+    val daily = graft.ops.Materialize(dailyCounts(events), "a36_daily")
     val b = daily.select(col("event_type").as("et2"), col("day").as("d2"),
       col("x").as("x2"))
     val sStat = daily
@@ -1996,14 +1984,7 @@ object Analytics {
 
   /** [[ewmaBurst]] over an explicit events frame. */
   def ewmaBurstOf(events: DataFrame): DataFrame = {
-    val daily = graft.ops.Materialize(
-      events
-        .filter(col("ts").isNotNull && col("event_type").isNotNull)
-        .groupBy(col("event_type"),
-          datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-            .cast("long").as("day"))
-        .agg(count(lit(1)).as("x")),
-      "a37_daily")
+    val daily = graft.ops.Materialize(dailyCounts(events), "a37_daily")
     val b = daily.select(col("event_type").as("et2"), col("day").as("d2"),
       col("x").as("x2"))
     val trail = daily
@@ -2202,12 +2183,7 @@ object Analytics {
 
   /** [[dowAnova]] over an explicit events frame. */
   def dowAnovaOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(events)
       .withColumn("dow", expr("day % 7"))
     val byDow = daily.groupBy("event_type", "dow")
       .agg(count(lit(1)).as("n_g"), sum(col("x")).as("s_g"))
@@ -2290,19 +2266,9 @@ object Analytics {
 
   /** [[sessionDurations]] over an explicit events frame. */
   def sessionDurationsOf(events: DataFrame): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
-    val ev = events
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .withColumn("ts_sec", date_trunc("second", col("ts")))
-      .withColumn("prev_ts", lag(col("ts_sec"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts_sec").cast("long") - col("prev_ts").cast("long") > 1800, 1)
-          .otherwise(0))
-      .withColumn("session_no",
-        sum(col("new_session")).over(
-          byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val sessions = ev.groupBy(col("user_id"), col("session_no"))
+    val sessions = numberSessions(
+        events.filter(col("user_id").isNotNull && col("ts").isNotNull))
+      .groupBy(col("user_id"), col("session_no"))
       .agg(count(lit(1)).as("n_events"),
         (max(col("ts_sec").cast("long")) - min(col("ts_sec").cast("long")))
           .as("dur_sec"))
@@ -2455,12 +2421,7 @@ object Analytics {
 
   /** [[burstiness]] over an explicit events frame. */
   def burstinessOf(events: DataFrame): DataFrame = {
-    val daily = events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("x"))
+    val daily = dailyCounts(events)
     daily.groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
         sum(col("x")).as("sum_x"),
@@ -2495,12 +2456,7 @@ object Analytics {
   /** [[spearmanPairs]] over an explicit events frame. */
   def spearmanPairsOf(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = graft.ops.Materialize(events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("x")), "spearman_daily")
+    val daily = graft.ops.Materialize(dailyCounts(events), "spearman_daily")
     val spine = daily.select("day").distinct()
       .crossJoin(daily.select("event_type").distinct())
     val filled = spine.join(daily, Seq("event_type", "day"), "left")
@@ -2604,9 +2560,7 @@ object Analytics {
   def newVsReturningOf(events: DataFrame): DataFrame = {
     val ud = graft.ops.Materialize(events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .select(col("user_id"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
+      .select(col("user_id"), epochDay(col("ts")).as("day"))
       .distinct(), "user_days")
     val newPerDay = ud.groupBy("user_id")
       .agg(min(col("day")).as("day"))
@@ -2657,9 +2611,7 @@ object Analytics {
   def activeDaysOf(events: DataFrame): DataFrame = {
     val perUser = events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
-      .groupBy(col("user_id"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
+      .groupBy(col("user_id"), epochDay(col("ts")).as("day"))
       .agg(count(lit(1)).as("n_events"))
       .groupBy("user_id")
       .agg(count(lit(1)).as("active_days"), sum(col("n_events")).as("m"))
@@ -2722,10 +2674,8 @@ object Analytics {
     val perUser = events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .groupBy("user_id")
-      .agg(min(datediff(col("ts").cast("date"),
-          lit("1970-01-01").cast("date")).cast("long")).as("first_day"),
-        max(datediff(col("ts").cast("date"),
-          lit("1970-01-01").cast("date")).cast("long")).as("last_day"),
+      .agg(min(epochDay(col("ts"))).as("first_day"),
+        max(epochDay(col("ts"))).as("last_day"),
         min(date_format(col("ts"), "yyyy-MM")).as("cohort"))
     val end = perUser.agg(max(col("last_day")).as("end_day"))
     perUser.crossJoin(broadcast(end))
@@ -2781,8 +2731,7 @@ object Analytics {
     val base = events
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(date_format(col("ts"), "yyyy-MM").as("month"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"),
+        epochDay(col("ts")).as("day"),
         col("user_id"))
     val dau = base.groupBy("month", "day")
       .agg(count_distinct(col("user_id")).as("dau"))
@@ -2847,12 +2796,7 @@ object Analytics {
     import org.apache.spark.sql.expressions.Window
     // O(types×days) series feeds both the median rank and the sign
     // join — materialize once (the a29/dq7 fork rule)
-    val daily = graft.ops.Materialize(events
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("event_type"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
-      .agg(count(lit(1)).as("x")), "runs_daily")
+    val daily = graft.ops.Materialize(dailyCounts(events), "runs_daily")
     // median by rank over the per-type day series (odd count → middle
     // row; even → the LOWER middle — a fixed total-order choice both
     // engines replay; only the sign split needs consistency, not the

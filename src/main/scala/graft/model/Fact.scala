@@ -32,7 +32,7 @@ object Fact {
     Tables.events(s, d)
       .select(
         col("event_id"),
-        unix_timestamp(date_trunc("second", col("ts"))).as("epoch_sec"))
+        unix_timestamp(toSecond(col("ts"))).as("epoch_sec"))
       .withColumn("epoch_ms", col("epoch_sec") * 1000)
       .withColumn("ts_restored",
         epochMsToTs(col("epoch_ms")).cast("string"))
@@ -50,7 +50,7 @@ object Fact {
       .withColumn("k",
         regexp_extract(col("props"), "\"k\": (\\d+)", 1).cast("int"))
       .withColumn("depth", when(col("k") < 20, null).otherwise(col("k")))
-      .withColumn("ts_sec", date_trunc("second", col("ts")))
+      .withColumn("ts_sec", toSecond(col("ts")))
     ev.filter(rangeFilter(col("value"), 0.5, 450.0))
       .filter(tsBetween(col("ts_sec"), "2024-01-01 00:00:00", "2024-12-31 00:00:00"))
       .na.fill(0, Seq("depth"))

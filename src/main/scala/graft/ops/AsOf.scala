@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Functions.toSecond
 
 /** As-of (temporal point-in-time) join — the canonical operator Spark's
   * built-in joins lack: each probe row picks the LATEST build row with
@@ -154,18 +155,26 @@ object AsOf {
       .drop("__side", "__bp", "__bkt", "__within", "__ck", "__cb", "__carry")
   }
 
+  /** The as-of queries' probe and build frames: events as (k, t,
+    * event_id) and orders as (k, t, o_orderkey), user_id and o_custkey
+    * folded into a shared 150-key domain, event time in whole seconds,
+    * and one order per (k, t), the one with the largest o_orderkey. */
+  def asofFrames(events: DataFrame, orders: DataFrame)
+      : (DataFrame, DataFrame) = {
+    val ev = events.select((col("user_id") % 150).as("k"),
+      toSecond(col("ts")).as("t"), col("event_id"))
+    val ord = orders
+      .select((col("o_custkey") % 150).as("k"), col("o_orderdate").as("t"),
+        col("o_orderkey"))
+      .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
+    (ev, ord)
+  }
+
   /** Driver query: each event joined to the latest order of its key
     * (user_id and o_custkey folded into a shared 150-key domain) with
     * order date ≤ event time. */
   def asofQuery(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).select(
-      (col("user_id") % 150).as("k"),
-      date_trunc("second", col("ts")).as("t"),
-      col("event_id"))
-    val ord = Tables.orders(s, d)
-      .select((col("o_custkey") % 150).as("k"), col("o_orderdate").as("t"),
-        col("o_orderkey"))
-      .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
+    val (ev, ord) = asofFrames(Tables.events(s, d), Tables.orders(s, d))
     asofLeft(ev, ord, "o_orderkey")
       .select(col("event_id"), col("k"), col("t").cast("string").as("t_s"),
         col("asof_o_orderkey"))
@@ -177,14 +186,7 @@ object AsOf {
     * the equivalence of the two implementations is an oracle-gated
     * fact, not a claim. */
   def asofBucketedQuery(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).select(
-      (col("user_id") % 150).as("k"),
-      date_trunc("second", col("ts")).as("t"),
-      col("event_id"))
-    val ord = Tables.orders(s, d)
-      .select((col("o_custkey") % 150).as("k"), col("o_orderdate").as("t"),
-        col("o_orderkey"))
-      .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
+    val (ev, ord) = asofFrames(Tables.events(s, d), Tables.orders(s, d))
     asofLeftBucketed(ev, ord, "o_orderkey")(
       t => floor(unix_timestamp(t) / 86400L).cast("long"))
       .select(col("event_id"), col("k"), col("t").cast("string").as("t_s"),
@@ -223,14 +225,7 @@ object AsOf {
     * The exact-second arithmetic and the SLA compare are integers;
     * oracle replays via native ASOF JOIN + the same CASE. */
   def asofToleranceQuery(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).select(
-      (col("user_id") % 150).as("k"),
-      date_trunc("second", col("ts")).as("t"),
-      col("event_id"))
-    val ord = Tables.orders(s, d)
-      .select((col("o_custkey") % 150).as("k"), col("o_orderdate").as("t"),
-        col("o_orderkey"))
-      .groupBy("k", "t").agg(max("o_orderkey").as("o_orderkey"))
+    val (ev, ord) = asofFrames(Tables.events(s, d), Tables.orders(s, d))
     asofToleranceOf(ev, ord).orderBy("event_id")
   }
 
@@ -299,7 +294,7 @@ object AsOf {
   def nearestEventQuery(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .withColumn("ts_sec", date_trunc("second", col("ts")))
+      .withColumn("ts_sec", toSecond(col("ts")))
       .withColumn("es", unix_timestamp(col("ts_sec")))
     val clicks = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id"), col("es"))

@@ -169,15 +169,10 @@ object Dedup {
     // exchange reuse computes the identical signature aggregation ONCE
     // (both sides read the same shuffle output) — so a local
     // checkpoint here is pure write+read overhead (measured ~0.4 s per
-    // query at sf0.1). A durable session still persists the band table:
-    // it is part of the durable lifecycle (MaterializeSpec reads it back).
-    val bandsRaw = sigs
+    // query at sf0.1), whatever the session's seam storage.
+    val bands = sigs
       .select(col(idCol), explode(bandStructs).as("bs"))
       .select(col(idCol), col("bs.band").as("band"), col("bs.sig").as("sig"))
-    val bands =
-      if (Materialize.durable(docs.sparkSession))
-        Materialize(bandsRaw, "minhash_bands")
-      else bandsRaw
     // No STATIC join-strategy hints: the Materialize seam injects
     // MEASURED block sizes into the checkpointed frames' stats
     // (round-9 — Bridge.withMeasuredStats), so Catalyst sees
@@ -992,10 +987,8 @@ object Dedup {
     // O(edges) driver memory, so size the threshold like a broadcast
     // threshold, not a "fits on disk" bound. Past it — billions of
     // edges at warehouse scale — the distributed O(log diameter) loop
-    // below is the path; a durable session always loops (its contract
-    // is durable per-round artifacts).
-    if (!Materialize.durable(e.sparkSession) && e.count() <= localThreshold)
-      return localComponents(e)
+    // below is the path, whatever the session's seam storage.
+    if (e.count() <= localThreshold) return localComponents(e)
     val sym = Graph.symmetric(e)
     // identity-label init stays LAZY: it is one distinct over the
     // (materialized) edge table, trivially re-derivable on recovery, so

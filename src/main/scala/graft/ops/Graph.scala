@@ -276,8 +276,8 @@ object Graph {
     * Everything is exact integers: RA terms quantize as 10^6 div deg —
     * integer division per term, summed as longs, so partition order
     * can never move the result (the sim7 rule, with no doubles at
-    * all). Shape: symmetrized-distinct edge set, wedge join keyed on
-    * the middle vertex, LEFT ANTI against existing edges, one (u,v)
+    * all). Shape: the [[undirected]] list and its [[symmetric]] arcs,
+    * wedge join keyed on the middle vertex, LEFT ANTI against existing edges, one (u,v)
     * aggregation, TakeOrdered cap. */
   def linkPrediction(s: SparkSession, d: String): DataFrame =
     linkPredictionOf(Tables.embeddings(s, d))
@@ -288,19 +288,16 @@ object Graph {
       "lp_edges"))
 
   /** The scoring pipeline over an arbitrary (src, dst) arc list —
-    * [[linkPredictionOf]] minus the kNN build (the spec's seam). */
+    * [[linkPredictionOf]] minus the kNN build (the spec's seam).
+    * Self-loops are ignored, as in every graph built by [[undirected]]. */
   def linkScoresOf(edges: DataFrame): DataFrame = {
-    val und = edges
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    val deg = und.groupBy(col("src").as("w")).agg(count(lit(1)).as("deg"))
-    val e1 = und.select(col("src").as("u"), col("dst").as("w"))
-    val e2 = und.select(col("src").as("w"), col("dst").as("v"))
-    val existing = und.filter(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
+    val und = undirected(edges)
+    val arcs = symmetric(und)
+    val e1 = arcs.select(col("u"), col("v").as("w"))
+    val e2 = arcs.select(col("u").as("w"), col("v"))
     e1.join(e2, "w").filter(col("u") < col("v"))
-      .join(existing, Seq("u", "v"), "left_anti")
-      .join(deg, "w")
+      .join(und, Seq("u", "v"), "left_anti")
+      .join(degrees(und).withColumnRenamed("id", "w"), "w")
       .groupBy("u", "v")
       .agg(count(lit(1)).as("cn"), sum(expr("1000000 div deg")).as("ra_e6"))
       .orderBy(desc("cn"), desc("ra_e6"), col("u"), col("v"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Functions.epochDay
 
 /** Data-layout operators: compute the clustering keys a 100-TB table
   * is physically ordered by. Z-ordering (bit-interleaving two scan
@@ -143,8 +144,7 @@ object Layout {
     val files = events
       .filter(col("ts").isNotNull)
       .groupBy(
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"),
+        epochDay(col("ts")).as("day"),
         pmod(col("user_id"), lit(64L)).as("shard"))
       .agg(count(lit(1)).as("n_rows"))
     val wBefore = Window.partitionBy("day").orderBy("shard")

@@ -5,9 +5,9 @@ import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.filter.AbstractFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Materialization seam for iterative/multi-read pipelines (MinHash
-  * shingle tables, LSH band tables, label-propagation rounds, IVF
-  * quantized vectors).
+/** Materialization seam for iterative and multi-read pipelines: MinHash
+  * shingle tables, label-propagation rounds, IVF quantized vectors and
+  * the other corpus-derived tables a plan reads more than once.
   *
   * Two lifecycles, chosen once per session by [[DurableDirKey]]:
   *
@@ -114,9 +114,6 @@ object Materialize {
   /** The session's durable seam directory, if one is set. */
   private def storageDir(spark: SparkSession): Option[String] =
     spark.conf.getOption(DurableDirKey).filter(_.nonEmpty)
-
-  /** Whether this session's seams write durable parquet. */
-  def durable(spark: SparkSession): Boolean = storageDir(spark).nonEmpty
 
   /** Runs `body` with this session's seams durable under `dir`, then
     * restores the session's previous setting. */

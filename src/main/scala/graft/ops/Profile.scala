@@ -517,9 +517,7 @@ object Profile {
   def chisqDriftOf(events: DataFrame): DataFrame = {
     val ev = events
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(col("event_type"),
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"))
+      .select(col("event_type"), epochDay(col("ts")).as("day"))
     val bounds = ev.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val perType = ev.crossJoin(broadcast(bounds))
       .withColumn("first_half",
@@ -641,8 +639,7 @@ object Profile {
   def volumeAnomalyOf(events: DataFrame): DataFrame = {
     val daily = events
       .filter(col("ts").isNotNull)
-      .groupBy(datediff(col("ts").cast("date"),
-        lit("1970-01-01").cast("date")).cast("long").as("day"))
+      .groupBy(epochDay(col("ts")).as("day"))
       .agg(count(lit(1)).as("x"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy("day").rowsBetween(-7, -1)
@@ -726,9 +723,7 @@ object Profile {
   def ksDriftOf(events: DataFrame): DataFrame = {
     val ev = events
       .filter(col("ts").isNotNull && col("value").isNotNull)
-      .select(
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"),
+      .select(epochDay(col("ts")).as("day"),
         expr("CAST(round(value * 100) AS BIGINT) div 100").as("bucket"))
     val bounds = ev.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     // the O(buckets) table is read by four downstream consumers (CDF,
@@ -972,11 +967,9 @@ object Profile {
     val cents = graft.functions.Functions.cents(col("value"))
     val groups = events
       .filter(col("ts").isNotNull)
-      .groupBy(
-        datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("day"),
+      .groupBy(epochDay(col("ts")).as("day"),
         col("user_id"),
-        date_trunc("second", col("ts")).as("ts_sec"),
+        toSecond(col("ts")).as("ts_sec"),
         col("event_type"), cents.as("cents"))
       .agg(count(lit(1)).as("m"))
     groups.groupBy("day")
@@ -1031,9 +1024,9 @@ object Profile {
       .filter(col("event_id").isNotNull && col("ts").isNotNull)
       .groupBy(expr(s"event_id div $IdGapBucket").as("bucket"))
       .agg(count(lit(1)).as("n"),
-        min(unix_timestamp(date_trunc("second", col("ts"))))
+        min(unix_timestamp(toSecond(col("ts"))))
           .as("ts_min_sec"),
-        max(unix_timestamp(date_trunc("second", col("ts"))))
+        max(unix_timestamp(toSecond(col("ts"))))
           .as("ts_max_sec")), "idtime_buckets")
     val w = Window.orderBy("bucket")
     val flagged = buckets

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Functions.toSecond
 
 /** Interval (range) join — the second classic operator Spark's equi-join
   * planner lacks: match each point row to every interval [start, end)
@@ -35,7 +36,7 @@ object RangeJoin {
     val B = BucketSeconds
     val base = Tables.events(s, d).select(
       col("event_id"), col("user_id").as("k"), col("event_type"),
-      date_trunc("second", col("ts")).cast("long").as("t_ep"))
+      toSecond(col("ts")).cast("long").as("t_ep"))
     val ev = base.select(col("event_id"), col("k"), col("t_ep"))
       .withColumn("bucket", floor(col("t_ep") / B).cast("long"))
     val iv = base.filter(col("event_type") === "error")
@@ -98,7 +99,7 @@ object RangeJoin {
   def overlapJoinQuery(s: SparkSession, d: String): DataFrame = {
     val iv = Tables.events(s, d).filter(col("event_type") === "error")
       .select(col("user_id").as("k"), col("event_id").as("id"),
-        date_trunc("second", col("ts")).cast("long").as("s_ep"))
+        toSecond(col("ts")).cast("long").as("s_ep"))
       .withColumn("e_ep", col("s_ep") + BucketSeconds)
     overlapPairsOf(iv, BucketSeconds)
       .select(col("k").as("user_id"), col("id_a").as("incident_a"),

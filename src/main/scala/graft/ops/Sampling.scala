@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Functions.md5Hash60
+import graft.functions.Functions.{epochDay, md5Hash60}
 
 /** Relational sampling operators beyond the document-corpus ones
   * (tx13/tx14/smp1/smp2): the shapes contrastive / two-tower training
@@ -580,9 +580,7 @@ object Sampling {
     val base = Materialize(
       events
         .filter(col("ts").isNotNull && col("user_id").isNotNull)
-        .select(col("user_id"),
-          datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-            .cast("long").as("day")),
+        .select(col("user_id"), epochDay(col("ts")).as("day")),
       "smp7_base")
     val bounds = base.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val assigned = Materialize(

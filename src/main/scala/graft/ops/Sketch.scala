@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Functions.{cents, md5Hash60}
+import graft.functions.Functions.{cents, epochDay, md5Hash60}
 import graft.ops.TextStats.shingles
 
 /** Deterministic HyperLogLog distinct-count sketch — the mergeable
@@ -766,8 +766,7 @@ object Sketch {
       events
         .filter(col("ts").isNotNull && col("user_id").isNotNull)
         .select(
-          datediff(col("ts").cast("date"), lit("1970-01-01").cast("date"))
-            .cast("long").as("day"),
+          epochDay(col("ts")).as("day"),
           col("user_id").cast("string").as("uid"))
         .distinct()
         .withColumn("h", md5Hash60(col("uid"), KmvSeed))

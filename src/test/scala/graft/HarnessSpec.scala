@@ -54,7 +54,7 @@ class HarnessSpec extends AnyFunSuite {
     val rows = lines.result().map(parse)
     assert(rows.map(_.get("query").asText) == names)
     rows.foreach { r =>
-      assert(keys(r) == Set("query", "action", "runs", "p50", "min", "max", "secs"))
+      assert(keys(r) == Set("query", "action", "cold", "runs", "p50", "min", "max", "secs"))
       assert(r.get("action").asText == "noop")
       assertRuns(r, 2)
     }

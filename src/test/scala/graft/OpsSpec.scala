@@ -1624,13 +1624,15 @@ class OpsSpec extends AnyFunSuite {
   test("g5 RA weighting: a shared 2-degree neighbour outranks a shared 5-degree hub at equal CN") {
     // hub 100 ~ {1..5}; tight node 200 ~ {6,7}: every candidate pair
     // has cn=1, but (6,7)'s witness has degree 2 vs the hub's 5
-    val edges = ((1L to 5L).map(i => (100L, i)) ++ Seq((200L, 6L), (200L, 7L)))
-      .toDF("src", "dst")
-    val got = graft.ops.Graph.linkScoresOf(edges)
-      .as[(Long, Long, Long, Long)].collect().toList
+    val arcs = (1L to 5L).map(i => (100L, i)) ++ Seq((200L, 6L), (200L, 7L))
     val hubPairs = (1L to 5L).flatMap(i => (i + 1 to 5L).map(j =>
       (i, j, 1L, 200000L))).toList
-    assert(got == (6L, 7L, 1L, 500000L) :: hubPairs)
+    // a self-loop on the hub is ignored: its degree stays 5, not 6
+    for (edges <- Seq(arcs, arcs :+ ((100L, 100L)))) {
+      val got = graft.ops.Graph.linkScoresOf(edges.toDF("src", "dst"))
+        .as[(Long, Long, Long, Long)].collect().toList
+      assert(got == (6L, 7L, 1L, 500000L) :: hubPairs, edges)
+    }
   }
 
   test("sim8 PQ on a zero-error lattice: codes hit the planted patterns, ADC order = exact L2 order") {

@@ -356,8 +356,8 @@ object Analytics {
 
   /** T4 — tumbling event-time windows as a batch aggregation (the
     * reference's month-window assignment, generalized): `window()` buckets
-    * each event into its day, exactly what the streaming facade does with
-    * a watermark. Start/end emitted as strings for oracle parity. */
+    * each event into its day. Start/end emitted as strings for oracle
+    * parity. */
   def tumblingWindows(s: SparkSession, d: String): DataFrame =
     windowStats(Tables.events(s, d), window(col("ts"), "1 day"))
 
@@ -370,9 +370,7 @@ object Analytics {
     * the pre-aggregation row count (the inherent hopping-window cost).
     * Epoch-aligned starts in the pinned UTC session zone; the oracle
     * regenerates each event's window set from the same integer
-    * arithmetic (floor-division bounds on epoch seconds). The same
-    * expression runs unchanged under readStream + watermark — t4's
-    * streaming twin covers the machinery (StreamingSpec). */
+    * arithmetic (floor-division bounds on epoch seconds). */
   def hoppingWindows(s: SparkSession, d: String): DataFrame =
     windowStats(Tables.events(s, d).filter(col("ts").isNotNull),
       window(col("ts"), "1 day", "6 hours"))

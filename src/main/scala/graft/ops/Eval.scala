@@ -29,9 +29,8 @@ import graft.functions.Functions
   */
 object Eval {
 
-  /** Severity-class bucketing on integer cents (crit/high/med/low).
-    * Public: the streaming confusion twin applies the same classifier. */
-  def bucketCents(cents: Column): Column =
+  /** Severity-class bucketing on integer cents (crit/high/med/low). */
+  private def bucketCents(cents: Column): Column =
     when(cents >= 40000L, "crit")
       .when(cents >= 25000L, "high")
       .when(cents >= 10000L, "med")
@@ -39,8 +38,8 @@ object Eval {
 
   /** Deterministic "model score" noise: stable signed md5 offset in
     * [-10000, 10000] keyed by event_id (seed 11); the score is the true
-    * cents plus this. Public for the streaming twin. */
-  def scoreNoise(idCol: Column): Column =
+    * cents plus this. */
+  private def scoreNoise(idCol: Column): Column =
     pmod(Functions.md5Hash60(idCol.cast("string"), 11), lit(20001L)) - lit(10000L)
 
   private def scored(s: SparkSession, d: String): DataFrame = {

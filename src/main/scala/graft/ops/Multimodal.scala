@@ -261,6 +261,12 @@ object Multimodal {
     base ++ dups
   }
 
+  /** A fixture's (id, bytes) pairs as a two-partition [[Media]] frame. */
+  private def mediaFrame(s: SparkSession,
+      items: Seq[(Long, Array[Byte])]): Dataset[Media] =
+    s.createDataset(items.map { case (id, b) => Media(id, b, b.length) })(
+      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+
   /** mm4 — aHash + dHash over the deterministic fixture, the
     * oracle-checked face of the perceptual-hash stage ([[aHashAll]] /
     * [[dHashAll]] are the corpus-scale path: narrow mapPartitions
@@ -271,9 +277,7 @@ object Multimodal {
     * 0), anchoring the goldens to the definitions rather than to a
     * recorded run. */
   def perceptualHashQuery(s: SparkSession, d: String): DataFrame = {
-    val media = s.createDataset(fixtureImages().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureImages())
     val a = aHashAll(media).toDF("img_id", "ahash")
     val dh = dHashAll(media).toDF("img_id", "dhash")
     a.join(dh, "img_id").orderBy("img_id")
@@ -326,9 +330,7 @@ object Multimodal {
   }
 
   def imageNearDupQuery(s: SparkSession, d: String): DataFrame = {
-    val media = s.createDataset(fixtureImagesWithDups().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureImagesWithDups())
     val a = aHashAll(media).toDF("img_id", "ahash")
     val dh = dHashAll(media).toDF("img_id", "dhash")
     imageNearDupOf(a.join(dh, "img_id"))
@@ -550,9 +552,7 @@ object Multimodal {
     * → pixel extraction end-to-end against an independent evaluation
     * of the same integer formulas. */
   def channelStatsQuery(s: SparkSession, d: String): DataFrame = {
-    val media = s.createDataset(fixtureImages().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureImages())
     channelStatsAll(media).toDF().orderBy("img_id")
   }
 
@@ -664,9 +664,7 @@ object Multimodal {
     * by the same x//8, y//8 tiling — encode → decode → tiling
     * certified end to end, the mm8 discipline one level finer. */
   def patchStatsQuery(s: SparkSession, d: String): DataFrame = {
-    val media = s.createDataset(fixtureImages().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureImages())
     patchStatsAll(media).toDF()
       .orderBy("img_id", "patch_y", "patch_x")
   }
@@ -778,9 +776,7 @@ object Multimodal {
     * comparison covers the byte encode, the little-endian decode, the
     * framing (partial tails included), and the three feature sums. */
   def audioFrameQuery(s: SparkSession, d: String): DataFrame = {
-    val media = s.createDataset(fixtureAudio().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureAudio())
     audioFramesAll(media).toDF().orderBy("track_id", "frame_idx")
   }
 
@@ -801,9 +797,7 @@ object Multimodal {
     * no shuffle beyond the per-track partition. */
   def onsetFrameQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val media = s.createDataset(fixtureAudio().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureAudio())
     val w = Window.partitionBy("track_id").orderBy("frame_idx")
     audioFramesAll(media).toDF()
       .withColumn("prev_energy", lag(col("energy"), 1).over(w))
@@ -907,9 +901,7 @@ object Multimodal {
     * pass certifies encode → little-endian decode → every accumulator. */
   def audioHealthQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.Encoders
-    val media = s.createDataset(fixtureAudio().map {
-      case (id, b) => Media(id, b, b.length) })(
-      Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureAudio())
     media.mapPartitions(_.map(pcmHealth))(Encoders.product[AudioHealth])
       .toDF().orderBy("track_id")
   }
@@ -964,11 +956,8 @@ object Multimodal {
     * finish the job. Everything an exact integer but the final
     * fraction (one long/long division). */
   def lowEnergySegmentsQuery(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.expressions.Window
-    val media = s.createDataset(fixtureAudio().map {
-      case (id, b) => Media(id, b, b.length) })(
-      Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureAudio())
     val frames = audioFramesAll(media).toDF()
     val tot = frames.groupBy("track_id")
       .agg(count(lit(1)).as("n_frames"), sum(col("energy")).as("tot_energy"),
@@ -1078,6 +1067,11 @@ object Multimodal {
       Video(id, bytes, w, h, nf)
     }
 
+  /** A video fixture as a two-partition [[Video]] frame. */
+  private def videoFrame(s: SparkSession, clips: Seq[Video]): Dataset[Video] =
+    s.createDataset(clips)(org.apache.spark.sql.Encoders.product[Video])
+      .repartition(2)
+
   case class FrameDiff(video_id: Long, frame_idx: Long, diff_sum: Long,
       is_cut: Boolean)
 
@@ -1112,8 +1106,7 @@ object Multimodal {
     * the accumulator. */
   def sceneCutQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.Encoders
-    val vids = s.createDataset(fixtureVideo())(Encoders.product[Video])
-      .repartition(2)
+    val vids = videoFrame(s, fixtureVideo())
     vids.mapPartitions(_.flatMap(frameDiffs))(Encoders.product[FrameDiff])
       .toDF().orderBy("video_id", "frame_idx")
   }
@@ -1167,16 +1160,13 @@ object Multimodal {
   def avSyncQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.expressions.Window
-    val vids = s.createDataset(fixtureVideo())(Encoders.product[Video])
-      .repartition(2)
+    val vids = videoFrame(s, fixtureVideo())
     val cuts = vids.mapPartitions(_.flatMap(frameDiffs))(
         Encoders.product[FrameDiff])
       .toDF().filter(col("is_cut"))
       .select(col("video_id"), col("frame_idx").as("cut_frame"),
         (col("frame_idx") * VideoFrameMs).as("cut_ms"))
-    val media = s.createDataset(fixtureAudio().map {
-      case (id, b) => Media(id, b, b.length) })(
-      Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureAudio())
     val w = Window.partitionBy("track_id").orderBy("frame_idx")
     val onsets = audioFramesAll(media).toDF()
       .withColumn("prev_energy", lag(col("energy"), 1).over(w))
@@ -1314,8 +1304,7 @@ object Multimodal {
     * the fingerprint value, never clip×clip. */
   def videoNearDupQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.Encoders
-    val vids = s.createDataset(fixtureVideo2())(Encoders.product[Video])
-      .repartition(2)
+    val vids = videoFrame(s, fixtureVideo2())
     val fps = vids.mapPartitions(_.flatMap(frameFingerprints))(
         Encoders.product[(Long, Long, Long)])
       .toDF("video_id", "frame_idx", "fp")
@@ -1374,8 +1363,7 @@ object Multimodal {
   def keyframeQuery(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.expressions.Window
-    val vids = s.createDataset(fixtureVideo())(Encoders.product[Video])
-      .repartition(2)
+    val vids = videoFrame(s, fixtureVideo())
     val diffs = vids
       .mapPartitions(_.flatMap(frameDiffs))(Encoders.product[FrameDiff])
       .toDF()
@@ -1563,10 +1551,7 @@ object Multimodal {
     * the frame features accumulate inside the narrow decode stage
     * (zero shuffle), then ONE track-keyed aggregation. */
   def audioDynamicsQuery(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    val media = s.createDataset(fixtureAudio().map {
-      case (id, b) => Media(id, b, b.length) })(
-      Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureAudio())
     val frames = audioFramesAll(media).toDF()
     frames
       .groupBy("track_id")
@@ -1716,9 +1701,7 @@ object Multimodal {
     * the same 4-neighbor stencil via keyed self-joins on the SQL
     * grid — decode and stencil certified together. */
   def sharpnessQuery(s: SparkSession, d: String): DataFrame = {
-    val media = s.createDataset(fixtureImages().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val media = mediaFrame(s, fixtureImages())
     sharpnessAll(media).toDF().orderBy("img_id")
   }
 
@@ -1860,12 +1843,8 @@ object Multimodal {
     * NULL track and 0 votes via the left join from the query spec. */
   def audioFingerprintQuery(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val cat = s.createDataset(fixtureFingerprintCatalog().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
-    val qry = s.createDataset(fixtureAudioQueries().map {
-      case (id, b) => Media(id, b, b.length) })(
-      org.apache.spark.sql.Encoders.product[Media]).repartition(2)
+    val cat = mediaFrame(s, fixtureFingerprintCatalog())
+    val qry = mediaFrame(s, fixtureAudioQueries())
     val catLm = landmarksOf(
       audioFramesAll(cat).toDF().select("track_id", "frame_idx", "energy"),
       "track_id")

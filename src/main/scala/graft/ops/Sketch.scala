@@ -314,9 +314,9 @@ object Sketch {
 
   /** Plain-JVM replay of [[graft.functions.Functions.md5Hash60]] —
     * identical bytes (`"seed:value"` UTF-8), identical 15-hex-digit
-    * prefix parse — for state code that runs outside Catalyst (the
-    * streaming bloom dedup's per-shard bitmap). Parity with the column
-    * expression is pinned in StreamingSpec. */
+    * prefix parse — the reference the specs replay sketch cells
+    * against outside Catalyst. Parity with the column expression is
+    * pinned in PropertySpec ("CMS on random corpora"). */
   def jvmHash60(v: String, seed: Int): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$seed:$v".getBytes("UTF-8")).map("%02x".format(_)).mkString

@@ -47,6 +47,22 @@ class OperatorSpec extends AnyFunSuite {
     assert(once.filter($"k" === 2L && $"src" === "i").count() == 0)
     val twice = Upsert.antiJoinUpsert(once, incoming, Seq("k"))
     assert(twice.count() == 3)
+    // j4's shape on real data (target = pre-2000 orders, incoming = big
+    // orders): folding the merge over 500-row chunks == the one-shot merge
+    val orders = Tables.orders(spark, sf)
+    val target0 = orders.filter($"o_orderdate" < lit("2000-01-01").cast("timestamp"))
+      .select($"o_orderkey".as("k"), lit("existing").as("src"))
+    val big = orders.filter($"o_totalprice" > 300000)
+      .select($"o_orderkey".as("k"), lit("inserted").as("src"))
+      .as[(Long, String)].collect().toSeq
+    val chunked = big.grouped(500).foldLeft(target0) { (t, chunk) =>
+      Upsert.antiJoinUpsert(t, chunk.toDF("k", "src"), Seq("k"))
+    }.as[(Long, String)].collect().toSet
+    val oneShot = Upsert.antiJoinUpsert(target0, big.toDF("k", "src"), Seq("k"))
+      .as[(Long, String)].collect().toSet
+    assert(big.size > 500 && oneShot.nonEmpty && chunked == oneShot,
+      s"chunked only ${(chunked -- oneShot).take(5)}, " +
+        s"one-shot only ${(oneShot -- chunked).take(5)}")
   }
 
   test("cogroup reconciliation: per-key two-sided diff matches the outer-join computation") {

@@ -735,6 +735,31 @@ class OpsSpec extends AnyFunSuite {
       .groupBy("lang", "reg").agg(max(col("mx")).as("mx"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(halves == whole, "merged half-sketches diverge from the whole")
+    // plain-JVM replay of registers and estimate on a slice: the same
+    // jvmHash60 index/rho split, the same exact integer scaled sum and
+    // its one division, so every output row agrees exactly
+    val slice = docs.filter(col("doc_id") % 10 === 0)
+    val w1 = Sketch.HllValueBits + 1
+    val replay = slice
+      .select(col("lang"), explode(TextStats.shingles(col("text"), 3)).as("sh"))
+      .as[(String, String)].collect().groupBy(_._1).map { case (lang, items) =>
+        val regs = new Array[Int](Sketch.HllM)
+        items.foreach { case (_, sh) =>
+          val h = Sketch.jvmHash60(sh, Sketch.HllSeed)
+          val reg = (h & (Sketch.HllM - 1)).toInt
+          // rho = W + 1 - bitlen(rem), W + 1 when rem == 0
+          val rho = w1 - (64 - java.lang.Long.numberOfLeadingZeros(h >> Sketch.HllP))
+          regs(reg) = math.max(regs(reg), rho)
+        }
+        val present = regs.filter(_ > 0)
+        val vEmpty = (Sketch.HllM - present.length).toLong
+        val sScaled = present.map(r => 1L << (w1 - r)).sum + vEmpty * (1L << w1)
+        (lang, vEmpty, sScaled, Sketch.HllNumerator / sScaled)
+      }.toSet
+    val batch = Sketch.estimateFromRegisters(Sketch.shingleRegisters(slice))
+      .as[(String, Long, Long, Double)].collect().toSet
+    assert(batch.nonEmpty && batch == replay,
+      s"batch only ${(batch -- replay).take(2)}, replay only ${(replay -- batch).take(2)}")
   }
 
   test("CMS sketch: never underestimates, near-exact on heavy hitters, cells merge by sum") {
@@ -1139,6 +1164,13 @@ class OpsSpec extends AnyFunSuite {
       .groupBy("priority", "bucket").agg(sum(col("cnt")).as("cnt"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(halves == whole, "summed half-histograms diverge from the whole")
+    // plain-JVM replay of the cells from (priority, total cents)
+    val replay = o.select(col("o_orderpriority"),
+        round(col("o_totalprice") * 100).cast("long"))
+      .as[(String, Long)].collect().toSeq
+      .groupBy { case (pr, c) => (pr, c >> Sketch.HistShift) }
+      .view.mapValues(_.size.toLong).toMap
+    assert(replay == whole, "cells diverge from the plain-JVM replay")
   }
 
   test("Bloom sketch: one-sided membership, eval docs fully flagged, words merge by OR") {
@@ -2179,13 +2211,27 @@ class OpsSpec extends AnyFunSuite {
       (3L, ts(9), 1L, "click", 1.0, "{}"),
       (4L, ts(100), 2L, "view", 1.0, "{}")) // user 2: no gap
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val got = graft.model.Analytics.gapHistogramOf(ev).collect()
-      .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("bucket")) ->
-        (r.getAs[Long]("n_gaps"), r.getAs[Long]("sum_gap_s"))).toMap
-    assert(got == Map(
+    def hist(df: org.apache.spark.sql.DataFrame) =
+      graft.model.Analytics.gapHistogramOf(df).collect()
+        .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("bucket")) ->
+          (r.getAs[Long]("n_gaps"), r.getAs[Long]("sum_gap_s"))).toMap
+    assert(hist(ev) == Map(
       ("click", 1L) -> (1L, 1L),
       ("click", 4L) -> (1L, 8L),
       ("view", 0L) -> (1L, 0L)))
+    // rows out of event_id order; user 2 ties at 50 s (click after view
+    // by id, a 0 s gap) and then waits 64 s (bucket 7: bin(64) = 1000000)
+    val ev2 = Seq((1L, ts(0), 1L, "view"), (3L, ts(1), 1L, "view"),
+      (2L, ts(1), 1L, "click"), (10L, ts(50), 2L, "view"),
+      (4L, ts(9), 1L, "click"), (11L, ts(50), 2L, "click"),
+      (12L, ts(114), 2L, "view"))
+      .toDF("event_id", "ts", "user_id", "event_type")
+    assert(hist(ev2) == Map(
+      ("click", 1L) -> (1L, 1L),
+      ("click", 4L) -> (1L, 8L),
+      ("view", 0L) -> (1L, 0L),
+      ("click", 0L) -> (1L, 0L),
+      ("view", 7L) -> (1L, 64L)))
   }
 
   test("tx33: cumulative vocabulary counts each type once at its first bucket") {

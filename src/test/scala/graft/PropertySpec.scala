@@ -239,22 +239,37 @@ class PropertySpec extends AnyFunSuite {
     import graft.ops.Sketch
     // random multiset of tokens with a skewed repeat distribution
     val vocab = Vector.tabulate(300)(i => s"tok$i")
+    // the replay below reads cells through the plain-JVM md5-60 hash,
+    // so first pin it to the column expression (same bytes both engines)
+    val sample = Seq("a b c", "tok9", "", "x:y", "ü ñ") ++ vocab
+    Seq(57, Sketch.CmsSeedBase).foreach { seed =>
+      val viaCol = sample.toDF("v")
+        .select(graft.functions.Functions.md5Hash60(col("v"), seed).as("h"))
+        .as[Long].collect().toSeq
+      assert(sample.map(Sketch.jvmHash60(_, seed)) == viaCol,
+        s"jvmHash60 diverges from the md5Hash60 column expression (seed $seed)")
+    }
+    def cells(docs: Seq[String]) = Sketch.cmsTable(
+        docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    def estimate(cms: Map[(Int, Long), Long], tok: String) =
+      (0 until Sketch.CmsD).map { j =>
+        val h = Sketch.jvmHash60(tok, Sketch.CmsSeedBase + j)
+        cms.getOrElse((j, h & (Sketch.CmsW - 1)), 0L)
+      }.min
+    // four tokens in D·W = 2048 cells do not collide: exact estimates
+    val small = cells(Seq("a b a c a b d"))
+    Seq("a" -> 3L, "b" -> 2L, "c" -> 1L, "d" -> 1L).foreach { case (tok, n) =>
+      assert(estimate(small, tok) == n, s"'$tok' cell replay")
+    }
     for (trial <- 1 to 3) {
       val toks = List.fill(4000)(vocab(
         math.min(rnd.nextInt(300), rnd.nextInt(300)))) // skew toward low ids
-      val docs = toks.grouped(40).zipWithIndex
-        .map { case (g, i) => (i.toLong, g.mkString(" ")) }.toList
-        .toDF("doc_id", "text")
-      val cms = Sketch.cmsTable(docs)
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      val cms = cells(toks.grouped(40).map(_.mkString(" ")).toList)
       // estimate every token from the collected cells and compare to truth
       val exact = toks.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      // plain-JVM replay of the md5-60 hash (same bytes both engines)
       exact.foreach { case (tok, n) =>
-        val est = (0 until Sketch.CmsD).map { j =>
-          val h = Sketch.jvmHash60(tok, Sketch.CmsSeedBase + j)
-          cms.getOrElse((j, h & (Sketch.CmsW - 1)), 0L)
-        }.min
+        val est = estimate(cms, tok)
         assert(est >= n, s"trial $trial: $tok underestimated ($est < $n)")
       }
     }

@@ -179,9 +179,11 @@ object Bench {
   /** Focused re-measurement of named queries: each runs once cold,
     * then `runs` times under one action, and prints one JSON line with
     * the cold run's seconds (`cold`, outside the statistics: it carries
-    * JIT and class loading) and every timed run plus p50/min/max — the
+    * JIT and class loading), every timed run plus p50/min/max — the
     * n≥5 variance evidence a sweep median can't give when one query's
-    * round-over-round delta needs adjudicating (noise vs regression).
+    * round-over-round delta needs adjudicating (noise vs regression) —
+    * and `jobs`, the Spark jobs each timed run started (construction
+    * and action alike), in run order.
     * No calibration or suspect gate, by design: it is the tool for
     * tiers (sf10) whose idle floor would mass-flag. A failing query
     * fails the focus run. */
@@ -191,15 +193,31 @@ object Bench {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val act = if (action == "count") "count" else "noop"
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      def measure(n: Int) =
-        Harness.timed(spark, n)(timedAction(fn(spark, sfDir), act)).get
-      val cold = measure(1)
-      val t = measure(runs)
-      emit(s"""{"query":"${esc(name)}","action":"$act",""" +
-        s""""cold":${Harness.fmt(cold.secs.head, 3)},${t.fields}}""")
+    val started = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
     }
+    // the count so far, once every event already posted has arrived
+    def jobsSoFar(): Long = {
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      started.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val cold = Harness.timed(spark, 1)(timedAction(fn(spark, sfDir), act)).get
+      // read before each run (untimed prepare) and once after the last
+      val marks = Seq.newBuilder[Long]
+      val t = Harness.timedRuns(spark, runs)(marks += jobsSoFar())(_ =>
+        timedAction(fn(spark, sfDir), act)).get
+      val m = (marks += jobsSoFar()).result()
+      val jobs = m.zip(m.tail).map { case (a, b) => b - a }
+      emit(s"""{"query":"${esc(name)}","action":"$act",""" +
+        s""""cold":${Harness.fmt(cold.secs.head, 3)},${t.fields},""" +
+        s""""jobs":${jobs.mkString("[", ",", "]")}}""")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private val NotRun = Harness.Timed[Unit](Seq.empty, None, None)

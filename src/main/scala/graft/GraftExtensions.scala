@@ -10,7 +10,11 @@ import graft.expressions.{AllWordNGrams, DotProduct, Md5Hash56Pair, Md5Hash60, N
 /** SparkSessionExtensions registration: makes every custom Catalyst
   * expression callable from SQL (`dot_product`, `sorted_intersect_size`,
   * `md5_hash56_pair`, `md5_hash60`, `word_ngrams`, `top_k_pairs`)
-  * so the library's SQL surface matches its DataFrame surface.
+  * so the library's SQL surface matches its DataFrame surface, plus the
+  * optimizer rule [[graft.expressions.SimplifySelfSetOps]] and the AQE
+  * stage-prep rule [[graft.expressions.SortSmallInOnePartition]].
+  * [[Harness.builder]] installs it, so every main and spec session runs
+  * both rules.
   *
   * Usage:
   *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
@@ -25,6 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     e.injectOptimizerRule(_ => graft.expressions.SimplifySelfSetOps)
+    e.injectQueryStagePrepRule(_ => graft.expressions.SortSmallInOnePartition)
   }
 }
 
@@ -54,7 +59,9 @@ object GraftExtensions {
 
   /** Register into an already-built session (temp functions + runtime
     * optimizer rules) — the runtime-path twin of the builder-time
-    * extensions install. */
+    * extensions install. A built session has no hook for stage-prep
+    * rules, so [[graft.expressions.SortSmallInOnePartition]] comes only
+    * with the builder-time install. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     functions.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry

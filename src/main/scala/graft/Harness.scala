@@ -28,10 +28,21 @@ object Harness {
 
   /** The session recipe with every shipping config set, before
     * `getOrCreate` — the test session adds only its app name and
-    * warehouse dir, so the plan gates test exactly this config. */
+    * warehouse dir, so the plan gates test exactly this config.
+    *
+    * It installs [[GraftExtensions]]: the SQL functions and two rules.
+    * One of them, [[graft.expressions.SortSmallInOnePartition]], sorts a
+    * global `orderBy` whose input is at most the advisory partition size
+    * (32 MB, below) in one range partition. Its range exchange then runs
+    * no sampling job, which would compute the sort's whole upstream
+    * stage once more before the shuffle computes it. Plans still read
+    * `rangepartitioning(order, 1)`. AQE re-plans with runtime sizes, so
+    * a sort whose estimate is large still takes one partition once its
+    * input measures small. */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions)
       // cores-count STATIC baseline; corpus-scale pipelines ratchet
       // this up from MEASURED bytes at the Materialize seam
       // (Materialize.ratchetShufflePartitions) — the data-size-derived

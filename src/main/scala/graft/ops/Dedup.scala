@@ -987,8 +987,12 @@ object Dedup {
     // O(edges) driver memory, so size the threshold like a broadcast
     // threshold, not a "fits on disk" bound. Past it — billions of
     // edges at warehouse scale — the distributed O(log diameter) loop
-    // below is the path, whatever the session's seam storage.
-    if (e.count() <= localThreshold) return localComponents(e)
+    // below is the path, whatever the session's seam storage. A local
+    // seam already measured its exact row count; only a durable
+    // parquet seam, whose stats carry none, pays a count.
+    val edgeCount = org.apache.spark.sql.graft.Bridge.measuredRowCount(e)
+      .getOrElse(e.count())
+    if (edgeCount <= localThreshold) return localComponents(e)
     val sym = Graph.symmetric(e)
     // identity-label init stays LAZY: it is one distinct over the
     // (materialized) edge table, trivially re-derivable on recovery, so

@@ -322,9 +322,10 @@ object Similarity {
   def knnGraphOf(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = emb.sparkSession
-    // one count action sizes the geometry. Metadata-only for
-    // parquet-backed frames; a generated frame pays one real scan, so
-    // building the graph is eager to that extent.
+    // one count action sizes the geometry. It is not metadata-only:
+    // on a parquet-backed frame it runs two AQE jobs, a scan that
+    // reads every record and the final aggregate, so building the graph
+    // is eager to that extent.
     val planes = planesFor(emb.count())
     val e = embDoubleOf(emb).withColumn("bucket", bucketCol(col("v"), planes))
     val masks = lit(0) +: (0 until planes).map(p => lit(1 << p))

@@ -74,6 +74,23 @@ object Bridge {
     }
   }
 
+  /** The row count a checkpointed frame's stats carry, read without a
+    * job: exact for a seam [[withMeasuredStats]] measured. None when the
+    * frame is not a checkpoint (a durable seam reads back as a parquet
+    * scan) or its stats carry no count. */
+  def measuredRowCount(df: org.apache.spark.sql.DataFrame): Option[Long] =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.computeStats().rowCount.map(_.toLong)
+      case _ => None
+    }
+
+  /** Blocks until every event posted so far has reached the listeners
+    * (`waitUntilEmpty` is private[spark]): a listener's counts are
+    * complete only after the bus drains. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Observability for the stats seam: the sizeInBytes the optimizer
     * will see for this frame's root (spec gates assert measured-vs-
     * estimated without reparsing explain text). */

@@ -54,9 +54,13 @@ class HarnessSpec extends AnyFunSuite {
     val rows = lines.result().map(parse)
     assert(rows.map(_.get("query").asText) == names)
     rows.foreach { r =>
-      assert(keys(r) == Set("query", "action", "cold", "runs", "p50", "min", "max", "secs"))
+      assert(keys(r) ==
+        Set("query", "action", "cold", "runs", "p50", "min", "max", "secs", "jobs"))
       assert(r.get("action").asText == "noop")
       assertRuns(r, 2)
+      // every run builds and writes the query, so each starts jobs
+      assert(r.get("jobs").size == 2)
+      assert(r.get("jobs").elements().asScala.forall(_.asLong > 0))
     }
     assert(intercept[IllegalArgumentException](Bench.focus(spark,
       GraftSpark.sf, Seq("no_such_query"), 1, "noop")(_ => ()))

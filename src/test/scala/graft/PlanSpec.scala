@@ -1253,4 +1253,80 @@ class PlanSpec extends AnyFunSuite {
     assert(gi >= 0 && ai >= 0 && gi < ai,
       s"the unpivot must consume the aggregate result, not feed it:\n${p.take(2000)}")
   }
+
+  /** Spark jobs `body` starts, counted by one listener once the bus has
+    * delivered every event. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.sql.graft.Bridge
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; Bridge.drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  private def withAdvisory[A](size: String)(body: => A): A = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, size)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  private val OneRange = "rangepartitioning\\([^)]*, 1\\)".r.unanchored
+
+  test("a small global sort ranges into ONE partition and runs no sampling job") {
+    import org.apache.spark.sql.functions.col
+    def sorted = spark.range(0, 100000, 1, 4).orderBy(col("id").desc)
+    val p = sorted.queryExecution.executedPlan.toString
+    assert(OneRange.matches(p), p)
+    assert(!p.contains("SinglePartition"), p)
+    // the range stage's map job and the result job, nothing else
+    assert(jobsOf(sorted.collect()) == 2)
+    // the same sort above a 1 KB advisory size keeps 4 partitions, and
+    // its RangePartitioner samples the input in one more job
+    withAdvisory("1k") {
+      val wide = sorted.queryExecution.executedPlan.toString
+      assert(wide.contains(", 4), ENSURE_REQUIREMENTS"), wide)
+      assert(jobsOf(sorted.collect()) == 3)
+    }
+  }
+
+  test("a sort whose estimate exceeds the advisory size keeps rangepartitioning(..., 4)") {
+    import org.apache.spark.sql.functions.col
+    // 5M longs estimate 40 MB, above the 32 MB advisory size
+    val p = spark.range(5000000L).orderBy(col("id").desc)
+      .queryExecution.executedPlan.toString
+    assert(p.contains(", 4), ENSURE_REQUIREMENTS") && !OneRange.matches(p), p)
+  }
+
+  test("one-partition sorts return the AQE-off row sequence (p2, j1, t6, j5, a4, sim4)") {
+    val names = Seq("p2_p8_clean_events", "j1_spatial_join", "t6_backfill_plan",
+      "j5_merge_update", "a4_decade_stats", "sim4_knn_graph")
+    def rows(name: String): (Seq[org.apache.spark.sql.Row], String) = {
+      val df = SparkEntry.queries(name)(spark, sf)
+      try (df.collect().toSeq,
+        df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
+      finally graft.ops.Materialize.releaseAll(spark)
+    }
+    names.foreach { name =>
+      val (on, finalPlan) = rows(name)
+      // stage-prep rules run only under AQE: this is the old layout
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val off = try rows(name)._1
+        finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      // t6 sorts its month spine, which hangs off a global min/max and is
+      // one partition already, so it plans no range exchange at all
+      val ranges = "rangepartitioning".r.findAllIn(finalPlan).size
+      assert(ranges == (if (name == "t6_backfill_plan") 0 else 1) &&
+        (ranges == 0 || OneRange.matches(finalPlan)),
+        s"$name:\n${finalPlan.take(3000)}")
+      assert(on.nonEmpty && on == off, name)
+    }
+  }
 }

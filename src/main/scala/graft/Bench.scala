@@ -50,7 +50,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * that fails under EITHER action is excluded from BOTH actions'
   * totals (and named in `errors`, rc=1): totals always cover the
   * same query set under both actions, so a cross-action comparison
-  * never mixes query sets.
+  * never mixes query sets. The sweep always times both ([[focus]] times
+  * noop); the lines keep their constant `action` field ("both",
+  * "noop") so they read like earlier artifacts.
   *
   * Isolation: every cached/checkpointed block is released between runs
   * ([[graft.ops.Materialize.releaseAll]]) — the LSH-family queries
@@ -170,15 +172,13 @@ object Bench {
       p - m >= LoadFlagMinDeltaSec * 1000
   }
 
-  /** `noop` (the default, and under "both") times the noop write of
-    * TIMED ACTIONS; `count` times count(). */
-  private def timedAction(df: => DataFrame, action: String): Unit =
-    if (action == "count") df.count()
-    else df.write.mode("overwrite").format("noop").save()
+  /** The headline action of TIMED ACTIONS: a write to the noop sink. */
+  private def noopWrite(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
 
   /** Focused re-measurement of named queries: each runs once cold,
-    * then `runs` times under one action, and prints one JSON line with
-    * the cold run's seconds (`cold`, outside the statistics: it carries
+    * then `runs` times under the noop action, and prints one JSON line
+    * with the cold run's seconds (`cold`, outside the statistics: it carries
     * JIT and class loading), every timed run plus p50/min/max — the
     * n≥5 variance evidence a sweep median can't give when one query's
     * round-over-round delta needs adjudicating (noise vs regression) —
@@ -188,10 +188,9 @@ object Bench {
     * tiers (sf10) whose idle floor would mass-flag. A failing query
     * fails the focus run. */
   def focus(spark: SparkSession, sfDir: String, names: Seq[String],
-      runs: Int, action: String)(emit: String => Unit): Unit = {
+      runs: Int)(emit: String => Unit): Unit = {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val act = if (action == "count") "count" else "noop"
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
     val started = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -207,43 +206,33 @@ object Bench {
     spark.sparkContext.addSparkListener(listener)
     try names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      val cold = Harness.timed(spark, 1)(timedAction(fn(spark, sfDir), act)).get
+      val cold = Harness.timed(spark, 1)(noopWrite(fn(spark, sfDir))).get
       // read before each run (untimed prepare) and once after the last
       val marks = Seq.newBuilder[Long]
       val t = Harness.timedRuns(spark, runs)(marks += jobsSoFar())(_ =>
-        timedAction(fn(spark, sfDir), act)).get
+        noopWrite(fn(spark, sfDir))).get
       val m = (marks += jobsSoFar()).result()
       val jobs = m.zip(m.tail).map { case (a, b) => b - a }
-      emit(s"""{"query":"${esc(name)}","action":"$act",""" +
+      emit(s"""{"query":"${esc(name)}","action":"noop",""" +
         s""""cold":${Harness.fmt(cold.secs.head, 3)},${t.fields},""" +
         s""""jobs":${jobs.mkString("[", ",", "]")}}""")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
-
-  private val NotRun = Harness.Timed[Unit](Seq.empty, None, None)
 
   private def esc(s: String): String = graft.functions.Functions.jsonEscape(s)
 
   /** No args: the driver sweep over every query. `name…`: [[focus]] on
     * those queries. */
   def main(args: Array[String]): Unit = {
-    // "both" (default): one artifact carries the noop headline AND the
-    // count trend. "noop"/"count" restrict to one action (debug use).
-    val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "both")
-    require(Set("both", "noop", "count")(action),
-      s"SPARK_GRAFT_BENCH_ACTION must be both|noop|count, got $action")
     val spark = Harness.session(Harness.Cpus)
-    if (args.isEmpty) sweep(spark, Harness.SfDir, Harness.Cpus.toInt, action)
+    if (args.isEmpty) sweep(spark, Harness.SfDir, Harness.Cpus.toInt)
     else {
-      focus(spark, Harness.SfDir, args.toSeq, Harness.Runs, action)(println)
+      focus(spark, Harness.SfDir, args.toSeq, Harness.Runs)(println)
       spark.stop()
     }
   }
 
-  private def sweep(spark: SparkSession, sfDir: String, cpus: Int,
-      action: String): Unit = {
-    val doNoop = action != "count"
-    val doCount = action != "noop"
+  private def sweep(spark: SparkSession, sfDir: String, cpus: Int): Unit = {
     val loadStart = loadAvg()
     // warmup: exercise scan, shuffle, and codegen paths enough times to
     // settle JIT + page cache INDEPENDENT of SPARK_GRAFT_RUNS — a 2-run
@@ -306,15 +295,12 @@ object Bench {
       // runs warmed — count medians were warm-dominated under the old
       // 5-run count-only sweeps too, so the trend stays comparable.
       // A failed run ends its query: no retry, no count sweep.
-      val noop = if (doNoop)
-        Harness.timed(spark, Harness.Runs)(timedAction(fn(spark, sfDir), "noop"))
-      else NotRun
-      val count = if (doCount && noop.failure.isEmpty)
-        Harness.timed(spark, CountRuns)(timedAction(fn(spark, sfDir), "count"))
-      else NotRun
+      val noop = Harness.timed(spark, Harness.Runs)(noopWrite(fn(spark, sfDir)))
+      val count = Option.when(noop.failure.isEmpty)(
+        Harness.timed(spark, CountRuns)(fn(spark, sfDir).count()))
       if ((qi + 1) % CalibEvery == 0 && qi + 1 < sorted.size)
         checkpoint(qi + 1)
-      noop.failure.orElse(count.failure) match {
+      noop.failure.orElse(count.flatMap(_.failure)) match {
         case Some(e) =>
           val msg = s"${e.getClass.getSimpleName}: " +
             Option(e.getMessage).getOrElse("").take(200)
@@ -322,14 +308,10 @@ object Bench {
           errors ::= s"$name: $msg"
           None
         case None =>
-          val cp50 = if (count.secs.nonEmpty) Some(count.p50) else None
-          val head = if (doNoop) noop else count
-          Some((name, cp50, head.secs.head, head.p50, head.max, qLoad, head.min))
+          val cp50 = count.filter(_.secs.nonEmpty).map(_.p50)
+          Some((name, cp50, noop.secs.head, noop.p50, noop.max, qLoad, noop.min))
       }
     }
-    // the run count the p50/cold/max statistics actually came from:
-    // the noop sweep's Runs normally, CountRuns under action=count
-    val headlineRuns = if (doNoop) Harness.Runs else CountRuns
     val calibPost = calibRuns(Harness.Runs).p50
     checkpoint(sorted.size)
     val loadEnd = loadAvg()
@@ -367,8 +349,7 @@ object Bench {
     val coldTotal = timings.map(_._3).sum
     val p50Total = timings.map(_._4).sum
     val maxTotal = timings.map(_._5).sum
-    val countTotal =
-      if (doCount) Some(timings.flatMap(_._2).sum) else None
+    val countTotal = timings.flatMap(_._2).sum
     val errJson = errors.reverse.map(e => s""""${esc(e)}"""").mkString("[", ",", "]")
     val sfName = new java.io.File(sfDir).getName
     val calibSeriesJson = calibSeries
@@ -391,14 +372,13 @@ object Bench {
       .foldLeft(0)(math.max) + 1
     val detailOut = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT",
       f"BENCH_DETAIL_r$round%02d.json")
-    val countDetail = countTotal.map(ct =>
-      s""""count_runs":$CountRuns,"count_total":${fmt(ct, 3)},
-         |"queries_count_p50":${obj(_._2.getOrElse(-1.0), 3)},""".stripMargin)
-      .getOrElse("")
+    val countDetail =
+      s""""count_runs":$CountRuns,"count_total":${fmt(countTotal, 3)},
+         |"queries_count_p50":${obj(_._2.getOrElse(-1.0), 3)},""".stripMargin
     val loadFlagJson = loadFlags.map(s => s""""${esc(s)}"""")
       .mkString("[", ",", "]")
     val detailJson =
-      s"""{"runs":$headlineRuns,"sf":"$sfName","action":"$action",$calibJson,
+      s"""{"runs":${Harness.Runs},"sf":"$sfName","action":"both",$calibJson,
          |"errors":$errJson,"load_flagged":$loadFlagJson,
          |$countDetail"cold_total":${fmt(coldTotal, 3)},"p50_total":${fmt(p50Total, 3)},"max_total":${fmt(maxTotal, 3)},
          |"queries_cold":${obj(_._3, 3)},
@@ -412,7 +392,7 @@ object Bench {
 
     // full-precision p50 detail ALWAYS rides an earlier stdout line too
     // (belt and braces with the detail file)
-    println(s"""{"detail":"p50","runs":$headlineRuns,"total":${fmt(p50Total, 3)},"queries":${obj(_._4, 3)}}""")
+    println(s"""{"detail":"p50","runs":${Harness.Runs},"total":${fmt(p50Total, 3)},"queries":${obj(_._4, 3)}}""")
     // errors ride the final line only when present — the empty list is
     // implied by rc=0 and costs budget the growing query map needs
     val errField = if (errors.isEmpty) "" else s""""errors":$errJson,"""
@@ -422,9 +402,9 @@ object Bench {
     // live in the detail file — the names don't fit a 2000-char line
     // precisely when a loaded machine makes the list long)
     val selfCheck =
-      s""""action":"$action","calib":${fmt(calib, 3)},""" +
+      s""""action":"both","calib":${fmt(calib, 3)},""" +
         s""""load":${fmt(math.max(loadStart, loadEnd), 2)},""" +
-        countTotal.map(ct => s""""count_total":${fmt(ct, 3)},""").getOrElse("") +
+        s""""count_total":${fmt(countTotal, 3)},""" +
         s""""suspect_n":${suspects.size},""" +
         s""""load_flag_n":${loadFlags.size},"""
     def finalLine(dec: Int): String =

@@ -6,9 +6,10 @@ import java.nio.file.{Files, Paths}
   * files — the plan-shape evidence the optimization rounds commit
   * under `plans/r<N>/`. Usage:
   *
-  *   sbt 'runMain graft.ExplainDump <sfDir> <outDir> <suffix> <query> [query...]'
+  *   sbt 'runMain graft.ExplainDump <sfDir> <outDir> <suffix> [query...]'
   *
-  * One file per query: `<outDir>/<query>_<suffix>.txt`. The formatted
+  * One file per query: `<outDir>/<query>_<suffix>.txt`. With no query
+  * names it dumps every query in [[SparkEntry.queries]]. The formatted
   * explain is the STATIC plan (AdaptiveSparkPlan isFinalPlan=false);
   * for iterative queries that execute jobs while building (BFS rounds,
   * label propagation), the driver-side loop runs as part of building
@@ -16,13 +17,15 @@ import java.nio.file.{Files, Paths}
   * the same object the bench times. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    if (args.length < 4) {
+    if (args.length < 3) {
       System.err.println("usage: ExplainDump <sfDir> <outDir> <suffix> " +
-        "<query> [query...]")
+        "[query...]")
       sys.exit(2)
     }
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
-    val names = args.drop(3).toSeq
+    val names =
+      if (args.length == 3) SparkEntry.queries.keys.toSeq.sorted
+      else args.drop(3).toSeq
     // validate up front: an unknown name aborting mid-list would leave
     // a partial dump that reads as complete
     val unknown = names.filterNot(SparkEntry.queries.keySet)

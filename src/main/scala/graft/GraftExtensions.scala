@@ -11,10 +11,11 @@ import graft.expressions.{AllWordNGrams, DotProduct, Md5Hash56Pair, Md5Hash60, N
   * expression callable from SQL (`dot_product`, `sorted_intersect_size`,
   * `md5_hash56_pair`, `md5_hash60`, `word_ngrams`, `top_k_pairs`)
   * so the library's SQL surface matches its DataFrame surface, plus the
-  * optimizer rule [[graft.expressions.SimplifySelfSetOps]] and the AQE
-  * stage-prep rule [[graft.expressions.SortSmallInOnePartition]].
-  * [[Harness.builder]] installs it, so every main and spec session runs
-  * both rules.
+  * AQE stage-prep rule [[graft.expressions.SortSmallInOnePartition]].
+  * [[Harness.builder]] installs it, so every main and spec session has
+  * the functions and runs the rule. A stage-prep rule can only be
+  * injected while a session is built, so the install is builder-time
+  * only.
   *
   * Usage:
   *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
@@ -28,7 +29,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
         builder))
     }
-    e.injectOptimizerRule(_ => graft.expressions.SimplifySelfSetOps)
     e.injectQueryStagePrepRule(_ => graft.expressions.SortSmallInOnePartition)
   }
 }
@@ -56,22 +56,4 @@ object GraftExtensions {
     // AggregateExpression at resolution
     "top_k_pairs" -> (args =>
       TopKPairs(args(0), args(1), intArg(args(2), "top_k_pairs"))))
-
-  /** Register into an already-built session (temp functions + runtime
-    * optimizer rules) — the runtime-path twin of the builder-time
-    * extensions install. A built session has no hook for stage-prep
-    * rules, so [[graft.expressions.SortSmallInOnePartition]] comes only
-    * with the builder-time install. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.expressions.SimplifySelfSetOps)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.expressions.SimplifySelfSetOps
-    }
-  }
 }

@@ -109,9 +109,7 @@ object ScaleProbe {
       Case("pack", on(docs) { d =>
         val toks = d.select(col("doc_id"),
           size(TextStats.words(col("text"))).cast("long").as("n_tokens"))
-        graft.ops.PrefixSum.exclusive(
-          toks, "doc_id", "n_tokens", spark.sparkContext.defaultParallelism)
-          .count()
+        graft.ops.PrefixSum.exclusive(toks, "doc_id", "n_tokens").count()
       }),
       Case("simhash", on(docs)(d => Dedup.simhashPairsOf(d).count())),
       // a bare count() lets column pruning DROP the reassembly (the
@@ -270,7 +268,7 @@ object ScaleProbe {
       // per-bucket window would die on). The aggregate consumes
       // schedule_key so pruning can't drop the rank machinery.
       Case("curriculum", on(docs)(d => first(graft.ops.Sampling
-        .curriculumOrderOf(d, spark.sparkContext.defaultParallelism),
+        .curriculumOrderOf(d),
         max(col("schedule_key")).as("m"), count(lit(1)).as("c")))),
       // dd4 under a GLOBAL hot shingle: the same unsalted 3-token
       // footer on every doc of every copy gives ONE shingle df = full
@@ -321,7 +319,7 @@ object ScaleProbe {
         s""""dd5_planes":${graft.ops.Dedup.embBandPlanesFor(vecs)}}""")
       selected.filter(c => c.scaled || n == 1).foreach { c =>
         val t = Harness.timedRuns(spark, runs)(c.prep(n)) { action =>
-          (action(), spark.conf.get("spark.sql.shuffle.partitions"))
+          (action(), graft.ops.Materialize.partitions(spark))
         }.get
         val (rows, parts) = t.last.get
         emit(s"""{"case":"${c.name}","factor":$n,${t.fields},""" +

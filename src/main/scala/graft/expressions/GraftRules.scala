@@ -1,33 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.Size
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.internal.SQLConf
-
-/** Optimizer rules for the custom expressions, injected via
-  * graft.GraftExtensions.
-  *
-  * SimplifySelfSetOps: a self-intersection is the set itself —
-  * `sorted_intersect_size(x, x)` → `size(x)` and
-  * `dot_product(x, x)` is left alone (it is the norm² idiom) — so
-  * composed pipelines that degenerate to self-comparisons (e.g. a dedup
-  * verify stage fed identical candidate sides) skip the merge loop
-  * entirely. Semantic caveat: on arrays that honor the operator's
-  * sorted-distinct input contract the rewrite is exact.
-  */
-object SimplifySelfSetOps extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      // legacySizeOfNull=false regardless of session conf: the original
-      // expression is NULL on NULL input, and legacy Size would emit -1
-      case SortedIntersectSize(a, b) if a.semanticEquals(b) &&
-          a.deterministic => Size(a, legacySizeOfNull = false)
-    }
-}
 
 /** AQE query-stage preparation rule: a global sort whose input fits one
   * advisory partition sorts in ONE range partition.
@@ -48,7 +25,7 @@ object SimplifySelfSetOps extends Rule[LogicalPlan] {
   * Only the exchange `EnsureRequirements` added for the sort is touched;
   * `repartitionByRange` (origin `REPARTITION_BY_NUM`) keeps its count.
   * Stage-prep rules run only under AQE, so with AQE off the rule is
-  * inert.
+  * inert. [[graft.GraftExtensions]] injects it when a session is built.
   */
 object SortSmallInOnePartition extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = {

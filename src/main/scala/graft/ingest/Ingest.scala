@@ -206,7 +206,7 @@ object Ingest {
       fetch(a, b).map(feature => (a.toString, b.toString, feature))
     }
     val rawDf = raw.toDF("window_start", "window_end", "json")
-      .repartition(s.sparkContext.defaultParallelism)
+      .repartition(graft.ops.Materialize.partitions(s))
     flattenFeaturesWith(rawDf, "json",
       Seq(col("window_start"), col("window_end")))
   }

@@ -54,7 +54,7 @@ object Curation {
       .groupBy(md5(col("text")).as("__m"))
       .agg(min(col("doc_id")).as("canon_id"))
     val flat = base
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .repartition(Materialize.partitions(docs.sparkSession))
       .select(col("doc_id"), col("split"),
         explode(TextStats.shingles(col("text"), 3)).as("sh"))
       .select(col("doc_id"), col("split"), md5Hash60(col("sh"), 0).as("h"))
@@ -472,11 +472,10 @@ object Curation {
     * cannot contain the ':' separator, which keeps each source's key
     * range contiguous even across prefix-related names. */
   def tokenBudget(s: SparkSession, d: String): DataFrame =
-    tokenBudgetOf(Tables.documents(s, d),
-      s.sparkContext.defaultParallelism)
+    tokenBudgetOf(Tables.documents(s, d))
 
   /** [[tokenBudget]] over an explicit documents frame. */
-  def tokenBudgetOf(docs: DataFrame, partitions: Int): DataFrame = {
+  def tokenBudgetOf(docs: DataFrame): DataFrame = {
     val base = docs
       .select(col("doc_id"), col("source"), col("n_chars"),
         size(TextStats.words(col("text"))).cast("long").as("n_tokens"),
@@ -490,7 +489,7 @@ object Curation {
         lpad((lit(999999999L) - col("prio")).cast("string"), 9, "0"),
         lpad(col("doc_id").cast("string"), 19, "0")))
       .drop("n_chars", "n_stop")
-    val pos = PrefixSum.exclusive(base, "ord", "n_tokens", partitions)
+    val pos = PrefixSum.exclusive(base, "ord", "n_tokens")
     val src = pos.groupBy("source").agg(
       min(col("offset")).as("__base"),
       expr(s"sum(n_tokens) * $BudgetPct div 100").as("budget"))

@@ -100,7 +100,7 @@ object Dedup {
     * per-shingle md5 work it balances; a genuinely wide scan plans no
     * exchange — PlanSpec gates both directions). */
   private def spread(docs: DataFrame): DataFrame = {
-    val target = docs.sparkSession.sparkContext.defaultParallelism
+    val target = Materialize.partitions(docs.sparkSession)
     if (docs.rdd.getNumPartitions < 2 * target) docs.repartition(target)
     else docs
   }

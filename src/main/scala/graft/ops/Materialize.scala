@@ -4,6 +4,7 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.filter.AbstractFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Materialization seam for iterative and multi-read pipelines: MinHash
   * shingle tables, label-propagation rounds, IVF quantized vectors and
@@ -163,7 +164,7 @@ object Materialize {
   /** Session's pre-ratchet `shuffle.partitions`, recorded the first
     * time the ratchet runs so [[releaseAll]] can restore it. */
   private val staticParts =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, String]
+    scala.collection.concurrent.TrieMap.empty[SparkSession, Int]
 
   /** Measured bytes accumulated across the lifecycle's
     * materializations — the ratchet's size signal. The SUM, not the
@@ -213,19 +214,26 @@ object Materialize {
   private def ratchetShufflePartitions(df: DataFrame,
       byteScale: Int = 1): DataFrame = {
     val spark = df.sparkSession
-    val static = staticParts
-      .getOrElseUpdate(spark, spark.conf.get("spark.sql.shuffle.partitions"))
-    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+    val conf = spark.sessionState.conf
+    val static = staticParts.getOrElseUpdate(spark, partitions(spark))
     val seen = lifecycleBytes.updateWith(spark) { prev =>
       Some(prev.getOrElse(BigInt(0)) +
         org.apache.spark.sql.graft.Bridge.rootSizeInBytes(df) * byteScale)
     }.get
-    val target = partitionsFor(seen, advisory, static.toInt)
-    if (target > spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      spark.conf.set("spark.sql.shuffle.partitions", target.toString)
+    val target = partitionsFor(seen,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), static)
+    if (target > partitions(spark)) conf.setConf(SQLConf.SHUFFLE_PARTITIONS, target)
     df
   }
+
+  /** The session's current `spark.sql.shuffle.partitions`: the static
+    * count, or the value [[ratchetShufflePartitions]] raised it to in
+    * this lifecycle. Every explicit layout in the library (a
+    * `repartition(n)`, a `repartitionByRange(n)`, the
+    * [[hashJoinIfFits]] budget) reads it, so explicit and planned
+    * shuffles follow one partition count. */
+  def partitions(spark: SparkSession): Int =
+    spark.sessionState.conf.getConf(SQLConf.SHUFFLE_PARTITIONS)
 
   /** Stats-GATED shuffled-hash hint, for the two join shapes where
     * Catalyst's own selection picks a worse plan than the evidence
@@ -252,14 +260,7 @@ object Materialize {
     * budget is outgrown and the join plans sort-merge with NO hint —
     * never a forced hash build that can't spill. */
   def hashJoinIfFits(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    // Mirror Spark's ConfigHelpers.byteFromString: "-1" (the documented
-    // broadcast-disable value) carries its sign outside the byte-string
-    // parse, which rejects negative literals.
-    val raw = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-    val (sign, mag) = if (raw.startsWith("-")) (-1L, raw.substring(1)) else (1L, raw)
-    val threshold =
-      sign * org.apache.spark.network.util.JavaUtils.byteStringAsBytes(mag)
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     // the CURRENT session count — the static cores baseline, or the
     // seam ratchet's data-derived value (ratchetShufflePartitions),
     // which is also what Spark's own numShufflePartitions reads here
@@ -269,9 +270,8 @@ object Materialize {
     // and rejected: it let the dd4 `sets` join hash-build array-heavy
     // 64 MB post-coalesce partitions at the 100x tier — 6x slower
     // than its sort-merge plan.)
-    val parts = conf.get("spark.sql.shuffle.partitions", "200").toLong
     val size = org.apache.spark.sql.graft.Bridge.rootSizeInBytes(df)
-    if (threshold > 0 && size < BigInt(threshold) * parts)
+    if (threshold > 0 && size < BigInt(threshold) * partitions(df.sparkSession))
       df.hint("shuffle_hash")
     else df
   }
@@ -304,7 +304,7 @@ object Materialize {
     // one's
     lifecycleBytes.remove(spark)
     staticParts.remove(spark)
-      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+      .foreach(spark.sessionState.conf.setConf(SQLConf.SHUFFLE_PARTITIONS, _))
   }
 
   /** Denies the log event Spark's `RDD.unpersist` writes for a locally

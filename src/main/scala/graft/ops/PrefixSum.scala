@@ -28,11 +28,11 @@ object PrefixSum {
     * all strictly-preceding rows; 0 for the first). `orderCol` must be
     * unique — it is the total order; `valCol` must be integral and
     * non-null (a null would poison every later offset in its
-    * partition). Values may be negative. Appends `offset`. */
-  def exclusive(df: DataFrame, orderCol: String, valCol: String,
-      partitions: Int): DataFrame = {
+    * partition). Values may be negative. Appends `offset`. The range
+    * step uses the session's partition count, [[Materialize.partitions]]. */
+  def exclusive(df: DataFrame, orderCol: String, valCol: String): DataFrame = {
     val ranged = df
-      .repartitionByRange(partitions, col(orderCol))
+      .repartitionByRange(Materialize.partitions(df.sparkSession), col(orderCol))
       .withColumn("__pid", spark_partition_id())
     // inclusive local sum, made exclusive by subtracting the row itself:
     // one window, keyed on the partition id -> parallel

@@ -227,11 +227,10 @@ object Sampling {
     * O(buckets) broadcast join) — exactly the tx21 machinery, reused
     * for ranking instead of byte packing. */
   def curriculumOrder(s: SparkSession, d: String): DataFrame =
-    curriculumOrderOf(Tables.documents(s, d),
-      s.sparkContext.defaultParallelism)
+    curriculumOrderOf(Tables.documents(s, d))
 
   /** [[curriculumOrder]] over an explicit documents frame. */
-  def curriculumOrderOf(docs: DataFrame, partitions: Int): DataFrame = {
+  def curriculumOrderOf(docs: DataFrame): DataFrame = {
     val base = docs
       .filter(col("n_chars").isNotNull)
       .select(col("doc_id"),
@@ -240,7 +239,7 @@ object Sampling {
         concat(lpad(col("bucket").cast("string"), 2, "0"),
           md5(col("doc_id").cast("string"))))
       .withColumn("one", lit(1L))
-    val pos = PrefixSum.exclusive(base, "ord", "one", partitions)
+    val pos = PrefixSum.exclusive(base, "ord", "one")
     val bases = pos.groupBy("bucket")
       .agg(min(col("offset")).as("bucket_base"))
     pos.join(broadcast(bases), Seq("bucket"))
@@ -333,12 +332,10 @@ object Sampling {
     * rides one keyed window over (bucket, batch) — millions of tiny
     * partitions. */
   def packedBatches(s: SparkSession, d: String): DataFrame =
-    packedBatchesOf(Tables.documents(s, d),
-      s.sparkContext.defaultParallelism)
+    packedBatchesOf(Tables.documents(s, d))
 
   /** [[packedBatches]] over an explicit documents frame. */
-  def packedBatchesOf(docs: DataFrame, partitions: Int,
-      budget: Long = BatchTokenBudget): DataFrame = {
+  def packedBatchesOf(docs: DataFrame, budget: Long = BatchTokenBudget): DataFrame = {
     val base = docs
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -348,7 +345,7 @@ object Sampling {
       .withColumn("ord",
         concat(lpad(col("bucket").cast("string"), 2, "0"),
           md5(col("doc_id").cast("string"))))
-    val pos = PrefixSum.exclusive(base, "ord", "n_tokens", partitions)
+    val pos = PrefixSum.exclusive(base, "ord", "n_tokens")
     val bases = pos.groupBy("bucket")
       .agg(min(col("offset")).as("bucket_base"))
     val assigned = pos.join(broadcast(bases), Seq("bucket"))

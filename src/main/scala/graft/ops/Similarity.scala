@@ -334,7 +334,7 @@ object Similarity {
       .withColumn("probe", explode(array(masks: _*)))
       .withColumn("bucket", col("probe").bitwiseXOR(col("home")))
       .drop("probe", "home")
-      .repartition(s.sparkContext.defaultParallelism, col("bucket"))
+      .repartition(Materialize.partitions(s), col("bucket"))
     val b = e.select(col("vec_id").as("dst"), col("v").as("bv"),
       col("norm").as("bnorm"), col("bucket"))
     val w = Window.partitionBy("src").orderBy(desc("cos"), col("dst"))

@@ -244,7 +244,7 @@ object TextStats {
     val docs = Tables.documents(s, d)
       .withColumn("split", when(bucket < 90, "train").otherwise("test"))
     val flat = docs
-      .repartition(s.sparkContext.defaultParallelism)
+      .repartition(Materialize.partitions(s))
       .select(col("doc_id"), col("split"),
         explode(shingles(col("text"), 3)).as("sh"))
       .select(col("doc_id"), col("split"), md5Hash60(col("sh"), 0).as("h"))
@@ -354,8 +354,7 @@ object TextStats {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
         size(words(col("text"))).cast("long").as("n_tokens"))
-    PrefixSum.exclusive(
-        toks, "doc_id", "n_tokens", s.sparkContext.defaultParallelism)
+    PrefixSum.exclusive(toks, "doc_id", "n_tokens")
       .withColumnRenamed("offset", "tok_offset") // OFFSET is reserved in DuckDB
       .withColumn("start_seq", expr(s"tok_offset div $SeqBudget"))
       .withColumn("end_seq",
@@ -397,15 +396,13 @@ object TextStats {
     * per-row projection. The shard column is exactly what a 100-TB
     * export feeds `partitionBy("shard")`. */
   def tokenShards(s: SparkSession, d: String): DataFrame =
-    tokenShardsOf(Tables.documents(s, d),
-      s.sparkContext.defaultParallelism)
+    tokenShardsOf(Tables.documents(s, d))
 
-  def tokenShardsOf(docs: DataFrame, partitions: Int,
-      budget: Long = ShardTokenBudget): DataFrame = {
+  def tokenShardsOf(docs: DataFrame, budget: Long = ShardTokenBudget): DataFrame = {
     val toks = docs.select(col("doc_id"),
       md5(col("doc_id").cast("string")).as("ord"),
       size(words(col("text"))).cast("long").as("n_tokens"))
-    PrefixSum.exclusive(toks, "ord", "n_tokens", partitions)
+    PrefixSum.exclusive(toks, "ord", "n_tokens")
       .withColumnRenamed("offset", "tok_offset")
       .withColumn("shard", expr(s"tok_offset div $budget"))
       .select("doc_id", "n_tokens", "tok_offset", "shard")
@@ -549,7 +546,7 @@ object TextStats {
 
   def winnowOf(docs: DataFrame): DataFrame = {
     val g = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .repartition(Materialize.partitions(docs.sparkSession))
       .select(col("doc_id"),
         (size(words(col("text"))) - (WinnowK - 1)).cast("long").as("m"),
         posexplode(graft.expressions.AllWordNGrams.ngrams(
@@ -3002,10 +2999,10 @@ object TextStats {
     * most one match row per (doc, pos), so the merge window's
     * (start, end) order is total and deterministic. */
   def spanScrub(s: SparkSession, d: String): DataFrame =
-    spanScrubOf(Tables.documents(s, d), s.sparkContext.defaultParallelism)
+    spanScrubOf(Tables.documents(s, d))
 
   /** [[spanScrub]] over an explicit documents frame. */
-  def spanScrubOf(docs: DataFrame, partitions: Int): DataFrame = {
+  def spanScrubOf(docs: DataFrame): DataFrame = {
     import graft.functions.Functions.md5Hash60
     import org.apache.spark.sql.expressions.Window
     val k = ScrubAnchorTokens
@@ -3013,7 +3010,7 @@ object TextStats {
     val base = docs.withColumn("split",
       when(bucket < 90, "train").otherwise("test"))
     val posGrams = base
-      .repartition(partitions)
+      .repartition(Materialize.partitions(docs.sparkSession))
       .select(col("doc_id"), col("split"),
         posexplode(graft.expressions.AllWordNGrams.ngrams(
           col("text"), k)).as(Seq("p0", "gram")))

@@ -91,9 +91,11 @@ object Bridge {
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Observability for the stats seam: the sizeInBytes the optimizer
-    * will see for this frame's root (spec gates assert measured-vs-
-    * estimated without reparsing explain text). */
+  /** The sizeInBytes the optimizer will see for this frame's root. It
+    * feeds the seam ratchet's byte sum and the `hashJoinIfFits` gate
+    * (both in `graft.ops.Materialize`), and spec gates assert
+    * measured-vs-estimated sizes with it without reparsing explain
+    * text. */
   def rootSizeInBytes(df: org.apache.spark.sql.DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 

@@ -15,4 +15,15 @@ object GraftSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a clone of [[spark]] whose
+    * `spark.sql.shuffle.partitions` is `n`: the count every explicit
+    * layout reads ([[graft.ops.Materialize.partitions]]). A frame is
+    * bound to the session that built it, so `body` builds its inputs
+    * from the clone. The clone's seams are released after. */
+  def withPartitions[A](n: Int)(body: SparkSession => A): A = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", n.toLong)
+    try body(s) finally graft.ops.Materialize.releaseAll(s)
+  }
 }

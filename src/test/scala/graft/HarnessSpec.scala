@@ -49,7 +49,7 @@ class HarnessSpec extends AnyFunSuite {
   test("Bench focus: one line per query with every run, seams released") {
     val names = Seq("dd2_minhash_lsh", "dd7_dedup_clusters")
     val lines = Seq.newBuilder[String]
-    Bench.focus(spark, GraftSpark.sf, names, runs = 2, action = "both")(lines += _)
+    Bench.focus(spark, GraftSpark.sf, names, runs = 2)(lines += _)
     assertReleased()
     val rows = lines.result().map(parse)
     assert(rows.map(_.get("query").asText) == names)
@@ -63,7 +63,7 @@ class HarnessSpec extends AnyFunSuite {
       assert(r.get("jobs").elements().asScala.forall(_.asLong > 0))
     }
     assert(intercept[IllegalArgumentException](Bench.focus(spark,
-      GraftSpark.sf, Seq("no_such_query"), 1, "noop")(_ => ()))
+      GraftSpark.sf, Seq("no_such_query"), 1)(_ => ()))
       .getMessage.contains("no_such_query"))
   }
 

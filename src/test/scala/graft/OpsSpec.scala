@@ -672,45 +672,49 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("two-phase prefix sum equals the single-task global window, at any partitioning") {
+    import graft.GraftSpark.withPartitions
     import graft.ops.PrefixSum
     import org.apache.spark.sql.expressions.Window
-    val df = Tables.documents(spark, sf)
+    def values(s: org.apache.spark.sql.SparkSession) = Tables.documents(s, sf)
       .select(col("doc_id"), length(col("text")).cast("long").as("v"))
-    val naive = df.withColumn("offset",
+    val naive = values(spark).withColumn("offset",
         coalesce(sum(col("v")).over(
           Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
       .select("doc_id", "offset")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (p <- Seq(1, 3, 32)) {
-      val scalable = PrefixSum.exclusive(df, "doc_id", "v", p)
-        .select("doc_id", "offset")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val scalable = withPartitions(p)(s =>
+        PrefixSum.exclusive(values(s), "doc_id", "v")
+          .select("doc_id", "offset")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(scalable == naive, s"prefix sum diverges at $p partitions")
     }
     // negative values: partition totals must be true sums, not running
     // maxima (a ledger-style workload would silently corrupt otherwise)
-    import spark.implicits._
     val ledger = (1L to 100L).map(i => (i, if (i % 3 == 0) -2L * i else i))
-      .toDF("id", "v")
-    val expect = ledger.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1).scanLeft((0L, 0L)) { case ((_, acc), (id, v)) => (id, acc + v) }
+    val expect = ledger.sortBy(_._1)
+      .scanLeft((0L, 0L)) { case ((_, acc), (id, v)) => (id, acc + v) }
       .init.map(_._2) // exclusive: offset of row i = sum of rows < i ... shifted
-    val gotNeg = PrefixSum.exclusive(ledger, "id", "v", 7)
-      .orderBy("id").select("offset").as[Long].collect()
+    val gotNeg = withPartitions(7)(s =>
+      PrefixSum.exclusive(s.createDataFrame(ledger).toDF("id", "v"), "id", "v")
+        .orderBy("id").select("offset").as[Long].collect())
     assert(gotNeg.toSeq == expect.toSeq, "negative-value prefix sums wrong")
     // contract violations fail loudly instead of corrupting offsets:
     // a duplicate order key (RANGE frame would sum all peers) ...
-    val dup = (Seq((1L, 1L), (2L, 2L), (2L, 3L), (4L, 4L))).toDF("id", "v")
+    val dup = Seq((1L, 1L), (2L, 2L), (2L, 3L), (4L, 4L))
     val eDup = intercept[IllegalArgumentException] {
-      PrefixSum.exclusive(dup, "id", "v", 3).collect()
+      withPartitions(3)(s =>
+        PrefixSum.exclusive(s.createDataFrame(dup).toDF("id", "v"), "id", "v")
+          .collect())
     }
     assert(eDup.getMessage.contains("unique"), eDup.getMessage)
     // ... and a null value (would poison every later offset)
     val nul = Seq((1L, Some(1L)), (2L, None), (3L, Some(3L)))
-      .toDF("id", "v")
     val eNul = intercept[IllegalArgumentException] {
-      PrefixSum.exclusive(nul, "id", "v", 3).collect()
+      withPartitions(3)(s =>
+        PrefixSum.exclusive(s.createDataFrame(nul).toDF("id", "v"), "id", "v")
+          .collect())
     }
     assert(eNul.getMessage.contains("non-null"), eNul.getMessage)
   }
@@ -1279,10 +1283,10 @@ class OpsSpec extends AnyFunSuite {
     val nTok = (1L to 60L).map(i => i -> (i % 50 + 10)).toMap
     val docs = (1L to 60L)
       .map(i => (i, (1L to nTok(i)).map(j => s"w${i}_$j").mkString(" ")))
-      .toDF("doc_id", "text")
     val budget = 128L
-    val got = TextStats.tokenShardsOf(docs, 4, budget)
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toList
+    val got = GraftSpark.withPartitions(4)(s =>
+      TextStats.tokenShardsOf(s.createDataFrame(docs).toDF("doc_id", "text"), budget)
+        .as[(Long, Long, Long, Long)].collect()).sortBy(_._1).toList
     // brute force: md5-hex order (Spark's md5() is the same lowercase
     // hex, so lexicographic order agrees), running offset, floor-div
     var off = 0L
@@ -2965,8 +2969,9 @@ class OpsSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, 1L), (2L, 1L), (3L, 1L),
       (4L, 2L), (5L, 3L), (6L, 2L))
-      .toDF("doc_id", "n_chars")
-    val got = graft.ops.Sampling.curriculumOrderOf(docs, 2).collect()
+    val got = GraftSpark.withPartitions(2)(s => graft.ops.Sampling
+        .curriculumOrderOf(s.createDataFrame(docs).toDF("doc_id", "n_chars"))
+        .collect())
       .sortBy(_.getAs[Long]("schedule_key"))
     assert(got.length == 6)
     // keys are unique and key mod stride recovers the bucket
@@ -3320,9 +3325,9 @@ class OpsSpec extends AnyFunSuite {
     // words per doc: 3 and 5-token docs (buckets 2 and 3) at budget 8
     val docs = (1L to 8L).map(i =>
       (i, if (i <= 4) "a b c" else "a b c d e"))
-      .toDF("doc_id", "text")
-    val got = graft.ops.Sampling.packedBatchesOf(docs, 2, budget = 8L)
-      .collect()
+    val got = GraftSpark.withPartitions(2)(s => graft.ops.Sampling
+      .packedBatchesOf(s.createDataFrame(docs).toDF("doc_id", "text"), budget = 8L)
+      .collect())
     assert(got.length == 8)
     assert(got.map(_.getAs[Long]("doc_id")).distinct.length == 8)
     val byBatch = got.groupBy(r =>
@@ -4436,8 +4441,10 @@ class OpsSpec extends AnyFunSuite {
       // s3: cum == budget keeps (boundary is inclusive)
       (20L, "s3", 4L, "a a a a"), // prio 1_000_000, cum 4 = budget 4
       (21L, "s3", 4L, "x x x x")  // prio 0, cum 8 > 4
-    ).toDF("doc_id", "source", "n_chars", "text")
-    val got = graft.ops.Curation.tokenBudgetOf(docs, 4).collect()
+    )
+    val got = GraftSpark.withPartitions(4)(s => graft.ops.Curation
+      .tokenBudgetOf(s.createDataFrame(docs).toDF("doc_id", "source", "n_chars", "text"))
+      .collect())
     assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq ==
       Seq(("s1", 1L), ("s2", 10L), ("s3", 20L)))
     val s1 = got(0)
@@ -4462,9 +4469,10 @@ class OpsSpec extends AnyFunSuite {
       (train(0), "x alpha beta gamma delta y z"),
       // two disjoint matches stay two spans, 6 tokens of 7
       (train(1), "alpha beta gamma q alpha beta gamma"),
-      (train(2), "u v w")).toDF("doc_id", "text")
-    val got = graft.ops.TextStats.spanScrubOf(docs, 4)
-      .collect().map(r => r.getLong(0) ->
+      (train(2), "u v w"))
+    val got = GraftSpark.withPartitions(4)(s => graft.ops.TextStats
+        .spanScrubOf(s.createDataFrame(docs).toDF("doc_id", "text")).collect())
+      .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got.size == 3, "train grain only; zero-contamination rows kept")
     assert(got(train(0)) == ((7L, 1L, 4L, 571L)),

@@ -416,7 +416,7 @@ class PlanSpec extends AnyFunSuite {
   test("pre-explode spread is gated: a cluster-wide input plans NO round-robin exchange, a narrow one does") {
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf)
-    val target = spark.sparkContext.defaultParallelism
+    val target = graft.ops.Materialize.partitions(spark)
     // warehouse shape: the scan already carries ≥ cluster parallelism —
     // a full-corpus round-robin shuffle before the explode is pure cost
     // (the hash repartition below is the fixture's own exchange; the
@@ -433,6 +433,45 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(narrow.contains("RoundRobinPartitioning"),
       s"narrow input lost its pre-explode spread:\n${narrow.take(1200)}")
+  }
+
+  test("explicit layouts follow the session's partition count: dd2 spread, kNN probe, PrefixSum range") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def layouts(s: SparkSession): (String, String, String) = {
+      val spread = graft.ops.Dedup
+        .hashedShingleTable(Tables.documents(s, sf).coalesce(1), "doc_id", "text")
+        .queryExecution.executedPlan.toString
+      val probe = graft.ops.Similarity.knnGraphOf(Tables.embeddings(s, sf))
+        .queryExecution.executedPlan.toString
+      // PrefixSum's range exchange runs inside its seam: read it from
+      // the executed plans of the session's actions
+      val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          ran.add(qe.executedPlan.toString)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      s.listenerManager.register(listener)
+      try {
+        graft.ops.PrefixSum.exclusive(
+          s.range(1000).withColumn("v", org.apache.spark.sql.functions.lit(1L)),
+          "id", "v").collect()
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(s)
+      } finally s.listenerManager.unregister(listener)
+      (spread, probe, ran.toArray.mkString("\n"))
+    }
+    def check(s: SparkSession, n: Int): Unit = {
+      val (spread, probe, prefix) = layouts(s)
+      assert(spread.contains(s"RoundRobinPartitioning($n)"), spread.take(1500))
+      assert(s"hashpartitioning\\(bucket#\\d+, $n\\), REPARTITION_BY_NUM".r
+        .findFirstIn(probe).nonEmpty, probe.take(2500))
+      assert(s"rangepartitioning\\(id#\\d+L ASC NULLS FIRST, $n\\), REPARTITION_BY_NUM".r
+        .findFirstIn(prefix).nonEmpty, prefix.take(2500))
+    }
+    check(spark, 4)
+    GraftSpark.withPartitions(7)(check(_, 7))
   }
 
   test("s3 parses JSON exactly once, in a projection above the sort") {

@@ -7,13 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * dbt-style model views. */
 class SqlSurfaceSpec extends AnyFunSuite {
 
-  // the suite JVM shares one session; use the runtime registration path
-  // (the builder-time GraftExtensions install is equivalent)
-  lazy val spark: SparkSession = {
-    val s = GraftSpark.spark
-    GraftExtensions.register(s)
-    s
-  }
+  // the shared suite session: Harness.builder installed GraftExtensions
+  lazy val spark: SparkSession = GraftSpark.spark
 
   test("dot_product and sorted_intersect_size callable from SQL") {
     val r = spark.sql(
@@ -122,18 +117,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))) == Seq((9L, 2L), (9L, 3L)))
     assert(top(1).getSeq[org.apache.spark.sql.Row](1)
       .map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 4L)))
-  }
-
-  test("optimizer rule rewrites self-intersection to size()") {
-    // non-foldable input so ConstantFolding can't pre-empt the rule
-    val df = spark.sql(
-      """SELECT sorted_intersect_size(a, a) AS n
-        |FROM (SELECT array(id, id + 1) AS a FROM range(5))""".stripMargin)
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.toLowerCase.contains("sortedintersectsize"),
-      s"self-intersection not rewritten:\n$optimized")
-    assert(optimized.contains("size("), optimized)
-    assert(df.collect().map(_.getInt(0)).toSeq == Seq.fill(5)(2))
   }
 
   test("model views answer SQL like the reference's dbt models") {

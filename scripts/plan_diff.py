@@ -5,7 +5,8 @@
 
 Pairs the files of the two directories by name, masks the identities a
 JVM assigns per run (exchange ``plan_id`` counters, lambda class names,
-RDD ids), and prints a unified diff for each pair that still differs.
+RDD ids) and the source line of an RDD's call site, and prints a
+unified diff for each pair that still differs.
 Three things a JVM-wide counter or an unordered collection decides are
 made canonical per file first:
 
@@ -35,6 +36,9 @@ MASKS = [
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=#]"),
     (re.compile(r"\$\$Lambda[$/\w]*(@[0-9a-f]+)?"), "$$Lambda#"),
     (re.compile(r"RDD\[\d+\]"), "RDD[#]"),
+    # an RDD's call-site label (``at localCheckpoint at
+    # Materialize.scala:100``) moves with any edit above that line
+    (re.compile(r"( at \w+ at [\w$]+\.scala):\d+"), r"\1:#"),
 ]
 
 
@@ -61,41 +65,43 @@ def split_top(text):
 
 
 def distinct_groups(projections, out):
-    """The distinct-aggregate rewrite's Expand (last output ``gid``)
+    """The distinct-aggregate rewrite's Expand (an output ``gid``)
     numbers its groups, and orders their columns, by a hash map's
     iteration order. Returns the column permutation (new position ->
     old) and the gid renumbering that order the groups by content
-    instead, and the positions of the groups' own columns; None for
-    any other Expand."""
-    if not GID.match(out[-1]) or any(len(p) != len(out) for p in projections):
+    instead, the positions of the groups' own columns (those before
+    ``gid``; a regular aggregate's columns follow it) and the position
+    of ``gid``; None for any other Expand."""
+    g = next((j for j, o in enumerate(out) if GID.match(o)), None)
+    if g is None or any(len(p) != len(out) for p in projections):
         return None
-    slots = [j for j in range(len(out) - 1)
+    slots = [j for j in range(g)
              if any(p[j] == "null" for p in projections)]
     owner = {}
-    for g, p in enumerate(projections):
-        if not p[-1].isdigit():
+    for k, p in enumerate(projections):
+        if not p[g].isdigit():
             return None
         for j in slots:
             if p[j] != "null":
                 if j in owner:
                     return None
-                owner[j] = g
+                owner[j] = k
 
-    def content(g):
-        own = [projections[g][j] for j in slots if owner.get(j) == g]
+    def content(k):
+        own = [projections[k][j] for j in slots if owner.get(j) == k]
         return EXPR_ID.sub("#", ", ".join(own))
 
     ranked = sorted(range(len(projections)), key=content)
-    rank = {g: r for r, g in enumerate(ranked)}
-    gids = sorted((p[-1] for p in projections), key=int)
-    renumber = {p[-1]: gids[rank[g]] for g, p in enumerate(projections)}
+    rank = {k: r for r, k in enumerate(ranked)}
+    gids = sorted((p[g] for p in projections), key=int)
+    renumber = {p[g]: gids[rank[k]] for k, p in enumerate(projections)}
     perm = list(range(len(out)))
     for j, src in zip(slots, sorted(slots, key=lambda j: (rank.get(owner.get(j), -1), j))):
         perm[j] = src
-    return perm, renumber, slots
+    return perm, renumber, slots, g
 
 
-def reorder(line, out, slots, renumber):
+def reorder(line, out, slots, renumber, gid):
     """Apply a distinct_groups result to a line after its Expand: runs
     of the groups' columns take the new order, gid tests the new gids."""
     if slots:
@@ -105,8 +111,8 @@ def reorder(line, out, slots, renumber):
         line = re.sub(r"%s(?:, %s)+" % (one, one),
                       lambda m: ", ".join(sorted(re.findall(one, m.group(0)),
                                                  key=pos.get)), line)
-    return re.sub(re.escape(out[-1]) + r" = (\d+)\b",
-                  lambda m: "%s = %s" % (out[-1], renumber.get(m.group(1), m.group(1))),
+    return re.sub(re.escape(gid) + r" = (\d+)\b",
+                  lambda m: "%s = %s" % (gid, renumber.get(m.group(1), m.group(1))),
                   line)
 
 
@@ -130,11 +136,12 @@ def canonical_expands(text):
         out = split_top(parts[1][1:-1])
         groups = distinct_groups(projections, out)
         if groups:
-            perm, renumber, slots = groups
-            projections = [[p[src] for src in perm[:-1]] + [renumber[p[-1]]]
+            perm, renumber, slots, g = groups
+            projections = [[renumber[p[g]] if j == g else p[src]
+                            for j, src in enumerate(perm)]
                            for p in projections]
             out = [out[src] for src in perm]
-            lines[k + 1:] = [reorder(l, out, slots, renumber)
+            lines[k + 1:] = [reorder(l, out, slots, renumber, out[g])
                              for l in lines[k + 1:]]
         listed = sorted("[" + ", ".join(p) + "]" for p in projections)
         lines[k] = (ARGUMENTS + "[" + ", ".join(listed) + "], [" +

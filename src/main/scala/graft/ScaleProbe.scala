@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *     copy's salt re-rolls the boundary mass (measured 185k–922k
   *     pairs per copy at sf0.1, a 5× per-salt spread).
   *   - sim3 (IVF): sample-capped training + linear assignment + probe
-  *     of nprobe/ncells of the corpus — expect ~linear.
+  *     of nprobe/IvfCells of the corpus — expect ~linear.
   *   - sim4 (kNN graph): the plane count SELF-SIZES as
   *     Planes ∝ log₂(corpus) (Similarity.planesFor), holding expected
   *     per-bucket population ~constant — the r5 curve's ~N² bend at a
@@ -126,8 +126,7 @@ object ScaleProbe {
       // inverted index's Σ df² candidate volume grows linearly in n —
       // the curve that evidences the all-pairs → inverted-index rewrite
       Case("jaccard", on(docs)(d => Dedup.ngramJaccardPairsOf(d).count())),
-      Case("ivf", on(emb)(e =>
-        Similarity.ivfTopKOf(e, trainCap = Similarity.IvfTrainCap).count())),
+      Case("ivf", on(emb)(e => Similarity.ivfTopKOf(e).count())),
       Case("knn", on(emb)(e => Similarity.knnGraphOf(e).count())),
       // dd5: banded sign-LSH near-dup pairs; the derived geometry
       // (bands × per-band planes) self-sizes from the corpus count —

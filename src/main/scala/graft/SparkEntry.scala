@@ -130,8 +130,7 @@ object SparkEntry {
     "dd15_minhash_estimate" -> (Dedup.minhashEstimate _),
     "sim1_brute_topk" -> (Similarity.bruteTopK _),
     "sim2_lsh_topk" -> (Similarity.lshTopK _),
-    "sim3_ivf_topk" -> ((s, d) =>
-      Similarity.ivfTopK(s, d, trainCap = Similarity.IvfTrainCap)),
+    "sim3_ivf_topk" -> ((s, d) => Similarity.ivfTopK(s, d)),
     "sim4_knn_graph" -> ((s, d) => Similarity.knnGraph(s, d)),
     "sim5_label_centroids" -> (Similarity.labelCentroids _),
     "g1_knn_pagerank" -> ((s, d) => Similarity.knnPagerank(s, d)),
@@ -808,7 +807,7 @@ object SparkEntry {
     "dd15_minhash_estimate" -> Dedup.minhashEstimateOracle,
     "sim1_brute_topk" -> Similarity.bruteTopKOracle,
     "sim2_lsh_topk" -> Similarity.lshTopKOracle,
-    "sim3_ivf_topk" -> Similarity.ivfOracle(Similarity.IvfTrainCap),
+    "sim3_ivf_topk" -> Similarity.ivfOracle,
     "sim4_knn_graph" -> Similarity.knnGraphOracle(),
     "sim5_label_centroids" -> Similarity.labelCentroidsOracle,
     "g1_knn_pagerank" -> Similarity.knnPagerankOracle(),

@@ -1622,8 +1622,7 @@ object Dedup {
       .join(n.toDF("vec_a", "av", "anorm"), "vec_a")
       .join(n.toDF("vec_b", "bv", "bnorm"), "vec_b")
       .withColumn("cos",
-        Similarity.dot(col("av"), col("bv")) /
-          (sqrt(col("anorm")) * sqrt(col("bnorm"))))
+        Similarity.cosine(col("av"), col("anorm"), col("bv"), col("bnorm")))
       .filter(col("cos") >= 0.4)
       .select("vec_a", "vec_b", "cos")
   }

@@ -472,11 +472,8 @@ object Sampling {
   /** smp6 — TEMPERATURE-scaled multilingual mixing (the α=1/2 sampling
     * the multilingual-LLM literature uses to damp head languages:
     * p_lang ∝ n_lang^α instead of ∝ n_lang), with EXACT integer quota
-    * allocation by largest remainder: weight w = ⌊√n⌋ per lang, target
-    * T = ⌊corpus/2⌋ docs, base quota ⌊T·w/W⌋ and the R = T − Σbase
-    * leftover seats going to the largest remainders (T·w mod W, ties
-    * to the earlier lang) — Σ quotas ≡ T by construction, no float
-    * shares, bit-identical cross-engine. Selection within a lang is
+    * allocation by largest remainder ([[TextStats.sqrtQuotas]], target
+    * T = ⌊corpus/2⌋ docs). Selection within a lang is
     * the deterministic md5 order (seed 11) — the epochShuffle
     * convention — so the sample is reproducible row-for-row. Output:
     * every sampled doc with its lang, hash rank, and the lang's quota.
@@ -494,22 +491,7 @@ object Sampling {
     val counts = graft.ops.Materialize(
       docs.groupBy("lang").agg(count(lit(1)).as("n")),
       "smp6_counts")
-    // quota table: all integer arithmetic over the ≤ langs-row frame
-    val weighted = counts
-      .withColumn("w", floor(sqrt(col("n"))).cast("long"))
-    val tot = weighted.agg(
-      sum(col("n")).as("corpus"), sum(col("w")).as("bigw"))
-    val quota = weighted.crossJoin(broadcast(tot))
-      .withColumn("t_target", expr("corpus div 2"))
-      .withColumn("base", expr("t_target * w div bigw"))
-      .withColumn("rem", expr("(t_target * w) % bigw"))
-      .withColumn("rrank",
-        row_number().over(Window.orderBy(col("rem").desc, col("lang"))))
-      .withColumn("leftover",
-        expr("t_target - sum(base) OVER ()"))
-      .withColumn("quota",
-        col("base") + when(col("rrank") <= col("leftover"), 1L).otherwise(0L))
-      .select("lang", "n", "w", "quota")
+    val quota = TextStats.sqrtQuotas(counts)
     val ranked = docs
       .withColumn("h", md5Hash60(col("doc_id").cast("string"), 11))
       .withColumn("rnk", row_number().over(

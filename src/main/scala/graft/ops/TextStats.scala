@@ -598,22 +598,45 @@ object TextStats {
   /** Target size for [[temperatureMix]] as a percent of the corpus. */
   val TempTargetPct = 50
 
+  /** Temperature (α = 1/2) quotas over a small (lang, n) count table,
+    * shared by tx19 and smp6: weight w = ⌊√n⌋ per lang, target
+    * T = ⌊Σn·[[TempTargetPct]]/100⌋, base quota ⌊T·w/W⌋ and the
+    * R = T − Σbase leftover seats going to the largest remainders
+    * (T·w mod W, ties to the earlier lang) — Σ quotas ≡ T by
+    * construction, no float shares, bit-identical cross-engine
+    * (floor(sqrt(n)) is exact: IEEE sqrt is correctly rounded). Both
+    * whole-frame windows run over the ≤ langs-row frame. Output
+    * (lang, n, w, quota). */
+  def sqrtQuotas(counts: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val weighted = counts
+      .withColumn("w", floor(sqrt(col("n"))).cast("long"))
+    val tot = weighted.agg(
+      sum(col("n")).as("corpus"), sum(col("w")).as("bigw"))
+    weighted.crossJoin(broadcast(tot))
+      .withColumn("t_target", expr(s"corpus * $TempTargetPct div 100"))
+      .withColumn("base", expr("t_target * w div bigw"))
+      .withColumn("rem", expr("(t_target * w) % bigw"))
+      .withColumn("rrank",
+        row_number().over(Window.orderBy(col("rem").desc, col("lang"))))
+      .withColumn("leftover",
+        expr("t_target - sum(base) OVER ()"))
+      .withColumn("quota",
+        col("base") + when(col("rrank") <= col("leftover"), 1L).otherwise(0L))
+      .select("lang", "n", "w", "quota")
+  }
+
   /** tx19 — temperature-flattened source mixing (the multilingual
     * α-sampling trick — mBERT/XLM-R style — at α = 1/2): allocate a
     * target row budget across sources proportional to √n_s instead of
     * n_s, so head sources shrink and tail sources repeat. Per source:
-    * docs, integer weight isqrt(n_s), exact largest-remainder quota
-    * (base = ⌊T·w/Σw⌋; the T − Σbase leftovers go to the largest
-    * remainders, ties by source name), capped selection, and the
-    * repeat factor ·100 (quota·100 div n — >100 means the source runs
-    * more than one epoch). Complements tx14, which enforces EXPLICIT
-    * target weights; temperature mixing DERIVES them from corpus
-    * counts.
-    *
-    * Determinism: isqrt via floor(sqrt(n)) is exact in both engines —
-    * IEEE-754 sqrt is correctly rounded, and the floor can only
-    * misround beyond n ≈ 2^104 — and everything after is integer
-    * arithmetic, so every quota boundary agrees cross-engine.
+    * docs, integer weight isqrt(n_s), the exact largest-remainder quota
+    * of [[sqrtQuotas]] (integer arithmetic throughout, so
+    * every quota boundary agrees cross-engine), capped selection, and
+    * the repeat factor ·100 (quota·100 div n — >100 means the source
+    * runs more than one epoch). Complements tx14, which enforces
+    * EXPLICIT target weights; temperature mixing DERIVES them from
+    * corpus counts.
     *
     * Scale posture: all computation is over the per-source stats table
     * (O(sources) rows — stats-sized, not corpus-sized); the only
@@ -624,27 +647,12 @@ object TextStats {
   def temperatureMix(s: SparkSession, d: String): DataFrame =
     temperatureMixOf(Tables.documents(s, d))
 
-  def temperatureMixOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = docs.groupBy("lang").agg(count(lit(1)).as("n"))
-      .withColumn("wt", floor(sqrt(col("n"))).cast("long"))
-    val tot = c.agg(sum("n").as("total"), sum("wt").as("sw"))
-    val q = c.join(broadcast(tot))
-      .withColumn("target", expr(s"total * $TempTargetPct div 100"))
-      .withColumn("base", expr("target * wt div sw"))
-      .withColumn("rem", expr("(target * wt) % sw"))
-    val sb = q.agg(sum("base").as("sb"))
-    q.join(broadcast(sb))
-      .withColumn("rr",
-        row_number().over(Window.orderBy(col("rem").desc, col("lang"))))
-      .withColumn("quota",
-        col("base") +
-          when(col("rr") <= col("target") - col("sb"), 1L).otherwise(0L))
-      .select(col("lang"), col("n").as("n_docs"), col("wt").as("weight"),
+  def temperatureMixOf(docs: DataFrame): DataFrame =
+    sqrtQuotas(docs.groupBy("lang").agg(count(lit(1)).as("n")))
+      .select(col("lang"), col("n").as("n_docs"), col("w").as("weight"),
         col("quota"), least(col("quota"), col("n")).as("n_selected"),
         expr("quota * 100 div n").as("epochs_e2"))
       .orderBy("lang")
-  }
 
   val temperatureMixOracle: String =
     s"""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),

@@ -481,16 +481,16 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.5, s"IVF recall $recall vs brute top-${brute.size}")
   }
 
-  test("IVF tuning dial: nprobe = ncells probes every cell and equals exact brute force") {
-    // the recall/cost parameters are real dials, not constants: probing
-    // all cells makes the candidate set the whole corpus, so the result
-    // must equal the exact scan; fewer probes can only shrink it
+  test("IVF tuning dial: nprobe = IvfCells probes every cell and equals exact brute force") {
+    // the probe count is a real dial, not a constant: probing all cells
+    // makes the candidate set the whole corpus, so the result must
+    // equal the exact scan; fewer probes can only shrink it
     val brute = Similarity.bruteTopK(spark, sf)
       .select("vec_id").as[Long].collect().toSet
-    val all = Similarity.ivfTopK(spark, sf, ncells = 5, nprobe = 5)
+    val all = Similarity.ivfTopK(spark, sf, nprobe = Similarity.IvfCells)
       .select("vec_id").as[Long].collect().toSet
     assert(all == brute, s"full-probe IVF must be exact: $all vs $brute")
-    val one = Similarity.ivfTopK(spark, sf, ncells = 5, nprobe = 1)
+    val one = Similarity.ivfTopK(spark, sf, nprobe = 1)
       .select("vec_id", "cell").collect()
     assert(one.map(_.getInt(1)).distinct.length == 1,
       "nprobe=1 must scan exactly one cell")
@@ -1070,12 +1070,13 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("IVF sample training past the exact-in-double envelope: dominant cell > 60k vectors, sums stay bounded") {
-    // full-corpus IVF training keeps centroid sums exact-in-double only
-    // up to ~60k vectors/cell; a clustered corpus puts ~70k vectors in
-    // ONE cell — the regime where sampled training is mandatory. The
-    // deterministic-stride sample bounds every component sum at 256·cap
-    // regardless of corpus size, while the full corpus still assigns
-    // against the sampled centroids with the same exact expression.
+    // training on the full corpus would keep centroid sums
+    // exact-in-double only up to ~60k vectors/cell; a clustered corpus
+    // puts ~70k vectors in ONE cell — the regime where sampled training
+    // is mandatory. The deterministic-stride sample bounds every
+    // component sum at 256·cap regardless of corpus size, while the
+    // full corpus still assigns against the sampled centroids with the
+    // same exact expression.
     val n = 700000L
     // 700k quantized vectors over ≤ IvfCells(10) cells → ≥ 70k
     // vectors/cell, past the ~60k full-training exactness bound
@@ -1085,9 +1086,9 @@ class OpsSpec extends AnyFunSuite {
           .as("qv"))
       .withColumn("qvd", col("qv").cast("array<double>"))
       .withColumn("a2", graft.expressions.DotProduct.dot(col("qvd"), col("qvd")))
-    val cap = 8192L
-    val c1 = Similarity.trainedCentroidsSampled(qt, "vec_id", cap)
-    val c2 = Similarity.trainedCentroidsSampled(qt, "vec_id", cap)
+    val cap = Similarity.IvfTrainCap
+    val c1 = Similarity.trainedCentroidsSampled(qt)
+    val c2 = Similarity.trainedCentroidsSampled(qt)
     assert(c1.map(c => (c.cid, c.n, c.s.toSeq)) ==
       c2.map(c => (c.cid, c.n, c.s.toSeq)), "sampled training must be deterministic")
     assert(c1.map(_.n).sum <= cap, "training must touch only the sample")
@@ -1706,6 +1707,30 @@ class OpsSpec extends AnyFunSuite {
     got.zip(expect).foreach { case ((_, _, _, _, _, adc), (_, d2)) =>
       assert(adc == d2.toDouble, s"adc $adc != $d2")
     }
+  }
+
+  test("sim8 PQ trains every subspace at once: one seed collect plus one per Lloyd round") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.graft.Bridge
+    val emb = Tables.embeddings(spark, sf)
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran.add(f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    Bridge.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      Similarity.pqTopKOf(emb) // built, not run: training is eager
+      Bridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    // a per-subspace trainer runs PqSub × (1 + PqIters) collects and
+    // checkpoints every subspace apart; here the quantized vectors and
+    // their row-per-subspace split are the only seams
+    val actions = ran.toArray.toSeq
+    assert(actions.count(_ == "collect") == 1 + Similarity.PqIters, actions)
+    assert(actions.count(_ == "localCheckpoint") == 2, actions)
   }
 
   test("tx30 merge application is greedy-leftmost: overlapping runs alternate, isolated matches all merge") {
